@@ -1173,8 +1173,14 @@ def mmr_rerank(cands: DataFrame, psim: DataFrame, k: int,
     # None sims are skipped, matching the old unrolled plan's F.max
     # (which ignores NULLs) — a NULL sim (zero-norm vector) can then
     # never crash the fold or win a max.
-    for r in psim.select("id_a", "id_b", "sim") \
-            .limit(MMR_MAX_CANDS * MMR_MAX_CANDS).collect():
+    max_pairs = MMR_MAX_CANDS * MMR_MAX_CANDS
+    prows = psim.select("id_a", "id_b", "sim").limit(max_pairs + 1).collect()
+    if len(prows) > max_pairs:
+        raise ValueError(
+            f"mmr_rerank psim exceeds MMR_MAX_CANDS**2 ({max_pairs}) "
+            f"pairs: the pair table is candidate-bounded by contract — "
+            f"pass the similarities among the reranked candidates only")
+    for r in prows:
         if r["sim"] is not None:
             sims.setdefault(r["id_a"], {})[r["id_b"]] = r["sim"]
     sel: list = []  # [(id, rel, maxred_at_selection | None)]

@@ -50,34 +50,33 @@ driver holds only the action log and per-file stat rows (one per file).
 
 from __future__ import annotations
 
+import itertools
 import json
-import os
 import time
 import uuid
 from collections import Counter
 from collections.abc import Sequence
-from datetime import date, datetime
-from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from . import txproto
 from .genexpr import parse_generation_expr
-from .txproto import (BASE_PROTOCOL, COLMAP_PROTOCOL, PARTITION_PROTOCOL,
-                      SUPPORTED_READER,
-                      SUPPORTED_WRITER, TxCorruption, TxProtocolError,
+from .txproto import (BASE_PROTOCOL, CHECKPOINT_INTERVAL, COLMAP_PROTOCOL,
+                      LOG_DIR, PARTITION_PROTOCOL, SUPPORTED_READER,
+                      SUPPORTED_WRITER, HadoopLogIO, LocalLogIO, LogState,
+                      TxCorruption, TxProtocolError,
                       WRITE_FEATURES_PROTOCOL,
                       canon_temporal as _canon,
-                      check_protocol, commit_payload,
-                      info_action as _info_action,
+                      check_protocol, checkpoint_name, commit_name,
+                      commit_payload, dv_minus, info_action as _info_action,
+                      latest_version, log_listing,
                       merged_protocol, needs_upgrade,
                       parse_partition_values as _parse_partition_values,
-                      parse_commit_lines, protocol_action, repair_payload,
-                      unquote_path as _unq)
-
-_LOG_DIR = "_txlog"
-_CKPT_SUFFIX = ".checkpoint.json"
+                      protocol_action, read_checkpoint, read_commit,
+                      repair_payload, replay, stat_scalar,
+                      unquote_path as _unq, walk_changes)
 
 
 def _bloom_spec(schema: StructType, cols: Sequence[str], m: int,
@@ -189,54 +188,12 @@ def _colmap_inverse(meta: dict) -> dict | None:
     return {p: l for l, p in cm.items()}
 
 
-def _merge_dv(cur: dict | None, new: dict) -> dict:
-    """Union two deletion-vector key sets for one file (same keyCols —
-    enforced at commit; a second delete of an already-tombstoned key is
-    deduplicated so CDC never double-emits it)."""
-    if cur is None:
-        return {"keyCols": list(new["keyCols"]),
-                "keys": [list(k) for k in new["keys"]]}
-    if list(cur["keyCols"]) != list(new["keyCols"]):
-        raise ValueError(
-            f"deletion vectors on one file must share key columns "
-            f"({cur['keyCols']} vs {new['keyCols']})")
-    seen = {tuple(k) for k in cur["keys"]}
-    merged = [list(k) for k in cur["keys"]]
-    merged += [list(k) for k in new["keys"] if tuple(k) not in seen]
-    return {"keyCols": list(cur["keyCols"]), "keys": merged}
-
-
-def _dv_minus(cur: dict | None, sub: dict | None) -> list[list]:
-    """Key tuples in ``cur`` not in ``sub`` (both optional DV dicts)."""
-    if cur is None:
-        return []
-    drop = {tuple(k) for k in (sub or {"keys": []})["keys"]}
-    return [list(k) for k in cur["keys"] if tuple(k) not in drop]
-
-
 def _jpath(spark: SparkSession, p: str):
     return spark._jvm.org.apache.hadoop.fs.Path(p)
 
 
 def _fs(spark: SparkSession, p: str):
     return _jpath(spark, p).getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _json_scalar(v):
-    """JSON-encode a stat value losslessly enough to round-trip compares.
-
-    Stats are *advisory bounds* — a lossy bound may only widen pruning
-    (keep a file), never skip a file that could match, so unknown types
-    degrade to ``None`` (= "no stats, always a candidate")."""
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    if isinstance(v, (datetime, date)):
-        return v.isoformat()
-    if isinstance(v, Decimal):
-        return str(v)
-    return None
-
-
 
 
 class TxTable:
@@ -247,47 +204,30 @@ class TxTable:
     complete version.
     """
 
-    #: Auto-write a snapshot checkpoint every N commits (0 disables).
-    #: 10 matches the public Delta default; at a commit-per-micro-batch
-    #: streaming cadence this bounds every snapshot fold to ≤10 commit
-    #: reads no matter how old the table gets.
-    CHECKPOINT_INTERVAL = 10
+    #: Auto-write a snapshot checkpoint every N commits (0 disables);
+    #: see ``txproto.CHECKPOINT_INTERVAL``.
+    CHECKPOINT_INTERVAL = CHECKPOINT_INTERVAL
 
     def __init__(self, spark: SparkSession, path: str):
+        self._bind(spark, path)
+        try:
+            latest_version(self._io)
+        except ValueError:
+            raise ValueError(f"{path} is not a txlog table (no {LOG_DIR}); "
+                             "use TxTable.create()") from None
+
+    def _bind(self, spark: SparkSession, path: str) -> None:
+        """Attach to ``path`` without checking for a log (create/convert/
+        clone bind before publishing commit 0). The log IO follows the
+        same predicate as every publish: plain ``os`` IO on local paths,
+        Hadoop FS only for ``scheme://`` paths."""
         self.spark = spark
         self.path = path.rstrip("/")
-        self.log_dir = f"{self.path}/{_LOG_DIR}"
-        if self._latest_version() is None:
-            raise ValueError(f"{path} is not a txlog table (no {_LOG_DIR}); "
-                             "use TxTable.create()")
+        self.log_dir = f"{self.path}/{LOG_DIR}"
+        self._io = (HadoopLogIO(spark, self.path) if "://" in self.path
+                    else LocalLogIO(self.path))
 
     # ---------------------------------------------------------------- log IO
-    def _latest_version(self) -> int | None:
-        fs = _fs(self.spark, self.log_dir)
-        ld = _jpath(self.spark, self.log_dir)
-        if not fs.exists(ld):
-            return None
-        best = None
-        for st in fs.listStatus(ld):
-            name = st.getPath().getName()
-            if name.endswith(".json") and name[:-5].isdigit():
-                v = int(name[:-5])
-                best = v if best is None or v > best else best
-        return best
-
-    def _read_commit(self, version: int) -> list[dict]:
-        fs = _fs(self.spark, self.log_dir)
-        p = _jpath(self.spark, f"{self.log_dir}/{version:020d}.json")
-        stream = fs.open(p)
-        try:
-            data = bytes(
-                self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    stream))
-        finally:
-            stream.close()
-        return parse_commit_lines(data.decode("utf-8").splitlines(),
-                                  f"{self.path}@v{version}")
-
     def repair_torn_commit(self, version: int) -> None:
         """Recover a TORN commit (claim-then-write crash on a non-atomic
         store) by rewriting it as an explicit empty commit.
@@ -306,193 +246,50 @@ class TxTable:
         cleanly; idempotent over an already-repaired file is a refusal
         too (a repaired commit IS clean).
         """
-        latest = self._latest_version()
-        if latest is None or version < 0 or version > latest:
+        latest = latest_version(self._io)
+        if version < 0 or version > latest:
             raise ValueError(f"version {version} out of range 0..{latest}")
         try:
-            self._read_commit(version)
+            read_commit(self._io, version)
         except TxCorruption:
             pass  # genuinely torn: repair below
         else:
             raise ValueError(
                 f"{self.path}@v{version} parses cleanly — refusing to "
                 "repair an intact commit")
-        payload = repair_payload()
-        target_name = f"{self.log_dir}/{version:020d}.json"
-        if "://" not in self.log_dir:
-            tmp = f"{self.log_dir}/{uuid.uuid4().hex}.json.tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(payload)
-            os.replace(tmp, target_name)  # atomic swap over the torn file
-            return
-        fs = _fs(self.spark, self.log_dir)
-        out = fs.create(_jpath(self.spark, target_name), True)  # overwrite
-        try:
-            # a crash mid-repair leaves the file torn again — the retry
-            # is idempotent (is_torn still true, same payload rewritten)
-            out.write(bytearray(payload.encode("utf-8")))
-        finally:
-            out.close()
+        # a crash mid-repair on a non-atomic store leaves the file torn
+        # again — the retry is idempotent (same payload rewritten)
+        self._io.write(commit_name(version),
+                       repair_payload().encode("utf-8"), replace=True)
 
     def _checkpoint_versions(self) -> list[int]:
-        fs = _fs(self.spark, self.log_dir)
-        ld = _jpath(self.spark, self.log_dir)
-        out = []
-        for st in fs.listStatus(ld):
-            name = st.getPath().getName()
-            if name.endswith(_CKPT_SUFFIX):
-                stem = name[:-len(_CKPT_SUFFIX)]
-                if stem.isdigit():
-                    out.append(int(stem))
-        return sorted(out)
-
-    def _read_checkpoint(self, version: int):
-        """Load a checkpoint file → (meta, {relpath: add-action},
-        {appId: last txn version})."""
-        fs = _fs(self.spark, self.log_dir)
-        p = _jpath(self.spark,
-                   f"{self.log_dir}/{version:020d}{_CKPT_SUFFIX}")
-        stream = fs.open(p)
-        try:
-            data = bytes(
-                self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    stream))
-        finally:
-            stream.close()
-        meta: dict = {}
-        live: dict[str, dict] = {}
-        txns: dict[str, int] = {}
-        proto: dict | None = None
-        actions = [json.loads(line) for line in
-                   data.decode("utf-8").splitlines() if line.strip()]
-        # Trailer validation: a non-local (claim-then-write) publish that
-        # dies mid-flush can truncate at a newline boundary — the file
-        # still parses line-by-line but silently omits live files, so
-        # every fold built on it would drop rows with no error. The
-        # writer appends {"count": N} last; a checkpoint whose trailer is
-        # missing or wrong is TORN and the caller falls back to an older
-        # checkpoint or the full fold (same path as unparseable files).
-        if not actions or actions[-1].get("count") != len(actions) - 1:
-            raise ValueError(
-                f"checkpoint {version} of {self.path} is torn (missing or "
-                f"mismatched count trailer)")
-        for action in actions[:-1]:
-            if "meta" in action:
-                meta = action["meta"]
-            elif "add" in action:
-                live[action["add"]["path"]] = action["add"]
-            elif "txn" in action:
-                txns[action["txn"]["appId"]] = action["txn"]["version"]
-            elif "protocol" in action:
-                proto = action["protocol"]
-        return meta, live, txns, proto
-
-    def _fold_txns(self, version: int | None = None) -> dict[str, int]:
-        """Latest committed txn version per appId at ``version`` — the
-        public Delta ``txn`` action (idempotent streaming sink dedup).
-        Checkpoint-accelerated like ``_snapshot``; versions only move
-        forward (max-folded defensively)."""
-        latest = self._latest_version()
-        assert latest is not None
-        v = latest if version is None else version
-        txns: dict[str, int] = {}
-        start = 0
-        for c in reversed([c for c in self._checkpoint_versions()
-                           if c <= v]):
-            try:
-                _, _, txns, _ = self._read_checkpoint(c)
-            except Exception:
-                continue  # torn/unreadable checkpoint: skip to older
-            txns = dict(txns)
-            start = c + 1
-            break
-        for i in range(start, v + 1):
-            for action in self._read_commit(i):
-                if "txn" in action:
-                    a, ver = action["txn"]["appId"], action["txn"]["version"]
-                    txns[a] = max(ver, txns.get(a, ver))
-        return txns
+        return log_listing(self._io)[1]
 
     def last_txn(self, app_id: str) -> int | None:
         """The highest txn version committed for ``app_id`` (None if the
         app never wrote) — an idempotent writer skips any batch whose id
         is <= this."""
-        return self._fold_txns().get(app_id)
+        return self._fold().txns.get(app_id)
 
     def write_checkpoint(self, version: int | None = None) -> int:
         """Materialize the folded snapshot at ``version`` (default: latest)
         as ``%020d.checkpoint.json`` so later snapshots fold forward from
-        it instead of from commit 0. Idempotent: the content is a pure
-        function of the immutable commits ≤ version, so a VALID existing
-        checkpoint is simply kept; a legacy (pre-count-trailer) or torn
-        one is regenerated in place — the upgrade path for tables
-        checkpointed by an older writer. Returns the
-        checkpointed version. Commit files are NOT deleted — time travel
-        and change feeds keep reading them."""
-        v, meta, live = self._snapshot(version, raw=True)
-        proto = getattr(self, "_proto", None)  # folded by _snapshot(v)
-        # protocol FIRST (the Delta checkpoint convention): it must
-        # survive checkpoint-accelerated folds — a fold starting past
-        # commit 0 would otherwise silently bypass the version gate —
-        # and scanners that stop at the first meta line must have seen
-        # it already.
-        lines = ([json.dumps({"protocol": proto}, sort_keys=True)]
-                 if proto else [])
-        lines.append(json.dumps({"meta": meta}, sort_keys=True))
-        txns = self._fold_txns(v)
-        lines += [json.dumps({"txn": {"appId": a, "version": txns[a]}},
-                             sort_keys=True) for a in sorted(txns)]
-        lines += [json.dumps({"add": live[p]}, sort_keys=True)
-                  for p in sorted(live)]
-        # Count trailer: lets _read_checkpoint detect a newline-boundary
-        # truncation (possible on the non-local claim-then-write path,
-        # where the publish is not atomic) and treat it as torn.
-        lines.append(json.dumps({"count": len(lines)}))
-        payload = "\n".join(lines)
-        if "://" not in self.log_dir:  # tmp+link: never a torn checkpoint
-            target = f"{self.log_dir}/{v:020d}{_CKPT_SUFFIX}"
-            if os.path.exists(target):
-                try:
-                    self._read_checkpoint(v)
-                    return v
-                except Exception:
-                    # Legacy (pre-count-trailer) or torn checkpoint:
-                    # regenerate IN PLACE — content is a pure function of
-                    # the immutable commits <= v, so an atomic replace
-                    # with the trailer-carrying form upgrades it instead
-                    # of leaving every fold rejecting it forever.
-                    pass
-            tmp = f"{self.log_dir}/{uuid.uuid4().hex}.ckpt.tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(payload)
-            os.replace(tmp, target)  # atomic; equal-content races benign
-            return v
-        fs = _fs(self.spark, self.log_dir)
-        target = _jpath(self.spark, f"{self.log_dir}/{v:020d}{_CKPT_SUFFIX}")
-        if fs.exists(target):
-            try:
-                self._read_checkpoint(v)
-                return v
-            except Exception:
-                fs.delete(target, False)  # legacy/torn: regenerate below
-        try:
-            out = fs.create(target, False)
-        except Exception:
-            if fs.exists(target):  # lost a benign race to an equal writer
-                return v
-            raise
-        try:
-            out.write(bytearray(payload.encode("utf-8")))
-        finally:
-            out.close()
-        return v
+        it instead of from commit 0 (``txproto.write_checkpoint``: a
+        valid existing checkpoint is kept, a legacy or torn one is
+        regenerated in place). Returns the checkpointed version."""
+        return txproto.write_checkpoint(self._io, self._fold(version))
+
+    def _fold(self, version: int | None = None) -> txproto.Snapshot:
+        """The RAW log replay at ``version`` (``txproto.replay``),
+        recording the folded protocol and table properties that the
+        commit path gates on."""
+        snap = replay(self._io, version)
+        self._proto = snap.protocol
+        self._props = snap.meta.get("properties") or {}
+        return snap
 
     def _snapshot(self, version: int | None = None, raw: bool = False):
         """Fold the log: returns (version, meta, {relpath: add-action}).
-
-        Folds forward from the newest checkpoint at-or-before the target
-        version when one exists — O(CHECKPOINT_INTERVAL) commit reads per
-        call on a checkpointed table instead of O(version).
 
         Column-mapped tables (``meta["column_mapping"]``): the LOG keys
         every per-file artifact (stats, nullCounts, bloom, dv keyCols)
@@ -504,53 +301,7 @@ class TxTable:
         actions BACK to the log (checkpoint, restore, clone) or audit
         physical state (fsck): re-published actions must stay
         physical-keyed. Unmapped tables skip translation entirely."""
-        latest = self._latest_version()
-        if latest is None:
-            raise ValueError(f"{self.path} has no commits")
-        v = latest if version is None else version
-        if v > latest or v < 0:
-            raise ValueError(f"version {v} out of range 0..{latest}")
-        meta: dict = {}
-        live: dict[str, dict] = {}
-        proto: dict | None = None
-        start = 0
-        for c in reversed([c for c in self._checkpoint_versions()
-                           if c <= v]):
-            try:
-                meta, live, _, proto = self._read_checkpoint(c)
-            except Exception:
-                continue  # torn/unreadable checkpoint: older one or full fold
-            live = dict(live)
-            start = c + 1
-            break
-        for i in range(start, v + 1):
-            for action in self._read_commit(i):
-                if "meta" in action:
-                    meta = action["meta"]
-                elif "add" in action:
-                    live[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-                elif "dv" in action:
-                    # deletion vector: accumulate tombstoned keys INTO
-                    # the folded add entry (never mutating shared dicts
-                    # — checkpoints alias them across snapshots). A
-                    # remove clears them; a re-add starts clean.
-                    d = action["dv"]
-                    cur = live.get(d["path"])
-                    if cur is not None:
-                        live[d["path"]] = {
-                            **cur, "dv": _merge_dv(cur.get("dv"), d)}
-                elif "protocol" in action:
-                    proto = action["protocol"]
-        # The protocol gate: checked on EVERY fold (reads and the read
-        # half of writes), at the FOLDED version — time travel to a
-        # pre-upgrade snapshot stays readable by an older client, which
-        # is the public Delta rule. Writers additionally check
-        # minWriter in _commit.
-        check_protocol(proto, f"{self.path}@v{v}", reader=SUPPORTED_READER)
-        self._proto = proto
-        self._props = meta.get("properties") or {}
+        v, meta, live, _, _ = self._fold(version)
         if not raw:
             inv = _colmap_inverse(meta)
             if inv:
@@ -559,61 +310,19 @@ class TxTable:
         return v, meta, live
 
     def _try_publish(self, version: int, actions: list[dict]) -> bool:
-        """Atomically publish the commit file with its COMPLETE content;
-        False if the version is taken.
+        """Publish the commit file with its COMPLETE content; False if
+        the version is taken.
 
-        The claim must carry the whole payload in the same atomic step:
-        claim-then-write (``create(overwrite=False)`` + ``write``) leaves
-        a torn, forever-claimed version if the writer dies in between —
-        every later ``_snapshot`` would fail parsing it and no retry
-        could ever publish that version. On local paths the payload is
-        written to a ``.json.tmp`` (ignored by the version listing) and
-        claimed with an atomic hard link — the local-FS model of an
-        object store's put-if-absent, which is how the public Delta
-        design publishes commits on S3/GCS. Non-local stores fall back
-        to claim-then-write (the documented Delta-on-HDFS crash window) —
-        where a death between claim and write leaves a torn file; the
-        count trailer (``txproto.commit_payload``) makes every tear
+        Local paths publish atomically (tmp + hard link — the claim
+        carries the whole payload, so a dead writer can never leave a
+        torn, forever-claimed version). Non-local stores fall back to
+        claim-then-write (the documented Delta-on-HDFS crash window);
+        the count trailer (``txproto.commit_payload``) makes every tear
         signature detectable at read time and
         :meth:`repair_torn_commit` recovers the log.
         """
-        payload = commit_payload(actions)
-        local = "://" not in self.log_dir
-        if local:
-            target = f"{self.log_dir}/{version:020d}.json"
-            if os.path.exists(target):
-                return False
-            tmp = f"{self.log_dir}/{uuid.uuid4().hex}.json.tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(payload)
-            try:
-                os.link(tmp, target)  # atomic: full content or nothing
-            except FileExistsError:
-                return False
-            except OSError:
-                raise  # real IO failure: surface, don't spin
-            finally:
-                os.unlink(tmp)
-            return True
-        fs = _fs(self.spark, self.log_dir)
-        target = _jpath(self.spark, f"{self.log_dir}/{version:020d}.json")
-        if fs.exists(target):
-            return False
-        try:
-            out = fs.create(target, False)  # overwrite=False: atomic claim
-        except Exception:
-            # Only a lost race (another writer created the file between our
-            # exists() check and create()) is retryable; any other IO
-            # failure (permissions, disk full) must surface instead of
-            # spinning _commit's optimistic loop forever.
-            if fs.exists(target):
-                return False
-            raise
-        try:
-            out.write(bytearray(payload.encode("utf-8")))
-        finally:
-            out.close()
-        return True
+        return self._io.write(commit_name(version),
+                              commit_payload(actions).encode("utf-8"))
 
     def _commit(self, actions: list[dict], read_version: int,
                 validate=None, info: dict | None = None) -> int:
@@ -651,12 +360,11 @@ class TxTable:
                           for a in actions)
         checked_through = read_version
         while True:
-            latest = self._latest_version()
-            assert latest is not None
+            latest = latest_version(self._io)
             if latest > checked_through:
                 intervening = [a for i in
                                range(checked_through + 1, latest + 1)
-                               for a in self._read_commit(i)]
+                               for a in read_commit(self._io, i)]
                 removed_by_others = {a["remove"]["path"] for a in intervening
                                      if "remove" in a}
                 dv_by_others = {a["dv"]["path"] for a in intervening
@@ -676,7 +384,7 @@ class TxTable:
                         f"the new snapshot of {self.path}")
                 # a concurrent DV on the same file with DIFFERENT key
                 # columns would make the folded tombstone set unmergeable
-                # (one keyed set per file — _merge_dv); publishing on top
+                # (one keyed set per file — merge_dv); publishing on top
                 # would brick every later fold, so conflict instead.
                 keycol_clash = sorted(
                     a["dv"]["path"] for a in intervening
@@ -899,8 +607,8 @@ class TxTable:
                            _jpath(self.spark, f"{self.path}/{final}"))
             if not ok:
                 raise IOError(f"rename of staged file {name} failed")
-            stats = {to_phys(c, c): [_json_scalar(r[f"_min_{c}"]),
-                                     _json_scalar(r[f"_max_{c}"])]
+            stats = {to_phys(c, c): [stat_scalar(r[f"_min_{c}"]),
+                                     stat_scalar(r[f"_max_{c}"])]
                      for c in stat_cols}
             add = {"path": final, "numRecords": int(r["_n"]), "stats": stats,
                    "nullCounts": {to_phys(c, c): int(r[f"_nulls_{c}"])
@@ -1005,12 +713,12 @@ class TxTable:
         bloom = _bloom_spec(df.schema, bloom_cols, bloom_bits,
                             bloom_hashes)
         fs = _fs(spark, path)
-        log = _jpath(spark, f"{path}/{_LOG_DIR}")
+        log = _jpath(spark, f"{path}/{LOG_DIR}")
         if fs.exists(log):
             raise ValueError(f"{path} is already a txlog table")
         fs.mkdirs(log)
         t = object.__new__(TxTable)
-        t.spark, t.path, t.log_dir = spark, path, f"{path}/{_LOG_DIR}"
+        t._bind(spark, path)
         # the stored schema is all-NULLABLE: parquet files can't enforce
         # NOT NULL, schema evolution null-fills old files, and a reader
         # that trusts a non-nullable field over data that can hold nulls
@@ -1084,7 +792,7 @@ class TxTable:
         refused, matching Spark's own scan behavior)."""
         path = path.rstrip("/")
         fs = _fs(spark, path)
-        if fs.exists(_jpath(spark, f"{path}/{_LOG_DIR}")):
+        if fs.exists(_jpath(spark, f"{path}/{LOG_DIR}")):
             raise ValueError(f"{path} is already a txlog table")
         parts: list[str] = []  # relative paths incl. key=value/ prefixes
 
@@ -1151,8 +859,8 @@ class TxTable:
                 continue  # zero-row file: nothing worth referencing
             add = {
                 "path": rel, "numRecords": int(r["_n"]),
-                "stats": {c: [_json_scalar(r[f"_min_{c}"]),
-                              _json_scalar(r[f"_max_{c}"])]
+                "stats": {c: [stat_scalar(r[f"_min_{c}"]),
+                              stat_scalar(r[f"_max_{c}"])]
                           for c in stat_cols},
                 "nullCounts": {c: int(r[f"_nulls_{c}"])
                                for c in stat_cols}}
@@ -1164,7 +872,7 @@ class TxTable:
                                 for c in bloom["cols"]}
             actions.append({"add": add})
         t = object.__new__(TxTable)
-        t.spark, t.path, t.log_dir = spark, path, f"{path}/{_LOG_DIR}"
+        t._bind(spark, path)
         actions.append(_info_action(
             "convert", files=sum(1 for a in actions if "add" in a)))
         fs.mkdirs(_jpath(spark, t.log_dir))
@@ -1196,7 +904,7 @@ class TxTable:
         v, meta, live = self._snapshot(version, raw=True)
         target = target.rstrip("/")
         fs = _fs(self.spark, target)
-        log = _jpath(self.spark, f"{target}/{_LOG_DIR}")
+        log = _jpath(self.spark, f"{target}/{LOG_DIR}")
         if fs.exists(log):
             raise ValueError(f"{target} is already a txlog table")
         fs.mkdirs(log)
@@ -1217,8 +925,7 @@ class TxTable:
         actions.append(_info_action("clone", source=self.path,
                                     source_version=int(v)))
         t = object.__new__(TxTable)
-        t.spark, t.path, t.log_dir = (self.spark, target,
-                                      f"{target}/{_LOG_DIR}")
+        t._bind(self.spark, target)
         if not t._try_publish(0, actions):
             raise TxConflict(f"concurrent create of {target}")
         # Register the clone in the SOURCE's log too (one pure-info
@@ -1232,9 +939,7 @@ class TxTable:
 
     @property
     def version(self) -> int:
-        v = self._latest_version()
-        assert v is not None
-        return v
+        return latest_version(self._io)
 
     def schema(self) -> StructType:
         _, meta, _ = self._snapshot()
@@ -1245,7 +950,7 @@ class TxTable:
         return sorted(live)
 
     def history(self) -> list[list[dict]]:
-        return [self._read_commit(i) for i in range(self.version + 1)]
+        return [read_commit(self._io, i) for i in range(self.version + 1)]
 
     def describe_history(self) -> list[dict]:
         """Audit view of the commit log (the public Delta
@@ -1261,7 +966,7 @@ class TxTable:
         out = []
         nrec: dict[str, int] = {}  # path -> numRecords, folded forward
         for v in range(self.version + 1):
-            actions = self._read_commit(v)
+            actions = read_commit(self._io, v)
             info = next((a["info"] for a in actions if "info" in a), {})
             rows_added = rows_removed = rows_tombstoned = 0
             for a in actions:
@@ -1790,7 +1495,7 @@ class TxTable:
     def _commit_ts(self, version: int) -> float | None:
         """The version's recorded in-commit timestamp (provenance
         ``ts``), None for pre-provenance or repaired commits."""
-        for a in self._read_commit(version):
+        for a in read_commit(self._io, version):
             if "info" in a and a["info"].get("ts") is not None:
                 return float(a["info"]["ts"])
         return None
@@ -1798,60 +1503,12 @@ class TxTable:
     def version_at(self, timestamp: float) -> int:
         """Resolve ``timestampAsOf``-style time travel: the latest
         version whose commit timestamp is at-or-before the given unix
-        timestamp. Default rule: commit file mtime IS the commit
-        timestamp (the public Delta default). With the
-        ``inCommitTimestamps`` table property enabled (Delta's
-        ``enableInCommitTimestamps``), the RECORDED provenance ts wins
-        instead — publish re-stamps it strictly above the parent's
-        (see :meth:`_commit`), so the timeline is monotone under
-        writer clock skew and survives log copies/rsync that reset
-        mtimes; commits without one fall back to mtime. Either way the
-        effective timeline folds through a running max (Delta's exact
-        monotonicity rule). Raises if the table's first commit is
-        later than the timestamp."""
-        self._snapshot()  # folds _props for the property check
-        use_ict = str((self._props or {}).get("inCommitTimestamps", "")
-                      ).lower() in ("true", "1")
-        fs = _fs(self.spark, self.log_dir)
-        mtimes: dict[int, float] = {}
-        for st in fs.listStatus(_jpath(self.spark, self.log_dir)):
-            name = st.getPath().getName()
-            if name.endswith(".json") and name[:-5].isdigit():
-                mtimes[int(name[:-5])] = st.getModificationTime() / 1000.0
-        best = None
-        eff = float("-inf")
-        # A commit's recorded ts is publish-clamped ONLY when the
-        # property was enabled BEFORE it (Delta's ictEnablementVersion
-        # rule, ADVICE r14 low): commits published earlier carry
-        # plan-time wall clock — retroactively preferring those would
-        # shift historical time-travel resolution. Fold the property
-        # state through the walk (one commit read per version).
-        ict_on = False
-        for v in sorted(mtimes):
-            ts = None
-            if use_ict:
-                was_on = ict_on
-                for a in self._read_commit(v):
-                    if (ts is None and "info" in a
-                            and a["info"].get("ts") is not None):
-                        ts = float(a["info"]["ts"])
-                    if "meta" in a:
-                        ict_on = str(
-                            (a["meta"].get("properties") or {})
-                            .get("inCommitTimestamps", "")
-                        ).lower() in ("true", "1")
-                if not was_on:
-                    ts = None
-            eff = max(eff, mtimes[v] if ts is None else ts)
-            if eff <= timestamp:
-                best = v
-            else:
-                break  # effective timeline is monotone: done
-        if best is None:
-            raise ValueError(
-                f"{self.path}: no commit at or before timestamp "
-                f"{timestamp} (earliest commit is later)")
-        return best
+        timestamp (``txproto.version_at``: commit-file mtimes, or the
+        recorded in-commit timestamps once the ``inCommitTimestamps``
+        property is on — publish re-stamps them strictly above the
+        parent's, see :meth:`_commit`). Raises if the table's first
+        commit is later than the timestamp."""
+        return txproto.version_at(self._io, timestamp)
 
     def _abs(self, p: str) -> str:
         """A live-set path → a readable location. Paths are normally
@@ -2047,7 +1704,7 @@ class TxTable:
                 name = st.getPath().getName()
                 rel = f"{prefix}{name}"
                 if st.isDirectory():
-                    if name == _LOG_DIR or name.startswith("_staged_"):
+                    if name == LOG_DIR or name.startswith("_staged_"):
                         continue
                     walk(rel + "/")
                 elif name.endswith(".parquet"):
@@ -2175,10 +1832,10 @@ class TxTable:
         if not live or not rows:
             return self.spark.createDataFrame([], schema)
         if len(rows) <= self._BLOOM_PROBE_MAX:
-            bounds = {k: (_json_scalar(min((r[k] for r in rows
+            bounds = {k: (stat_scalar(min((r[k] for r in rows
                                             if r[k] is not None),
                                            default=None)),
-                          _json_scalar(max((r[k] for r in rows
+                          stat_scalar(max((r[k] for r in rows
                                             if r[k] is not None),
                                            default=None)))
                       for k in keys}
@@ -2268,67 +1925,26 @@ class TxTable:
                 f"0..{latest}")
         _, meta, _ = self._snapshot(to_v)
         schema = StructType.fromJson(meta["schema"])
-        adds: list[tuple] = []      # (era, path)
-        removes: list[tuple] = []   # (era, path)
-        # Deletion-vector state is tracked THROUGH the walk, seeded from
-        # the window-start snapshot: a dv action emits exactly its newly
-        # tombstoned rows as deletes; a data-changing remove of a
-        # tombstoned file emits only its VISIBLE rows (full file minus
-        # the tombstones accumulated by the removal point — the earlier
-        # tombstones were already emitted as deletes, in this window or
-        # a previous one). Layout-only swaps (optimize, including DV
-        # materialization) stay silent: visible rows are unchanged.
-        # raw: the walk merges dv actions straight off the commits
-        # (physical keyCols on mapped tables); translation to the
-        # to-version's logical names happens once, at the probe frames
-        _, meta0, state_live = self._snapshot(from_version, raw=True)
-        dv_state = {p: a["dv"] for p, a in state_live.items()
-                    if a.get("dv")}
-        # Partition-layout era tracking (ADVICE r14, medium): files
-        # written before a repartition_table live under the OLD layout's
-        # key=value/ paths and omit the old partition columns from their
-        # data — scanning them with the to-version meta would null-fill
-        # those columns. repartition_table rewrites every live file, so
-        # any file referenced by commit i was written under the layout
-        # in force at commit i: track it through the walk and scan each
-        # era's files with its own partition_cols (to-version logical
-        # schema throughout — column physical names are rename-stable).
-        era = tuple(meta0.get("partition_cols") or ())
+        # the shared walk (txproto.walk_changes): dataChange=false swaps
+        # are skipped — the fold invariant survives because a swap is
+        # row-multiset-identical (even when a LATER data-changing commit
+        # removes a packed file whose inputs predate the window, its
+        # delete rows equal the skipped inputs' rows exactly); each file
+        # is scanned under its own partition-layout era, projected to
+        # the to-version logical schema; dv keys stay physical until
+        # ldv() below translates them once
+        adds: list[tuple] = []          # (era, path)
+        removes: list[tuple] = []       # (era, path)
         partial_dels: list[tuple] = []  # (era, path, dv) w/ tombstones
         dv_dels: list[tuple] = []       # (era, path, dv) new tombstones
-        for i in range(from_version + 1, to_v + 1):
-            for action in self._read_commit(i):
-                # dataChange=false actions (optimize's compaction swaps)
-                # moved rows between files without changing the table's
-                # contents — the feed skips them. The fold invariant
-                # survives because the swap is row-multiset-identical:
-                # even when a LATER data-changing commit removes a packed
-                # file whose inputs predate the window, the packed file's
-                # delete rows equal the skipped inputs' rows exactly.
-                if "meta" in action:
-                    era = tuple(
-                        action["meta"].get("partition_cols") or ())
-                elif "add" in action:
-                    dv_state.pop(action["add"]["path"], None)
-                    if action["add"].get("dataChange", True):
-                        adds.append((era, action["add"]["path"]))
-                elif "remove" in action:
-                    p = action["remove"]["path"]
-                    dv = dv_state.pop(p, None)
-                    if action["remove"].get("dataChange", True):
-                        if dv:
-                            partial_dels.append((era, p, dv))
-                        else:
-                            removes.append((era, p))
-                elif "dv" in action:
-                    d = action["dv"]
-                    cur = dv_state.get(d["path"])
-                    fresh = _dv_minus(d, cur)  # not already tombstoned
-                    if fresh:
-                        dv_dels.append((era, d["path"],
-                                        {"keyCols": list(d["keyCols"]),
-                                         "keys": fresh}))
-                    dv_state[d["path"]] = _merge_dv(cur, d)
+        for ch in walk_changes(self._io, from_version, to_v):
+            if ch.kind == "add":
+                adds.append((ch.era, ch.path))
+            elif ch.kind == "remove":
+                removes.append((ch.era, ch.path))
+            else:
+                (partial_dels if ch.kind == "partial" else dv_dels).append(
+                    (ch.era, ch.path, ch.dv))
         # Net per path by MULTISET count, not set intersection: RESTORE
         # re-adds a previously removed path, so a window spanning
         # add(v1) -> delete(v2) -> restore-re-add(v3) has unbalanced
@@ -2426,53 +2042,25 @@ class TxTable:
         def ldv(dv: dict) -> dict:
             return {"keyCols": [inv.get(c, c) for c in dv["keyCols"]],
                     "keys": dv["keys"]}
-        # deletion-vector state must seed from the window start, same
-        # walk discipline as read_changes (raw: dv actions off commits
-        # are physical-keyed on mapped tables)
-        _, meta0, state_live = self._snapshot(from_version, raw=True)
-        dv_state = {p: a["dv"] for p, a in state_live.items()
-                    if a.get("dv")}
-        # Partition-layout era tracking — same rule as read_changes
-        # (ADVICE r14, medium): every file referenced by commit i was
-        # written under the layout in force at commit i (repartition_
-        # table rewrites all live files), so scan each commit's files
-        # with that layout, projected to the to-version logical schema.
-        era = tuple(meta0.get("partition_cols") or ())
 
         def era_meta(e: tuple) -> dict:
             return (meta if list(e) == (meta.get("partition_cols") or [])
                     else {**meta, "partition_cols": list(e)})
 
         frames = []
-        for i in range(from_version + 1, to_v + 1):
-            adds_i: list[str] = []
-            rem_plain: list[str] = []
-            rem_partial: list[tuple[str, dict]] = []
-            dv_dels: list[tuple[str, dict]] = []
-            for action in self._read_commit(i):
-                if "meta" in action:
-                    era = tuple(
-                        action["meta"].get("partition_cols") or ())
-                elif "add" in action:
-                    dv_state.pop(action["add"]["path"], None)
-                    if action["add"].get("dataChange", True):
-                        adds_i.append(action["add"]["path"])
-                elif "remove" in action:
-                    p = action["remove"]["path"]
-                    dv = dv_state.pop(p, None)
-                    if action["remove"].get("dataChange", True):
-                        (rem_partial.append((p, dv)) if dv
-                         else rem_plain.append(p))
-                elif "dv" in action:
-                    d = action["dv"]
-                    cur = dv_state.get(d["path"])
-                    fresh = _dv_minus(d, cur)
-                    if fresh:
-                        dv_dels.append((d["path"],
-                                        {"keyCols": list(d["keyCols"]),
-                                         "keys": fresh}))
-                    dv_state[d["path"]] = _merge_dv(cur, d)
-            m_i = era_meta(era)
+        # the shared walk, grouped per commit (read_changes' event rules;
+        # one commit's files share its partition-layout era)
+        for i, changes in itertools.groupby(
+                walk_changes(self._io, from_version, to_v),
+                key=lambda ch: ch.version):
+            changes = list(changes)
+            adds_i = [ch.path for ch in changes if ch.kind == "add"]
+            rem_plain = [ch.path for ch in changes if ch.kind == "remove"]
+            rem_partial = [(ch.path, ch.dv) for ch in changes
+                           if ch.kind == "partial"]
+            dv_dels = [(ch.path, ch.dv) for ch in changes
+                       if ch.kind == "dv"]
+            m_i = era_meta(changes[-1].era)
             ins = (self._scan_files(m_i, sorted(adds_i)).select(*cols)
                    if adds_i else None)
             del_frames = []
@@ -2678,7 +2266,7 @@ class TxTable:
         self._require_mutable(meta, "overwrite")
         if txn is not None:
             app, ver = txn
-            last = self._fold_txns(rv).get(app)
+            last = self._fold(rv).txns.get(app)
             if last is not None and last >= ver:
                 return self.version  # replayed batch: already applied
         df = self._apply_generated(df, meta)
@@ -2770,7 +2358,7 @@ class TxTable:
         return self._commit(actions, rv, validate=no_target_writes,
                             info={"op": "overwrite_partitions",
                                   "partitions": {
-                                      k: _json_scalar(v) for k, v
+                                      k: stat_scalar(v) for k, v
                                       in partition_values.items()}})
 
     # ------------------------------------------------------- bloom skipping
@@ -2881,8 +2469,8 @@ class TxTable:
                         *[f for k in keys for f in
                           (F.min(k).alias(f"lo_{k}"),
                            F.max(k).alias(f"hi_{k}"))]).collect()[0]
-        return int(row["_n"]), {k: (_json_scalar(row[f"lo_{k}"]),
-                                    _json_scalar(row[f"hi_{k}"]))
+        return int(row["_n"]), {k: (stat_scalar(row[f"lo_{k}"]),
+                                    stat_scalar(row[f"hi_{k}"]))
                                 for k in keys}
 
     @staticmethod
@@ -3221,7 +2809,7 @@ class TxTable:
         CDC never double-emits a delete.
 
         A file's tombstones must all share ONE key-column set (they are
-        folded as a single keyed set — :func:`_merge_dv`), so a delete
+        folded as a single keyed set — ``txproto.merge_dv``), so a delete
         whose ``keys`` differ from a target file's existing DV keyCols
         is refused at plan time (and a concurrent such delete is a
         :class:`TxConflict` — see ``dv_keycols`` in :meth:`_commit`)
@@ -3240,7 +2828,7 @@ class TxTable:
         by_file: dict[str, list[list]] = {}
         for r in pairs:
             by_file.setdefault(resolve(r["_file"]), []).append(
-                [_json_scalar(r[k]) for k in keys])
+                [stat_scalar(r[k]) for k in keys])
         mismatched = sorted(
             p for p in by_file
             if p in dvs and list(dvs[p]["keyCols"]) != keys)
@@ -3312,7 +2900,7 @@ class TxTable:
         self._require_mutable(meta, "apply_changes")
         if txn is not None:
             app, ver = txn
-            last = self._fold_txns(rv).get(app)
+            last = self._fold(rv).txns.get(app)
             if last is not None and last >= ver:
                 return self.version  # replayed batch: already applied
         schema = StructType.fromJson(meta["schema"])
@@ -3446,7 +3034,7 @@ class TxTable:
         self._require_mutable(meta, "apply_delta")
         if txn is not None:
             app, ver = txn
-            last = self._fold_txns(rv).get(app)
+            last = self._fold(rv).txns.get(app)
             if last is not None and last >= ver:
                 return self.version  # replayed batch: already applied
         schema = StructType.fromJson(meta["schema"])
@@ -3702,7 +3290,7 @@ class TxTable:
             if cur_keys == tgt_keys:
                 continue
             if cur_keys <= tgt_keys:
-                extra = _dv_minus(tgt_dv, cur_dv)
+                extra = dv_minus(tgt_dv, cur_dv)
                 actions.append({"dv": {"path": p,
                                        "keyCols": tgt_dv["keyCols"],
                                        "keys": extra}})
@@ -3946,45 +3534,34 @@ class TxTable:
         False and live-file checks run on the fold that treats the torn
         commit as empty (the post-repair state).
         """
-        latest = self._latest_version()
-        if latest is None:  # explicit: an assert strips under python -O
+        commits, ckpts = log_listing(self._io)  # ONE listing: no races
+        if not commits:
             raise ValueError(f"{self.path} has no commits")
+        latest = max(commits)
         torn_commits, missing_commits = [], []
-        live: dict[str, dict] = {}
+        # the shared fold step over EVERY commit from 0 (no checkpoint
+        # shortcut), a torn commit folding as empty (the post-repair
+        # state)
+        st = LogState()
         referenced: set[str] = set()
-        proto: dict | None = None
-        fmeta: dict = {}
-        fs = _fs(self.spark, self.log_dir)
         for v in range(latest + 1):
-            if not fs.exists(_jpath(self.spark,
-                                    f"{self.log_dir}/{v:020d}.json")):
+            if v not in commits:
                 missing_commits.append(v)
                 continue
             try:
-                actions = self._read_commit(v)
+                actions = read_commit(self._io, v)
             except TxCorruption:
                 torn_commits.append(v)
                 continue
             for a in actions:
                 if "add" in a:
-                    live[a["add"]["path"]] = a["add"]
                     referenced.add(a["add"]["path"])
-                elif "remove" in a:
-                    live.pop(a["remove"]["path"], None)
-                elif "dv" in a:
-                    cur = live.get(a["dv"]["path"])
-                    if cur is not None:
-                        live[a["dv"]["path"]] = {
-                            **cur, "dv": _merge_dv(cur.get("dv"),
-                                                   a["dv"])}
-                elif "protocol" in a:
-                    proto = a["protocol"]
-                elif "meta" in a:
-                    fmeta = a["meta"]
+                st.apply(a)
+        live, proto, fmeta = st.live, st.protocol, st.meta
         torn_checkpoints = []
-        for c in self._checkpoint_versions():
+        for c in ckpts:
             try:
-                self._read_checkpoint(c)
+                read_checkpoint(self._io, c)
             except Exception:
                 torn_checkpoints.append(c)
         on_disk = {rel for rel, _mtime in self._list_data_files()}
@@ -4109,8 +3686,8 @@ class TxTable:
                         continue  # pre-stat or schema-evolved file: the
                         # planners already treat missing stats as
                         # "always overlaps", which is safe
-                    actual = [_json_scalar(r[f"_min_{c}"]),
-                              _json_scalar(r[f"_max_{c}"])]
+                    actual = [stat_scalar(r[f"_min_{c}"]),
+                              stat_scalar(r[f"_max_{c}"])]
                     if stats != actual or (
                             nulls is not None
                             and nulls != int(r[f"_nulls_{c}"])):
@@ -4135,7 +3712,7 @@ class TxTable:
         conservative the other way and reported by the caller."""
         targets: list[str] = []
         for i in range(self.version + 1):
-            for a in self._read_commit(i):
+            for a in read_commit(self._io, i):
                 info = a.get("info") or {}
                 if info.get("op") == "clone_ref":
                     targets.append(info["target"])
@@ -4214,12 +3791,12 @@ class TxTable:
         # deleted) — old-version time travel just folds longer. Same
         # retention guard so a checkpoint mid-publish by a concurrent
         # writer survives.
-        ckpts = self._checkpoint_versions()
-        for c in ckpts[:-1]:
-            p = _jpath(self.spark,
-                       f"{self.log_dir}/{c:020d}{_CKPT_SUFFIX}")
-            if fs.getFileStatus(p).getModificationTime() < cutoff_ms:
+        listed = self._io.list()
+        for c in self._checkpoint_versions()[:-1]:
+            name = checkpoint_name(c)
+            if name in listed and listed[name] * 1000.0 < cutoff_ms:
                 if not dry_run:
-                    fs.delete(p, False)
-                deleted.append(f"{c:020d}{_CKPT_SUFFIX}")
+                    fs.delete(_jpath(self.spark, f"{self.log_dir}/{name}"),
+                              False)
+                deleted.append(name)
         return sorted(deleted)

@@ -1,19 +1,36 @@
-"""Commit-file wire protocol for the txlog table format.
+"""The txlog table format's log: wire protocol and the one replay core.
 
-One concern, shared by every writer and reader of commit files: make a
-TORN commit (the claim-then-write crash window on stores without an
-atomic put-if-absent-with-content, ``txlog.TxTable._try_publish``)
-*detectable* instead of silently corrupting the log. Local-path
-publishes are atomic (tmp + hard link) and can never tear; the
-non-local branch claims the version with ``create(overwrite=False)``
-and then streams the payload, so a writer dying in between leaves a
-claimed version whose file is empty or truncated — the documented
-Delta-on-HDFS window (PROTOCOL.md "LogStore" in the public
-delta-io/delta repo describes the same store requirement).
+Every reader and writer of a ``_txlog`` directory — :class:`TxTable`
+(``operators/txlog.py``) and the plain-IO ``txlog`` / ``txlog_cdc``
+DataSources (``sources/txlog_batch.py``, ``sources/txlog_stream.py``) —
+goes through this module for every log-format decision:
+
+- the commit wire format (count trailer, tear detection, repair);
+- the protocol version gate;
+- the log layout (``LOG_DIR``, file names, checkpoint cadence);
+- the replay core over an injected log IO object: the snapshot fold
+  (:func:`replay`), the checkpoint parser and writer
+  (:func:`read_checkpoint`, :func:`write_checkpoint`), time travel
+  (:func:`version_at`) and the change-window walk
+  (:func:`walk_changes`).
+
+The log IO object has exactly two implementations: :class:`LocalLogIO`
+(plain ``os`` IO, every local path) and :class:`HadoopLogIO` (Hadoop
+FileSystem over py4j, only for ``scheme://`` paths). Both expose
+``list() -> {name: mtime_s}``, ``read(name) -> bytes`` and
+``write(name, data, replace=False) -> bool``.
+
+Torn commits. Local-path publishes are atomic (tmp + hard link) and
+can never tear; the non-local branch claims the version with
+``create(overwrite=False)`` and then streams the payload, so a writer
+dying in between leaves a claimed version whose file is empty or
+truncated — the documented Delta-on-HDFS window (PROTOCOL.md
+"LogStore" in the public delta-io/delta repo describes the same store
+requirement).
 
 The defense is the same count-trailer discipline the checkpoint files
-already use (``txlog.py write_checkpoint``): every commit payload ends
-with ``{"commit": {"actions": N}}``. Tears are then detectable in all
+use (:func:`write_checkpoint`): every commit payload ends with
+``{"commit": {"actions": N}}``. Tears are then detectable in all
 three forms —
 
 - **empty file** (died right after the claim): zero lines, no trailer;
@@ -32,15 +49,41 @@ returned, so its actions were never acknowledged, and rewriting the
 torn file as an explicit empty commit (trailer-only, ``repaired`` flag)
 is the unique history consistent with what callers observed.
 
-Stdlib-only on purpose: the streaming/batch DataSources parse commits
-inside executor Python workers (``sources/txlog_stream.py``), where a
-pyspark import chain would be dead weight.
+Stdlib-only on purpose: the streaming/batch DataSources replay the log
+inside executor Python workers, where a pyspark import chain would be
+dead weight (:class:`HadoopLogIO` is duck-typed on the session it is
+handed).
 """
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
+import os
 import time
+import uuid
+from typing import NamedTuple
+
+# ------------------------------------------------------------- log layout
+LOG_DIR = "_txlog"
+CKPT_SUFFIX = ".checkpoint.json"
+
+#: Auto-write a snapshot checkpoint every N commits. 10 matches the
+#: public Delta default; at a commit-per-micro-batch streaming cadence
+#: this bounds every snapshot fold to <= 10 commit reads no matter how
+#: old the table gets. (The ``checkpointInterval`` table property
+#: overrides it for TxTable writers.)
+CHECKPOINT_INTERVAL = 10
+
+
+def commit_name(version: int) -> str:
+    return f"{version:020d}.json"
+
+
+def checkpoint_name(version: int) -> str:
+    return f"{version:020d}{CKPT_SUFFIX}"
+
 
 # Bumped when the commit-file wire format changes shape. v2 = the
 # required count trailer. Folded into the on-disk artifact cache keys
@@ -116,6 +159,21 @@ def canon_temporal(v):
             and v[4] == "-" and v[7] == "-"):
         return v[:10] + " " + v[11:]
     return v
+
+
+def stat_scalar(v):
+    """JSON-encode a stat value losslessly enough to round-trip compares.
+
+    Stats are *advisory bounds* — a lossy bound may only widen pruning
+    (keep a file), never skip a file that could match, so unknown types
+    degrade to ``None`` (= "no stats, always a candidate")."""
+    if v is None or isinstance(v, (int, float, str, bool)):
+        return v
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat()
+    if isinstance(v, decimal.Decimal):
+        return str(v)
+    return None
 
 
 def protocol_action(proto: dict) -> dict:
@@ -305,3 +363,423 @@ def is_torn(raw_lines: list[str]) -> bool:
     except TxCorruption:
         return True
     return False
+
+
+# ------------------------------------------------------------------ log IO
+class LocalLogIO:
+    """Plain ``os`` IO over ``<table>/_txlog`` — every local path.
+
+    Publishes write a uuid-named ``.tmp`` (never listed) and then claim
+    the name atomically: a hard link for an exclusive write (the
+    local-FS model of an object store's put-if-absent, which is how the
+    public Delta design publishes commits on S3/GCS), ``os.replace``
+    for a replace. A file therefore appears with its COMPLETE content
+    or not at all — local publishes can never tear."""
+
+    def __init__(self, table: str):
+        self.table = table
+        self.dir = os.path.join(table, LOG_DIR)
+
+    def list(self) -> dict[str, float]:
+        """``{name: mtime_s}`` of the log's ``.json`` files ({} when the
+        log directory does not exist). Mtimes are truncated to
+        milliseconds, the resolution the Hadoop listing reports."""
+        out: dict[str, float] = {}
+        try:
+            with os.scandir(self.dir) as it:
+                for e in it:
+                    if e.name.endswith(".json"):
+                        try:
+                            out[e.name] = (e.stat().st_mtime_ns
+                                           // 1_000_000 / 1000.0)
+                        except FileNotFoundError:
+                            continue  # vacuumed mid-listing
+        except FileNotFoundError:
+            return {}
+        return out
+
+    def read(self, name: str) -> bytes:
+        with open(os.path.join(self.dir, name), "rb") as fh:
+            return fh.read()
+
+    def write(self, name: str, data: bytes, replace: bool = False) -> bool:
+        """Publish ``name`` with its complete content. Exclusive by
+        default: False when the name is already taken (a lost race);
+        ``replace=True`` swaps atomically over an existing file."""
+        target = os.path.join(self.dir, name)
+        if not replace and os.path.exists(target):
+            return False
+        tmp = os.path.join(self.dir, f"{uuid.uuid4().hex}.tmp")
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        if replace:
+            os.replace(tmp, target)
+            return True
+        try:
+            os.link(tmp, target)  # atomic: full content or nothing
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
+        return True
+
+
+class HadoopLogIO:
+    """Hadoop FileSystem IO over py4j — only for ``scheme://`` paths.
+
+    An exclusive write claims the name with ``create(overwrite=False)``
+    and then streams the payload (claim-then-write): a writer dying in
+    between leaves a torn file, which the count trailers make
+    detectable (see the module docstring)."""
+
+    def __init__(self, spark, table: str):
+        self.table = table
+        self.dir = f"{table}/{LOG_DIR}"
+        self._jvm = spark._jvm
+        self._fs = self._path().getFileSystem(
+            spark._jsc.hadoopConfiguration())
+
+    def _path(self, name: str | None = None):
+        return self._jvm.org.apache.hadoop.fs.Path(
+            self.dir if name is None else f"{self.dir}/{name}")
+
+    def list(self) -> dict[str, float]:
+        d = self._path()
+        if not self._fs.exists(d):
+            return {}
+        out: dict[str, float] = {}
+        for st in self._fs.listStatus(d):
+            name = st.getPath().getName()
+            if name.endswith(".json"):
+                out[name] = st.getModificationTime() / 1000.0
+        return out
+
+    def read(self, name: str) -> bytes:
+        stream = self._fs.open(self._path(name))
+        try:
+            return bytes(self._jvm.org.apache.commons.io.IOUtils
+                         .toByteArray(stream))
+        finally:
+            stream.close()
+
+    def write(self, name: str, data: bytes, replace: bool = False) -> bool:
+        target = self._path(name)
+        if not replace and self._fs.exists(target):
+            return False
+        try:
+            out = self._fs.create(target, replace)
+        except Exception:
+            # Only a lost race (another writer created the file between
+            # the exists() check and create()) is retryable; any other
+            # IO failure (permissions, disk full) must surface instead
+            # of spinning a caller's optimistic loop forever.
+            if not replace and self._fs.exists(target):
+                return False
+            raise
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+        return True
+
+
+# ------------------------------------------------------------ replay core
+def log_listing(io) -> tuple[dict[int, float], list[int]]:
+    """One directory listing → ({commit version: mtime_s}, sorted
+    checkpoint versions)."""
+    commits: dict[int, float] = {}
+    ckpts: list[int] = []
+    for name, mtime in io.list().items():
+        if name[:-5].isdigit():
+            commits[int(name[:-5])] = mtime
+        elif (name.endswith(CKPT_SUFFIX)
+              and name[:-len(CKPT_SUFFIX)].isdigit()):
+            ckpts.append(int(name[:-len(CKPT_SUFFIX)]))
+    return commits, sorted(ckpts)
+
+
+def _require_commits(io, commits: dict) -> int:
+    if not commits:
+        raise ValueError(f"{io.table} is not a txlog table (no commits "
+                         f"in {LOG_DIR})")
+    return max(commits)
+
+
+def latest_version(io) -> int:
+    """The newest committed version; ValueError when there is none."""
+    return _require_commits(io, log_listing(io)[0])
+
+
+def read_commit(io, version: int) -> list[dict]:
+    """One commit's actions, tear-checked (:func:`parse_commit_lines`)."""
+    return parse_commit_lines(
+        io.read(commit_name(version)).decode("utf-8").splitlines(),
+        f"{io.table}@v{version}")
+
+
+def merge_dv(cur: dict | None, new: dict) -> dict:
+    """Union two deletion-vector key sets for one file (same keyCols —
+    enforced at commit; a second delete of an already-tombstoned key is
+    deduplicated so CDC never double-emits it)."""
+    if cur is None:
+        return {"keyCols": list(new["keyCols"]),
+                "keys": [list(k) for k in new["keys"]]}
+    if list(cur["keyCols"]) != list(new["keyCols"]):
+        raise ValueError(
+            f"deletion vectors on one file must share key columns "
+            f"({cur['keyCols']} vs {new['keyCols']})")
+    seen = {tuple(k) for k in cur["keys"]}
+    merged = [list(k) for k in cur["keys"]]
+    merged += [list(k) for k in new["keys"] if tuple(k) not in seen]
+    return {"keyCols": list(cur["keyCols"]), "keys": merged}
+
+
+def dv_minus(cur: dict | None, sub: dict | None) -> list[list]:
+    """Key tuples in ``cur`` not in ``sub`` (both optional DV dicts)."""
+    if cur is None:
+        return []
+    drop = {tuple(k) for k in (sub or {"keys": []})["keys"]}
+    return [list(k) for k in cur["keys"] if tuple(k) not in drop]
+
+
+class LogState:
+    """The running fold of log actions — the one step rule shared by
+    checkpoint loads, snapshot replays and the fsck walk. The newest
+    ``meta``/``protocol`` wins; ``add``/``remove`` maintain the live
+    set; a ``dv`` accumulates tombstoned keys INTO the live add entry
+    (never mutating it — checkpoints alias these dicts; a remove clears
+    them, a re-add starts clean); a ``txn`` keeps the highest version
+    per appId (versions only move forward)."""
+
+    def __init__(self):
+        self.meta: dict = {}
+        self.live: dict[str, dict] = {}
+        self.txns: dict[str, int] = {}
+        self.protocol: dict | None = None
+
+    def apply(self, action: dict) -> None:
+        if "meta" in action:
+            self.meta = action["meta"]
+        elif "add" in action:
+            self.live[action["add"]["path"]] = action["add"]
+        elif "remove" in action:
+            self.live.pop(action["remove"]["path"], None)
+        elif "dv" in action:
+            d = action["dv"]
+            cur = self.live.get(d["path"])
+            if cur is not None:
+                self.live[d["path"]] = {**cur,
+                                        "dv": merge_dv(cur.get("dv"), d)}
+        elif "txn" in action:
+            a, ver = action["txn"]["appId"], action["txn"]["version"]
+            self.txns[a] = max(ver, self.txns.get(a, ver))
+        elif "protocol" in action:
+            self.protocol = action["protocol"]
+
+
+class Snapshot(NamedTuple):
+    version: int
+    meta: dict
+    live: dict        # {path: add action}, dvs folded in, physical keys
+    txns: dict        # {appId: highest txn version}
+    protocol: dict | None
+
+
+def read_checkpoint(io, version: int):
+    """Load a checkpoint → (meta, {path: add}, {appId: txn}, protocol).
+
+    Raises ValueError on a torn file. The count trailer is what makes a
+    newline-boundary truncation (possible on the non-local
+    claim-then-write path) detectable: such a file still parses line by
+    line but silently omits live files, so every fold built on it would
+    drop rows with no error."""
+    actions = [json.loads(line) for line in
+               io.read(checkpoint_name(version)).decode("utf-8")
+               .splitlines() if line.strip()]
+    if not actions or actions[-1].get("count") != len(actions) - 1:
+        raise ValueError(
+            f"checkpoint {version} of {io.table} is torn (missing or "
+            f"mismatched count trailer)")
+    st = LogState()
+    for action in actions[:-1]:
+        st.apply(action)
+    return st.meta, st.live, st.txns, st.protocol
+
+
+def replay(io, version: int | None = None) -> Snapshot:
+    """Fold the log at ``version`` (default: latest) from ONE directory
+    listing, starting at the newest valid checkpoint at-or-before it —
+    O(CHECKPOINT_INTERVAL) commit reads on a checkpointed table instead
+    of O(version). A torn or unreadable checkpoint falls back to an
+    older one or to commit 0; a torn commit raises
+    :class:`TxCorruption`.
+
+    The result is the RAW log state (column-mapped tables keep their
+    physical-keyed artifacts). The protocol gate runs on every replay at
+    the replayed version — time travel to a pre-upgrade snapshot stays
+    readable by an older client, the public Delta rule."""
+    commits, ckpts = log_listing(io)
+    latest = _require_commits(io, commits)
+    v = latest if version is None else version
+    if not 0 <= v <= latest:
+        raise ValueError(f"version {v} out of range 0..{latest}")
+    st = LogState()
+    start = 0
+    for c in reversed([c for c in ckpts if c <= v]):
+        try:
+            st.meta, st.live, st.txns, st.protocol = read_checkpoint(io, c)
+        except Exception:
+            continue  # torn/unreadable checkpoint: older one or full fold
+        start = c + 1
+        break
+    for i in range(start, v + 1):
+        for action in read_commit(io, i):
+            st.apply(action)
+    if not st.meta:
+        raise ValueError(f"{io.table}: no meta action found in the log")
+    check_protocol(st.protocol, f"{io.table}@v{v}", reader=SUPPORTED_READER)
+    return Snapshot(v, st.meta, st.live, st.txns, st.protocol)
+
+
+def write_checkpoint(io, snap: Snapshot) -> int:
+    """Materialize a RAW snapshot as its checkpoint file; returns its
+    version. Idempotent: the content is a pure function of the
+    immutable commits <= version, so a VALID existing checkpoint is
+    kept, and a legacy (pre-count-trailer) or torn one is regenerated
+    in place. Commit files are never deleted — time travel and change
+    feeds keep reading them."""
+    v, meta, live, txns, proto = snap
+    # protocol FIRST (the Delta checkpoint convention): it must survive
+    # checkpoint-accelerated folds — a fold starting past commit 0 would
+    # otherwise silently bypass the version gate
+    lines = ([json.dumps({"protocol": proto}, sort_keys=True)]
+             if proto else [])
+    lines.append(json.dumps({"meta": meta}, sort_keys=True))
+    lines += [json.dumps({"txn": {"appId": a, "version": txns[a]}},
+                         sort_keys=True) for a in sorted(txns)]
+    lines += [json.dumps({"add": live[p]}, sort_keys=True)
+              for p in sorted(live)]
+    lines.append(json.dumps({"count": len(lines)}))
+    name = checkpoint_name(v)
+    exists = name in io.list()
+    if exists:
+        try:
+            read_checkpoint(io, v)
+            return v
+        except Exception:
+            pass  # legacy/torn: regenerate in place below
+    # an exclusive write that loses a race lost it to equal content
+    io.write(name, "\n".join(lines).encode("utf-8"), replace=exists)
+    return v
+
+
+def _ict_enabled(meta: dict) -> bool:
+    return str((meta.get("properties") or {})
+               .get("inCommitTimestamps", "")).lower() in ("true", "1")
+
+
+def version_at(io, timestamp: float) -> int:
+    """Resolve ``timestampAsOf``-style time travel: the latest version
+    whose commit timestamp is at-or-before ``timestamp``.
+
+    Default rule: commit file mtime IS the commit timestamp (the public
+    Delta default). With the ``inCommitTimestamps`` table property on,
+    the RECORDED provenance ts wins instead — publish stamps it
+    strictly above the parent's, so the timeline is monotone under
+    writer clock skew and survives log copies that reset mtimes. A
+    commit's recorded ts counts only when the property was already
+    enabled BEFORE it (Delta's ictEnablementVersion rule): earlier
+    commits carry plan-time wall clock and keep their mtimes. Either way
+    the effective timeline folds through a running max. Raises if the
+    table's first commit is later than ``timestamp``."""
+    use_ict = _ict_enabled(replay(io).meta)
+    commits, _ = log_listing(io)
+    best = None
+    eff = float("-inf")
+    ict_on = False
+    for v in sorted(commits):
+        ts = None
+        if use_ict:
+            was_on = ict_on
+            for a in read_commit(io, v):
+                if (ts is None and "info" in a
+                        and a["info"].get("ts") is not None):
+                    ts = float(a["info"]["ts"])
+                if "meta" in a:
+                    ict_on = _ict_enabled(a["meta"])
+            if not was_on:
+                ts = None
+        eff = max(eff, commits[v] if ts is None else ts)
+        if eff <= timestamp:
+            best = v
+        else:
+            break  # effective timeline is monotone: done
+    if best is None:
+        raise ValueError(f"{io.table}: no commit at or before timestamp "
+                         f"{timestamp} (earliest commit is later)")
+    return best
+
+
+class Change(NamedTuple):
+    """One change-feed event of :func:`walk_changes`."""
+    version: int
+    #: partition layout (partition_cols) the file was written under
+    era: tuple
+    #: 'add' | 'remove' (whole file) | 'partial' (removal of a
+    #: tombstoned file: its rows minus ``dv``) | 'dv' (newly tombstoned
+    #: keys ``dv`` of a live file)
+    kind: str
+    path: str
+    dv: dict | None
+
+
+def walk_changes(io, from_version: int, to_version: int):
+    """Yield the :class:`Change` events of the commits in
+    ``(from_version, to_version]``, in log order.
+
+    Deletion-vector state is tracked THROUGH the walk, seeded from the
+    window-start snapshot: a dv action yields exactly its newly
+    tombstoned keys; a data-changing remove of a tombstoned file yields
+    a 'partial' event carrying the tombstones accumulated by the
+    removal point (only its VISIBLE rows leave the table — the earlier
+    tombstones were already fed, in this window or a previous one).
+    ``dataChange: false`` actions (optimize/repartition swaps, DV
+    materialization) yield nothing: visible rows are unchanged.
+
+    Partition-layout eras: files written before a repartition_table
+    live under the OLD layout's ``key=value/`` paths and omit the old
+    partition columns from their data. repartition_table rewrites every
+    live file, so any file referenced by commit i was written under the
+    layout in force at commit i (a commit's meta action precedes its
+    file actions) — each event carries that layout.
+
+    DV keys and keyCols are RAW (physical names on column-mapped
+    tables). Multiset netting of adds against removes stays with the
+    caller."""
+    _, meta0, live0, _, _ = replay(io, from_version)
+    dv_state = {p: a["dv"] for p, a in live0.items() if a.get("dv")}
+    era = tuple(meta0.get("partition_cols") or ())
+    for v in range(from_version + 1, to_version + 1):
+        for action in read_commit(io, v):
+            if "meta" in action:
+                era = tuple(action["meta"].get("partition_cols") or ())
+            elif "add" in action:
+                a = action["add"]
+                dv_state.pop(a["path"], None)
+                if a.get("dataChange", True):
+                    yield Change(v, era, "add", a["path"], None)
+            elif "remove" in action:
+                r = action["remove"]
+                dv = dv_state.pop(r["path"], None)
+                if r.get("dataChange", True):
+                    yield Change(v, era, "partial" if dv else "remove",
+                                 r["path"], dv)
+            elif "dv" in action:
+                d = action["dv"]
+                cur = dv_state.get(d["path"])
+                fresh = dv_minus(d, cur)  # not already tombstoned
+                if fresh:
+                    yield Change(v, era, "dv", d["path"],
+                                 {"keyCols": list(d["keyCols"]),
+                                  "keys": fresh})
+                dv_state[d["path"]] = merge_dv(cur, d)

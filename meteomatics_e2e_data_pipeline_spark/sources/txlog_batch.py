@@ -25,13 +25,15 @@ one-sided contract as parquet row-group skipping. Equality, IN, and
 all four range comparators participate; anything else (or a column
 without stats) degrades to "read the file".
 
-Everything planner-side is plain IO over the KB-sized JSON log
-(checkpoint-accelerated — same O(interval) bound as
-``TxTable._snapshot``); each partition is ONE live data file read
-with pyarrow on an executor, null-filling columns added after the
-file was written (schema evolution). No SparkSession is touched
-anywhere in the source, so it works identically under driver-owned
-and factory sessions.
+Everything planner-side replays the KB-sized JSON log through the one
+core in ``operators/txproto.py`` (``replay``, ``version_at``,
+``write_checkpoint``) over its plain-``os`` log IO — the same fold,
+checkpoint format and time-travel rule as :class:`TxTable`, so the two
+tiers cannot disagree on a snapshot. Each partition is ONE live data
+file read with pyarrow on an executor, null-filling columns added after
+the file was written (schema evolution). No SparkSession is touched
+anywhere in the source, so it works identically under driver-owned and
+factory sessions.
 
 Follows the PUBLIC Delta/Iceberg stat-pruning design; reference has
 no counterpart (its warehouse prunes micro-partitions server-side).
@@ -40,7 +42,6 @@ no counterpart (its warehouse prunes micro-partitions server-side).
 from __future__ import annotations
 
 import itertools
-import json
 import os
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
@@ -65,85 +66,25 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..operators.genexpr import parse_generation_expr
-from ..operators.txproto import (canon_temporal, check_protocol,
+from ..operators.txproto import (CHECKPOINT_INTERVAL, LocalLogIO,
+                                 canon_temporal, check_protocol, commit_name,
                                  commit_payload,
-                                 info_action as _info_action)
-from .txlog_stream import (_LOG_DIR, _dv_mask, _latest_version,
-                           _read_commit, fold_snapshot)
+                                 info_action as _info_action, replay,
+                                 stat_scalar, version_at, write_checkpoint)
+from .txlog_stream import _dv_mask, _project
 
-_CKPT = ".checkpoint.json"
-
-# This plain-IO source's own capability: partition columns fill from
-# partitionValues (reader 2) and deletion vectors apply merge-on-read
-# in the scan workers (reader 3). The writer declares writer 3 because
-# its only two operations are dv-compatible by construction: append
-# never touches existing files, and overwrite removes EVERY live file
-# (which clears their tombstones in the fold) before adding fresh ones.
-# r14: column mapping understood by both sides (4); the writer also
-# honors the writer-feature trio (5) — generated columns VALIDATE
-# per-chunk (the V2 schema contract requires the values present, so
-# the writer enforces rather than computes), appendOnly refuses
-# overwrite mode, and identity tables refuse outright (values are
-# engine-assigned — TxTable.append owns the allocation).
-_READER_CAP = 4
+# The DataSource writer's own capability (this module's only protocol
+# constant — reads gate inside txproto.replay like every other client).
+# Writer 3 (deletion vectors) holds because its only two operations are
+# dv-compatible by construction: append never touches existing files,
+# and overwrite removes EVERY live file (which clears their tombstones
+# in the fold) before adding fresh ones. Writer 4: tasks stage under
+# the column-mapped PHYSICAL names. Writer 5 (the writer-feature trio):
+# generated columns VALIDATE per-chunk (the V2 schema contract requires
+# the values present, so the writer enforces rather than computes),
+# appendOnly refuses overwrite mode, and identity tables refuse outright
+# (values are engine-assigned — TxTable.append owns the allocation).
 _WRITER_CAP = 5
-
-
-def _fold_snapshot(table: str, version: int | None = None):
-    """Shared plain-IO snapshot fold (``txlog_stream.fold_snapshot``)
-    checked at THIS source's reader capability. Returns (version, meta,
-    live, txns, protocol); folded ``add`` entries carry accumulated
-    deletion vectors under ``"dv"``."""
-    return fold_snapshot(table, version, reader_cap=_READER_CAP)
-
-
-def _version_at(table: str, timestamp: float) -> int:
-    """``timestampAsOf`` resolution, plain IO — the TxTable.version_at
-    twin. Default: commit file mtime IS the commit timestamp (Delta's
-    default rule). With the ``inCommitTimestamps`` table property on,
-    the RECORDED provenance ts wins instead (publish stamps it strictly
-    above the parent's, so the timeline is monotone and survives log
-    copies that reset mtimes); commits without one fall back to mtime,
-    and either way the effective timeline folds through a running
-    max."""
-    _, meta, _, _, _ = _fold_snapshot(table)
-    use_ict = str((meta.get("properties") or {})
-                  .get("inCommitTimestamps", "")).lower() in ("true", "1")
-    log = os.path.join(table, _LOG_DIR)
-    mtimes: dict[int, float] = {}
-    for f in os.listdir(log):
-        if f.endswith(".json") and f[:-5].isdigit():
-            mtimes[int(f[:-5])] = os.path.getmtime(os.path.join(log, f))
-    best = None
-    eff = float("-inf")
-    # Delta's ictEnablementVersion rule (ADVICE r14 low, same fold as
-    # TxTable.version_at): a commit's recorded ts is publish-clamped
-    # only when the property was already enabled BEFORE it — earlier
-    # commits carry plan-time wall clock and keep their mtimes.
-    ict_on = False
-    for v in sorted(mtimes):
-        ts = None
-        if use_ict:
-            was_on = ict_on
-            for a in _read_commit(table, v):
-                if (ts is None and "info" in a
-                        and a["info"].get("ts") is not None):
-                    ts = float(a["info"]["ts"])
-                if "meta" in a:
-                    ict_on = str((a["meta"].get("properties") or {})
-                                 .get("inCommitTimestamps", "")
-                                 ).lower() in ("true", "1")
-            if not was_on:
-                ts = None
-        eff = max(eff, mtimes[v] if ts is None else ts)
-        if eff <= timestamp:
-            best = v
-        else:
-            break  # effective timeline is monotone: done
-    if best is None:
-        raise ValueError(f"{table}: no commit at or before timestamp "
-                         f"{timestamp} (earliest commit is later)")
-    return best
 
 
 def _resolve_version(options, table: str) -> int | None:
@@ -153,7 +94,7 @@ def _resolve_version(options, table: str) -> int | None:
         return int(version)
     ts = options.get("timestampAsOf")
     if ts is not None:
-        return _version_at(table, float(ts))
+        return version_at(LocalLogIO(table), float(ts))
     return None
 
 
@@ -165,7 +106,7 @@ def _norm_literal(v):
     canonicalizer additionally unifies the 'T'/space timestamp
     spellings (stats vs hive partitionValues — txproto.canon_temporal).
     Unknown types pass through raw (compare may TypeError → keep)."""
-    n = _stat_scalar(v)
+    n = stat_scalar(v)
     return canon_temporal(n) if n is not None else v
 
 
@@ -260,7 +201,7 @@ class TxLogBatchReader(DataSourceReader):
             raise ValueError("txlog requires option 'path'")
         self.table = path.rstrip("/")
         v = _resolve_version(options, self.table)
-        _, meta, live, _, _ = _fold_snapshot(self.table, v)
+        _, meta, live, _, _ = replay(LocalLogIO(self.table), v)
         self.schema_struct = StructType.fromJson(meta["schema"])
         self.fields = [f.name for f in self.schema_struct.fields]
         self.partition_cols = meta.get("partition_cols") or []
@@ -362,65 +303,41 @@ class TxLogBatchReader(DataSourceReader):
         """Yield Arrow RecordBatches (not tuples): the engine ingests
         them zero-copy, which keeps the executor path vectorized —
         measured 5× faster than row-tuple yield on a 2M-row scan.
-        Missing columns (schema evolution) null-fill with the TYPED
-        arrow field; present columns cast to the declared type."""
+        Present columns cast to the declared type (``_project``)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        target = to_arrow_schema(self.schema_struct)
         table = pq.read_table(partition.file_path)
         if partition.dv is not None:
             # merge-on-read: drop tombstoned keys before projecting
             table = table.filter(_dv_mask(table, partition.dv,
                                           partition.partition_values,
                                           keep_matching=False))
-        n = table.num_rows
-        present = set(table.column_names)
-        pv = partition.partition_values or {}
-        arrays = []
-        for i, name in enumerate(self.fields):
-            typ = target.field(i).type
-            pname = self.colmap.get(name, name)  # file speaks physical
-            if pname in present:
-                arrays.append(table.column(pname).cast(typ)
-                              .combine_chunks())
-            elif name in pv:
-                # hive partition column: constant, typed from the path
-                arrays.append(pa.nulls(n, type=typ) if pv[name] is None
-                              else pa.array([pv[name]] * n).cast(typ))
-            else:
-                arrays.append(pa.nulls(n, type=typ))
-        yield from pa.table(dict(zip(self.fields, arrays))).to_batches()
+        yield from pa.table(_project(
+            table, self.fields, to_arrow_schema(self.schema_struct),
+            self.colmap, partition.partition_values)).to_batches()
 
 
-def _check_constraints_unchanged(table: str, planned: dict) -> None:
-    """Claim-loop twin of ``TxTable._commit``'s MetadataChanged rule:
-    this write's rows were validated (task-side, in ``write()``) against
-    the PLAN-time constraint set; an ``add_constraint`` landing between
-    plan and publish means they were never validated under the fresh
-    rules, so publishing on top would silently break the new invariant
-    — conflict loudly instead."""
-    _, meta, _, _, _ = _fold_snapshot(table)
+def _check_write_rules_unchanged(table: str, meta: dict,
+                                 planned_cons: dict,
+                                 planned_gen: dict) -> None:
+    """The claim-loop re-check of the write rules against the ``meta``
+    of the version this write is about to publish on — TxTable._commit's
+    MetadataChanged rule over the FULL write-rule surface: the CHECK
+    constraint set, the generated-column expressions, and the identity
+    refusal gate. This write's rows were validated (task-side, in
+    ``write()``) against the PLAN-time rules; any of them changing
+    between plan and publish means publishing on top would silently
+    break the new invariant — conflict loudly instead."""
     cons = meta.get("constraints") or {}
-    if cons != (planned or {}):
+    if cons != (planned_cons or {}):
         raise RuntimeError(
             f"table metadata of {table} changed under this write "
-            f"(CHECK constraints {sorted(planned or {})} -> "
+            f"(CHECK constraints {sorted(planned_cons or {})} -> "
             f"{sorted(cons)}); the staged rows were validated under "
             f"the old rules - re-run the write")
-
-
-def _check_write_rules_unchanged(table: str, planned_cons: dict,
-                                 planned_gen: dict) -> None:
-    """The claim-loop re-check over the FULL write-rule surface: the
-    constraint set, the generated-column expressions, and the two
-    plan-time refusal gates (identity, appendOnly). Any of them
-    changing between plan and publish means this write's rows were
-    validated (or admitted) under stale rules."""
-    _check_constraints_unchanged(table, planned_cons)
-    _, meta, _, _, _ = _fold_snapshot(table)
     gen = meta.get("generated") or {}
     if gen != (planned_gen or {}):
         raise RuntimeError(
@@ -478,69 +395,33 @@ def _validate_chunk_constraints(rows: list, fields: list,
         con.close()
 
 
-def _claim_commit(table: str, version: int, payload: str) -> bool:
-    """Atomically publish ``version`` with its COMPLETE content via
-    tmp + hard link (the local-FS model of object-store put-if-absent —
-    claim-then-write would leave a torn, forever-claimed version on a
-    crash). False when the version is already taken (caller re-checks
-    the snapshot and retries). Auto-checkpoints every 10th version
-    (TxTable.CHECKPOINT_INTERVAL), best-effort."""
-    import uuid
-
-    log = os.path.join(table, _LOG_DIR)
-    target = os.path.join(log, f"{version:020d}.json")
-    if os.path.exists(target):
+def _claim_commit(io: LocalLogIO, version: int, payload: str) -> bool:
+    """Atomically publish ``version`` with its COMPLETE content (the
+    core's local tmp + hard-link publish — claim-then-write would leave
+    a torn, forever-claimed version on a crash). False when the version
+    is already taken (caller re-checks the snapshot and retries).
+    Auto-checkpoints every CHECKPOINT_INTERVAL versions, best-effort: a
+    failure only costs fold speed, so a pure-DataSource writer keeps
+    the log's O(interval) fold bound without ever owning a session."""
+    if not io.write(commit_name(version), payload.encode("utf-8")):
         return False
-    tmp = os.path.join(log, f"{uuid.uuid4().hex}.json.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(payload)
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        return False  # lost the race
-    finally:
-        os.unlink(tmp)
-    if version % 10 == 0:
+    if version % CHECKPOINT_INTERVAL == 0:
         try:
-            _write_checkpoint_plain(table, version)
+            write_checkpoint(io, replay(io, version))
         except Exception:
             pass  # maintenance only; the commit IS published
     return True
 
 
-def _write_checkpoint_plain(table: str, version: int) -> None:
-    """Plain-IO twin of ``TxTable.write_checkpoint`` (meta + txn + add
-    lines, exclusive-create, idempotent) so a pure-DataSource writer
-    keeps the log's O(interval) fold bound without ever owning a
-    session. Best-effort by contract: failure only costs fold speed."""
-    v, meta, live, txns, proto = _fold_snapshot(table, version)
-    target = os.path.join(table, _LOG_DIR, f"{v:020d}{_CKPT}")
-    # protocol FIRST (matches TxTable.write_checkpoint): it must survive
-    # checkpoint-accelerated folds or the version gate silently vanishes
-    lines = ([json.dumps({"protocol": proto}, sort_keys=True)]
-             if proto else [])
-    lines.append(json.dumps({"meta": meta}, sort_keys=True))
-    lines += [json.dumps({"txn": {"appId": a, "version": txns[a]}},
-                         sort_keys=True) for a in sorted(txns)]
-    lines += [json.dumps({"add": live[p]}, sort_keys=True)
-              for p in sorted(live)]
-    # Count trailer — readers reject a checkpoint truncated at a newline
-    # boundary as torn (matches TxTable.write_checkpoint's format).
-    lines.append(json.dumps({"count": len(lines)}))
-    if os.path.exists(target):
-        return
-    # tmp + hard link: the checkpoint appears with its COMPLETE content
-    # or not at all (a torn checkpoint would poison every later fold)
-    import uuid
-    tmp = os.path.join(table, _LOG_DIR, f"{uuid.uuid4().hex}.ckpt.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write("\n".join(lines))
-    try:
-        os.link(tmp, target)
-    except OSError:
-        pass  # exists (benign equal-content race) or unwritable
-    finally:
-        os.unlink(tmp)
+def _remove_staged(table: str, messages) -> None:
+    """Delete the files a write's tasks staged (abort, or a replayed
+    streaming batch). Best-effort: vacuum sweeps leftovers."""
+    for m in messages:
+        for a in (m.adds or []) if m is not None else []:
+            try:
+                os.remove(os.path.join(table, a["path"]))
+            except OSError:
+                pass
 
 
 @dataclass
@@ -551,21 +432,6 @@ class TxWriteMessage(WriterCommitMessage):
     Flat tables stage one file per task; partitioned tables one file
     per (task, partition)."""
     adds: list | None  # None: empty partition, nothing staged
-
-
-def _stat_scalar(v):
-    """JSON-encodable advisory bound — plain-IO twin of
-    ``operators.txlog._json_scalar`` (same degrade-to-None contract:
-    a lossy bound may only keep a file, never skip a match)."""
-    import datetime
-    import decimal
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    return None
 
 
 class TxLogBatchWriter(DataSourceWriter):
@@ -591,7 +457,8 @@ class TxLogBatchWriter(DataSourceWriter):
             raise ValueError("txlog requires option 'path'")
         self.table = path.rstrip("/")
         self.overwrite = overwrite
-        v, meta, live, _, proto = _fold_snapshot(self.table)
+        self._io = LocalLogIO(self.table)
+        v, meta, live, _, proto = replay(self._io)
         check_protocol(proto, f"{self.table} (txlog DataSource writer)",
                        writer=_WRITER_CAP)
         self.partition_cols = meta.get("partition_cols") or []
@@ -776,15 +643,15 @@ class TxLogBatchWriter(DataSourceWriter):
             to_phys = self.colmap.get  # log artifacts speak physical
             add = {"path": st["name"], "numRecords": st["n"],
                    "stats": {to_phys(c, c): (
-                       [_stat_scalar(st["mins"][c]),
-                        _stat_scalar(st["maxs"][c])]
+                       [stat_scalar(st["mins"][c]),
+                        stat_scalar(st["maxs"][c])]
                        if c in st["mins"] else [None, None])
                              for c in stat_cols},
                    "nullCounts": {to_phys(c, c): v
                                   for c, v in st["nulls"].items()}}
             if pcols:
                 add["partitionValues"] = {
-                    c: _stat_scalar(v)
+                    c: stat_scalar(v)
                     for c, v in zip(pcols, st["pkey"])}
             adds.append(add)
         return TxWriteMessage(adds=adds or None)
@@ -795,17 +662,16 @@ class TxLogBatchWriter(DataSourceWriter):
         while True:
             # Re-checked INSIDE the claim loop (not only at plan time):
             # an add_constraint landing between plan and publish means
-            # this write's rows were validated under the OLD rules
-            # (the TxTable._commit MetadataChanged rule, mirrored here).
-            _check_write_rules_unchanged(self.table, self.constraints,
+            # this write's rows were validated under the OLD rules.
+            latest, meta, _, _, _ = replay(self._io)
+            _check_write_rules_unchanged(self.table, meta, self.constraints,
                                          self.generated)
-            latest = _latest_version(self.table)
             if self.overwrite and latest != self.read_version:
                 raise RuntimeError(
                     f"overwrite of {self.table} raced a concurrent commit "
                     f"(v{self.read_version} -> v{latest}); re-run on the "
                     f"new snapshot")
-            if _claim_commit(self.table, latest + 1, payload):
+            if _claim_commit(self._io, latest + 1, payload):
                 return
 
     def commit(self, messages) -> None:
@@ -819,12 +685,7 @@ class TxLogBatchWriter(DataSourceWriter):
         self._publish(actions)
 
     def abort(self, messages) -> None:
-        for m in messages:
-            for a in (m.adds or []) if m is not None else []:
-                try:
-                    os.remove(os.path.join(self.table, a["path"]))
-                except OSError:
-                    pass  # best-effort cleanup; vacuum sweeps leftovers
+        _remove_staged(self.table, messages)
 
 
 class TxLogStreamWriter(DataSourceStreamWriter):
@@ -861,14 +722,6 @@ class TxLogStreamWriter(DataSourceStreamWriter):
     def write(self, iterator) -> TxWriteMessage:
         return self._delegate.write(iterator)
 
-    def _drop_staged(self, messages) -> None:
-        for m in messages:
-            for a in (m.adds or []) if m is not None else []:
-                try:
-                    os.remove(os.path.join(self.table, a["path"]))
-                except OSError:
-                    pass
-
     def commit(self, messages, batchId: int) -> None:
         adds = [{"add": a} for m in messages
                 if m is not None for a in (m.adds or [])]
@@ -876,24 +729,24 @@ class TxLogStreamWriter(DataSourceStreamWriter):
                             "version": int(batchId)}}] + adds
         payload = commit_payload(actions + [_info_action(
             "append", writer="stream", batch_id=int(batchId))])
+        io = self._delegate._io
         while True:
             # Same in-loop re-check as TxLogBatchWriter._publish: a
             # constraint committed after plan time must refuse this
             # batch's unvalidated rows, not race past them.
-            _check_write_rules_unchanged(self.table,
+            latest, meta, _, txns, _ = replay(io)
+            _check_write_rules_unchanged(self.table, meta,
                                          self._delegate.constraints,
                                          self._delegate.generated)
-            latest = _latest_version(self.table)
-            _, _, _, txns, _ = _fold_snapshot(self.table)
             if txns.get(self.app_id, -1) >= batchId:
-                self._drop_staged(messages)   # replayed batch: no-op
+                _remove_staged(self.table, messages)  # replayed: no-op
                 return
-            if _claim_commit(self.table, latest + 1, payload):
+            if _claim_commit(io, latest + 1, payload):
                 return
             # lost the claim: re-check the txn ledger and retry
 
     def abort(self, messages, batchId: int) -> None:
-        self._drop_staged(messages)
+        _remove_staged(self.table, messages)
 
 
 class TxLogDataSource(DataSource):
@@ -907,9 +760,9 @@ class TxLogDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("txlog requires option 'path'")
-        _, meta, _, _, _ = _fold_snapshot(
-            path.rstrip("/"), _resolve_version(self.options,
-                                               path.rstrip("/")))
+        table = path.rstrip("/")
+        _, meta, _, _, _ = replay(LocalLogIO(table),
+                                  _resolve_version(self.options, table))
         return StructType.fromJson(meta["schema"])
 
     def reader(self, schema) -> TxLogBatchReader:

@@ -19,17 +19,19 @@ consumer's assumed base; default 0 (follow everything after the create
 commit; the create's rows themselves are the version-0 snapshot a consumer
 bootstraps from via ``TxTable.read(version=0)``).
 
-Everything here runs WITHOUT a SparkSession: the log is one JSON-lines
-file per version read with plain IO on the driver, and each partition is
-ONE data file read with pyarrow on an executor — the planner never touches
-row data, the workers never touch the log. Vacuumed files limit how far
-back a fresh stream can start, exactly like Delta's CDF-vs-vacuum
-contract (:meth:`TxTable.read_changes` documents it).
+Everything here runs WITHOUT a SparkSession. The log is replayed by the
+one core in ``operators/txproto.py`` over its plain-``os`` log IO: the
+schema and the window-start snapshot come from ``replay``, and each
+micro-batch's files come from ``walk_changes`` — the same walk
+:meth:`TxTable.read_changes` nets, so the two feeds cannot disagree.
+Each partition is ONE data file read with pyarrow on an executor; the
+planner never touches row data. Vacuumed files limit how far back a
+fresh stream can start, exactly like Delta's CDF-vs-vacuum contract
+(:meth:`TxTable.read_changes` documents it).
 """
 
 from __future__ import annotations
 
-import json
 import os
 from collections import Counter
 from collections.abc import Iterator, Sequence
@@ -42,129 +44,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..operators.txproto import (check_protocol, parse_commit_lines,
-                                 parse_partition_values)
-
-_LOG_DIR = "_txlog"
-
-# This stream's own reader capability: partition columns fill from
-# partitionValues (reader 2) AND deletion vectors apply merge-on-read
-# in the executor workers (reader 3) — the plain-IO tier reads
-# everything the TxTable writers produce.
-_READER_CAP = 4  # r14: column mapping (reader 4) understood
-_CKPT = ".checkpoint.json"
-
-
-def _log_path(table: str, version: int) -> str:
-    return os.path.join(table, _LOG_DIR, f"{version:020d}.json")
-
-
-def _latest_version(table: str) -> int:
-    log = os.path.join(table, _LOG_DIR)
-    if not os.path.isdir(log):
-        raise ValueError(f"{table} is not a txlog table (no {_LOG_DIR})")
-    # f[:-5] (strip ".json") must be ALL digits: "…checkpoint.json"
-    # snapshot files share the directory and must not parse as commits.
-    versions = [int(f[:-5]) for f in os.listdir(log)
-                if f.endswith(".json") and f[:-5].isdigit()]
-    if not versions:
-        raise ValueError(f"{table} has no commits")
-    return max(versions)
-
-
-def _read_commit(table: str, version: int) -> list[dict]:
-    # Same tear-detecting parse as TxTable._read_commit: this runs inside
-    # executor Python workers, and a torn commit folded silently here
-    # would ship a wrong CDC batch with no error anywhere.
-    with open(_log_path(table, version), encoding="utf-8") as fh:
-        return parse_commit_lines(fh.read().splitlines(),
-                                  f"{table}@v{version}")
-
-
-def _merge_dv_plain(cur: dict | None, new: dict) -> dict:
-    """Plain-IO twin of ``txlog._merge_dv`` (tombstone-set union) —
-    raising identically on a keyCols mismatch so the two fold tiers
-    never diverge on a malformed log."""
-    if cur is None:
-        return {"keyCols": list(new["keyCols"]),
-                "keys": [list(k) for k in new["keys"]]}
-    if list(cur["keyCols"]) != list(new["keyCols"]):
-        raise ValueError(
-            f"deletion vectors on one file must share key columns "
-            f"({cur['keyCols']} vs {new['keyCols']})")
-    seen = {tuple(k) for k in cur["keys"]}
-    merged = [list(k) for k in cur["keys"]]
-    merged += [list(k) for k in new["keys"] if tuple(k) not in seen]
-    return {"keyCols": list(cur["keyCols"]), "keys": merged}
-
-
-def fold_snapshot(table: str, version: int | None = None,
-                  reader_cap: int = _READER_CAP):
-    """Plain-IO twin of ``TxTable._snapshot``: (version, meta, live,
-    txns, protocol), folding forward from the newest checkpoint
-    at-or-before the target version — session-free, so scan planning
-    never needs a JVM. Deletion vectors accumulate INTO the folded add
-    entries (``add["dv"]``), exactly like the TxTable fold. Raises
-    ``TxProtocolError`` when the table's declared protocol exceeds
-    ``reader_cap``."""
-    latest = _latest_version(table)
-    v = latest if version is None else version
-    if not 0 <= v <= latest:
-        raise ValueError(f"versionAsOf {v} out of range 0..{latest}")
-    log = os.path.join(table, _LOG_DIR)
-    ckpts = [int(f[:-len(_CKPT)]) for f in os.listdir(log)
-             if f.endswith(_CKPT) and f[:-len(_CKPT)].isdigit()
-             and int(f[:-len(_CKPT)]) <= v]
-    meta: dict = {}
-    live: dict[str, dict] = {}
-    txns: dict[str, int] = {}
-    proto: dict = {}
-
-    def fold(action: dict) -> None:
-        if "meta" in action:
-            meta.clear()
-            meta.update(action["meta"])
-        elif "add" in action:
-            live[action["add"]["path"]] = action["add"]
-        elif "remove" in action:
-            live.pop(action["remove"]["path"], None)
-        elif "dv" in action:
-            cur = live.get(action["dv"]["path"])
-            if cur is not None:
-                live[action["dv"]["path"]] = {
-                    **cur, "dv": _merge_dv_plain(cur.get("dv"),
-                                                 action["dv"])}
-        elif "txn" in action:
-            a, ver = action["txn"]["appId"], action["txn"]["version"]
-            txns[a] = max(ver, txns.get(a, ver))
-        elif "protocol" in action:
-            proto.clear()
-            proto.update(action["protocol"])
-
-    start = 0
-    for cv in sorted(ckpts, reverse=True):
-        try:
-            with open(os.path.join(log, f"{cv:020d}{_CKPT}"),
-                      encoding="utf-8") as fh:
-                actions = [json.loads(line) for line in fh if line.strip()]
-            # count-trailer validation: a newline-boundary truncation
-            # parses fine but silently omits live files — torn.
-            if not actions or actions[-1].get("count") != len(actions) - 1:
-                raise ValueError("torn checkpoint (count trailer)")
-        except Exception:
-            continue  # torn/unreadable checkpoint: older one or full fold
-        for action in actions[:-1]:
-            fold(action)
-        start = cv + 1
-        break
-    for i in range(start, v + 1):
-        for action in _read_commit(table, i):
-            fold(action)
-    if not meta:
-        raise ValueError(f"{table}: no meta action found in the log")
-    check_protocol(proto, f"{table} (plain-IO txlog source)",
-                   reader=reader_cap)
-    return v, meta, live, txns, proto
+from ..operators.txproto import (LocalLogIO, latest_version,
+                                 parse_partition_values, replay,
+                                 walk_changes)
 
 
 def _key_rows(table, key_cols, partition_values, n):
@@ -201,54 +83,32 @@ def _dv_mask(table, dv: dict, partition_values, keep_matching: bool):
     return pa.array([(t in keyset) == keep_matching for t in rows])
 
 
+def _project(table, fields, target, colmap: dict, pv: dict | None) -> dict:
+    """Project one data file onto the table's LOGICAL columns ``fields``
+    (``target``: their arrow schema) — the scan workers' shared step.
+    Files speak PHYSICAL names on column-mapped tables; hive partition
+    columns (absent from file data) fill as typed constants from the
+    path's ``pv``; columns added after the file was written (schema
+    evolution) null-fill with the TYPED arrow field."""
+    import pyarrow as pa
+    n = table.num_rows
+    present = set(table.column_names)
+    pv = pv or {}
+    cols = {}
+    for i, name in enumerate(fields):
+        typ = target.field(i).type
+        pname = colmap.get(name, name)
+        if pname in present:
+            cols[name] = table.column(pname).cast(typ).combine_chunks()
+        elif pv.get(name) is not None:
+            cols[name] = pa.array([pv[name]] * n).cast(typ)
+        else:
+            cols[name] = pa.nulls(n, type=typ)
+    return cols
+
+
 def _table_schema(table: str) -> StructType:
-    return StructType.fromJson(_table_meta(table)["schema"])
-
-
-def _table_meta(table: str) -> dict:
-    """Resolve the CURRENT table meta: the newest meta action wins (schema
-    evolution via merge_schema writes a fresh meta in the evolving
-    commit). Bounded scan: start from the newest checkpoint's meta (the
-    checkpoint file carries the folded meta first) and only read the
-    commits past it — same O(interval) contract as TxTable._snapshot,
-    with plain IO only."""
-    log = os.path.join(table, _LOG_DIR)
-    latest = _latest_version(table)
-    ckpts = [int(f[:-len(".checkpoint.json")]) for f in os.listdir(log)
-             if f.endswith(".checkpoint.json")
-             and f[:-len(".checkpoint.json")].isdigit()]
-    meta: dict = {}
-    proto: dict = {}
-    start = 0
-    for cv in sorted(ckpts, reverse=True):
-        try:
-            with open(os.path.join(log, f"{cv:020d}.checkpoint.json"),
-                      encoding="utf-8") as fh:
-                for line in fh:
-                    if line.strip():
-                        action = json.loads(line)
-                        if "protocol" in action:
-                            proto = action["protocol"]
-                        if "meta" in action:
-                            meta = action["meta"]
-                            break  # protocol precedes meta in checkpoints
-        except Exception:
-            continue  # torn/unreadable checkpoint: older one or full scan
-        start = cv + 1
-        break
-    for v in range(start, latest + 1):
-        for action in _read_commit(table, v):
-            if "meta" in action:
-                meta = action["meta"]
-            elif "protocol" in action:
-                proto = action["protocol"]
-    if not meta:
-        raise ValueError(f"{table}: no meta action found in the log")
-    # version gate: a protocol beyond this tier's declared capability
-    # refuses loudly instead of folding a snapshot it cannot interpret
-    check_protocol(proto, f"{table} (txlog_cdc stream)",
-                   reader=_READER_CAP)
-    return meta
+    return StructType.fromJson(replay(LocalLogIO(table)).meta["schema"])
 
 
 @dataclass
@@ -302,11 +162,11 @@ class TxLogCdcStreamReader(DataSourceStreamReader):
                              "for unbounded)")
         self._floor: int | None = None  # newest version known released
         self._answered: int | None = None  # last capped latestOffset
-        latest = _latest_version(self.table)
+        self._io = LocalLogIO(self.table)
+        latest, meta, _, _, _ = replay(self._io)
         if not 0 <= self.start <= latest:
             raise ValueError(
                 f"startingVersion {self.start} out of range 0..{latest}")
-        meta = _table_meta(self.table)
         schema = StructType.fromJson(meta["schema"])
         self.fields = [f.name for f in schema.fields]
         self.partition_cols = meta.get("partition_cols") or []
@@ -322,7 +182,7 @@ class TxLogCdcStreamReader(DataSourceStreamReader):
         return {"version": self.start}
 
     def latestOffset(self) -> dict:
-        latest = _latest_version(self.table)
+        latest = latest_version(self._io)
         if self.max_versions:
             floor = self.start if self._floor is None else self._floor
             ans = min(latest, floor + self.max_versions)
@@ -352,54 +212,28 @@ class TxLogCdcStreamReader(DataSourceStreamReader):
                 f"maxVersionsPerTrigger to catch up safely")
         self._ratchet(start["version"])
         self._ratchet(end["version"])
-        # Deletion-vector state tracked THROUGH the walk, seeded from
-        # the window-start snapshot — the same event semantics as
-        # TxTable.read_changes: a dv action emits exactly its newly
-        # tombstoned rows; a data-changing remove of a tombstoned file
-        # emits only its VISIBLE rows; layout-only swaps stay silent.
-        _, _, state_live, _, _ = fold_snapshot(self.table,
-                                               start["version"])
-        dv_state = {p: a["dv"] for p, a in state_live.items()
-                    if a.get("dv")}
+        # TxTable.read_changes' event semantics via the shared walk: a
+        # dv action emits exactly its newly tombstoned rows; a
+        # data-changing remove of a tombstoned file emits only its
+        # VISIBLE rows; layout-only swaps stay silent.
         adds: list[str] = []
         removes: list[str] = []
         partial: list[tuple[str, dict]] = []   # removed w/ tombstones
         dv_dels: list[tuple[str, dict]] = []   # newly tombstoned keys
-        for v in range(start["version"] + 1, end["version"] + 1):
-            for action in _read_commit(self.table, v):
-                # Same dataChange filter as TxTable.read_changes: a
-                # compaction swap (optimize) moved rows between files
-                # without changing the table — the stream stays quiet.
-                if "add" in action:
-                    dv_state.pop(action["add"]["path"], None)
-                    if action["add"].get("dataChange", True):
-                        adds.append(action["add"]["path"])
-                elif "remove" in action:
-                    rp = action["remove"]["path"]
-                    dv = dv_state.pop(rp, None)
-                    if action["remove"].get("dataChange", True):
-                        if dv:
-                            partial.append((rp, dv))
-                        else:
-                            removes.append(rp)
-                elif "dv" in action:
-                    d = action["dv"]
-                    cur = dv_state.get(d["path"])
-                    seen = ({tuple(k) for k in cur["keys"]}
-                            if cur else set())
-                    fresh = [list(k) for k in d["keys"]
-                             if tuple(k) not in seen]
-                    if fresh:
-                        dv_dels.append((d["path"],
-                                        {"keyCols": list(d["keyCols"]),
-                                         "keys": fresh}))
-                    dv_state[d["path"]] = _merge_dv_plain(cur, d)
-        # Multiset netting (same fix as TxTable.read_changes): RESTORE
-        # re-adds a removed path, so add/remove counts inside one window
-        # can be unbalanced — net by Counter difference, never by set
-        # intersection, or a remove + later re-add cancels to nothing.
-        # (Partial removals never participate: their rows are not the
-        # full file.)
+        for ch in walk_changes(self._io, start["version"],
+                               end["version"]):
+            if ch.kind == "add":
+                adds.append(ch.path)
+            elif ch.kind == "remove":
+                removes.append(ch.path)
+            else:
+                (partial if ch.kind == "partial" else dv_dels).append(
+                    (ch.path, ch.dv))
+        # Multiset netting: RESTORE re-adds a removed path, so add/remove
+        # counts inside one window can be unbalanced — net by Counter
+        # difference, never by set intersection, or a remove + later
+        # re-add cancels to nothing. (Partial removals never
+        # participate: their rows are not the full file.)
         add_c, rem_c = Counter(adds), Counter(removes)
 
         def part(p: str, tag: str, dvf=None) -> CdcFilePartition:
@@ -433,35 +267,22 @@ class TxLogCdcStreamReader(DataSourceStreamReader):
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        meta = _table_meta(self.table)
+        meta = replay(self._io).meta
         target = to_arrow_schema(StructType.fromJson(meta["schema"]))
-        # column-mapped tables: files + dv keyCols speak PHYSICAL names;
-        # the feed is emitted under the CURRENT logical names (same
-        # to-version contract as TxTable.read_changes)
-        cmap = meta.get("column_mapping") or {}
         table = pq.read_table(partition.file_path)
         if partition.dv_filter is not None:
             mode, dv = partition.dv_filter
             table = table.filter(_dv_mask(table, dv,
                                           partition.partition_values,
                                           keep_matching=(mode == "semi")))
-        n = table.num_rows
-        present = set(table.column_names)
-        pv = partition.partition_values or {}
-        cols = {}
-        for i, name in enumerate(self.fields):
-            typ = target.field(i).type
-            pname = cmap.get(name, name)
-            if pname in present:
-                cols[name] = (table.column(pname).cast(typ)
-                              .combine_chunks())
-            elif name in pv and pv[name] is not None:
-                # hive partition column: constant, typed from the path
-                cols[name] = pa.array([pv[name]] * n).cast(typ)
-            else:
-                cols[name] = pa.nulls(n, type=typ)
-        cols["_change_type"] = pa.array([partition.change_type] * n,
-                                        type=pa.string())
+        # column-mapped tables: the feed is emitted under the CURRENT
+        # logical names (same to-version contract as
+        # TxTable.read_changes)
+        cols = _project(table, self.fields, target,
+                        meta.get("column_mapping") or {},
+                        partition.partition_values)
+        cols["_change_type"] = pa.array([partition.change_type]
+                                        * table.num_rows, type=pa.string())
         yield from pa.table(cols).to_batches()
 
     def commit(self, end: dict) -> None:  # engine owns progression

@@ -2907,3 +2907,22 @@ def test_mmr_rerank_enforces_candidate_cap(spark):
         [], "id_a bigint, id_b bigint, sim double")
     with pytest.raises(ValueError, match="MMR_MAX_CANDS"):
         mmr_rerank(cands, psim, k=3)
+
+
+def test_mmr_rerank_refuses_oversized_psim(spark, monkeypatch):
+    """The pair table is caller input too: one row past
+    MMR_MAX_CANDS**2 raises instead of being silently truncated (which
+    would drop similarity edges and change the selection); exactly
+    MMR_MAX_CANDS**2 rows still rerank."""
+    from meteomatics_e2e_data_pipeline_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "MMR_MAX_CANDS", 3)
+    cands = spark.createDataFrame(
+        [(1, 0.9), (2, 0.8), (3, 0.7)], "doc_id bigint, rel double")
+    ddl = "id_a bigint, id_b bigint, sim double"
+    pairs = [(a, b, 0.5) for a in (1, 2, 3) for b in (1, 2, 3)]
+    psim = spark.createDataFrame(pairs, ddl)
+    assert similarity.mmr_rerank(cands, psim, k=2).count() == 2
+    wide = spark.createDataFrame(pairs + [(4, 1, 0.1)], ddl)
+    with pytest.raises(ValueError, match="psim exceeds"):
+        similarity.mmr_rerank(cands, wide, k=2)

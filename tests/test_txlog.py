@@ -533,11 +533,12 @@ def _heavy_test_legacy_checkpoint_is_regenerated_in_place(spark, tmp_path):
     # strip the trailer -> the legacy on-disk format
     with open(ckpt, "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines[:-1]))
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import read_checkpoint
     with pytest.raises(ValueError, match="torn"):
-        t._read_checkpoint(v)
+        read_checkpoint(t._io, v)
     # idempotent call upgrades the file in place...
     assert t.write_checkpoint(v) == v
-    meta, live, _, proto = t._read_checkpoint(v)
+    meta, live, _, proto = read_checkpoint(t._io, v)
     assert meta and live and proto  # protocol survives the regeneration
     # ...and snapshot folds accelerate from it again
     from collections import Counter

@@ -232,10 +232,10 @@ def test_stream_sink_txn_guard_makes_replay_a_noop(spark, tmp_path):
     # the ledger survives checkpointing on BOTH fold paths
     t.write_checkpoint()
     assert t.last_txn("q1") == 0 and t.last_txn("q2") == 1
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_batch import (
-        _fold_snapshot,
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        LocalLogIO, replay,
     )
-    _, _, _, txns, _ = _fold_snapshot(p)
+    _, _, _, txns, _ = replay(LocalLogIO(p))
     assert txns == {"q1": 0, "q2": 1}
 
 

@@ -211,10 +211,11 @@ def _heavy_test_guardrails_and_protocol_gate(spark, tmp_path):
         [("DE", 7, 70), ("EE", 2, 20)])
     # PRE-mapping clients refuse (the protocol gate: an older reader
     # would surface physical names as logical and miss the rename) ...
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_stream import (
-        fold_snapshot)
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        LocalLogIO, check_protocol, replay)
     with pytest.raises(TxProtocolError, match="minReader=4"):
-        fold_snapshot(str(tmp_path / "t"), reader_cap=3)
+        check_protocol(replay(LocalLogIO(str(tmp_path / "t"))).protocol,
+                       str(tmp_path / "t"), reader=3)
     # ... while THIS tier's plain-IO DataSources (cap 4) read AND write
     # mapped tables: the V2 writer stages under physical names
     from meteomatics_e2e_data_pipeline_spark.sources import txlog_batch

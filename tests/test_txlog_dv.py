@@ -241,11 +241,10 @@ def _heavy_test_dv_guardrails(spark, tmp_path):
         t2._commit([{"dv": {"path": tombstoned, "keyCols": ["k2"],
                             "keys": [[104]]}}], rv2)
     # the plain-IO fold raises identically on a malformed log
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_stream import (
-        _merge_dv_plain)
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import merge_dv
     with pytest.raises(ValueError, match="share key columns"):
-        _merge_dv_plain({"keyCols": ["k"], "keys": [[1]]},
-                        {"keyCols": ["k2"], "keys": [[2]]})
+        merge_dv({"keyCols": ["k"], "keys": [[1]]},
+                 {"keyCols": ["k2"], "keys": [[2]]})
 
 
 _POOLED = {n: fn for n, fn in [

@@ -457,9 +457,9 @@ def _heavy_test_in_commit_timestamps(spark, tmp_path):
     assert {r["k"] for r in t.read(
         version=t.version_at(marks[2])).collect()} == {1, 2, 3}
     # the plain-IO twin honors the property the same way
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_batch import (
-        _version_at)
-    assert _version_at(p, marks[1]) == 1
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        LocalLogIO, version_at)
+    assert version_at(LocalLogIO(p), marks[1]) == 1
 
 
 def _heavy_test_ict_enablement_not_retroactive(spark, tmp_path):
@@ -487,10 +487,10 @@ def _heavy_test_ict_enablement_not_retroactive(spark, tmp_path):
     assert t.version_at(250.0) == 1
     # post-enablement commits resolve by their clamped recorded ts
     assert t.version_at(t._commit_ts(3)) == 3
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_batch import (
-        _version_at)
-    assert _version_at(p, 150.0) == 0
-    assert _version_at(p, 250.0) == 1
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        LocalLogIO, version_at)
+    assert version_at(LocalLogIO(p), 150.0) == 0
+    assert version_at(LocalLogIO(p), 250.0) == 1
 
 
 def _heavy_test_auto_compact_property(spark, tmp_path):

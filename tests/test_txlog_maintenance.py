@@ -50,8 +50,10 @@ def _heavy_test_checkpoints_bound_snapshot_fold_and_stay_exact(spark, tmp_path):
     # commit reads per snapshot: only the tail past the newest checkpoint
     fresh = TxTable(spark, p)
     reads = []
-    orig = TxTable._read_commit
-    fresh._read_commit = lambda v: (reads.append(v), orig(fresh, v))[1]
+    orig = fresh._io.read
+    fresh._io.read = lambda name: (
+        reads.append(int(name[:-5])) if name[:-5].isdigit() else None,
+        orig(name))[1]
     fresh.live_files()                      # latest = 24, checkpoint at 20
     assert reads == [21, 22, 23, 24]
     reads.clear()
@@ -63,12 +65,13 @@ def _heavy_test_checkpoints_bound_snapshot_fold_and_stay_exact(spark, tmp_path):
 
     # exactness: every fold equals the checkpoint-free fold
     def fold_from_zero(tbl, v):
-        ckpts = tbl._checkpoint_versions
-        tbl._checkpoint_versions = lambda: []
+        listing = tbl._io.list
+        tbl._io.list = lambda: {n: m for n, m in listing().items()
+                                if not n.endswith(".checkpoint.json")}
         try:
             return tbl._snapshot(version=v)
         finally:
-            tbl._checkpoint_versions = ckpts
+            del tbl._io.list
 
     for v in (0, 7, 10, 13, 20, 24):
         assert t._snapshot(version=v) == fold_from_zero(t, v)
@@ -80,7 +83,6 @@ def _heavy_test_checkpoints_bound_snapshot_fold_and_stay_exact(spark, tmp_path):
     assert t.write_checkpoint() == 24
     assert t.write_checkpoint() == 24      # second call: no-op, same v
     reads.clear()
-    fresh._checkpoint_versions = TxTable._checkpoint_versions.__get__(fresh)
     fresh.live_files()
     assert reads == []                     # folded purely from checkpoint 24
 
@@ -333,8 +335,8 @@ def _heavy_test_torn_checkpoint_is_skipped_and_publish_is_atomic(spark, tmp_path
     commit fold; and publishes go through tmp+hard-link, so the log
     directory never holds a half-written versioned file (no .tmp
     leftovers either)."""
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_batch import (
-        _fold_snapshot,
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        LocalLogIO, replay,
     )
     from meteomatics_e2e_data_pipeline_spark.sources.txlog_stream import (
         _table_schema,
@@ -358,8 +360,8 @@ def _heavy_test_torn_checkpoint_is_skipped_and_publish_is_atomic(spark, tmp_path
     fresh = TxTable(spark, p)
     assert fresh.live_files() == want_live       # full-fold fallback
     assert fresh.read().count() == want_rows
-    assert fresh._fold_txns() == {}
-    _, _, live, _, _ = _fold_snapshot(p)
+    assert replay(fresh._io).txns == {}
+    _, _, live, _, _ = replay(LocalLogIO(p))
     assert sorted(live) == want_live
     assert [f.name for f in _table_schema(p).fields] == ["k", "v"]
 
@@ -387,8 +389,8 @@ def _heavy_test_timestamp_time_travel_and_checkpoint_vacuum(spark, tmp_path):
 
     import pytest
 
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_batch import (
-        _version_at,
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        LocalLogIO, version_at,
     )
 
     p = str(tmp_path / "t")
@@ -404,7 +406,7 @@ def _heavy_test_timestamp_time_travel_and_checkpoint_vacuum(spark, tmp_path):
     assert t.version_at(1_700_000_000) == 0
     assert t.version_at(1_700_000_000 + 5 * 60 + 30) == 5
     assert t.version_at(time.time()) == 22
-    assert _version_at(p, 1_700_000_000 + 5 * 60 + 30) == 5
+    assert version_at(LocalLogIO(p), 1_700_000_000 + 5 * 60 + 30) == 5
     with pytest.raises(ValueError, match="no commit at or before"):
         t.version_at(1_600_000_000)
     assert t.read(timestamp=1_700_000_000 + 5 * 60).count() == 60
@@ -438,8 +440,8 @@ def _heavy_test_newline_truncated_checkpoint_rejected_by_count_trailer(
     ``{"count": N}`` trailer makes it torn: both fold paths (TxTable and
     the plain-IO DataSource twin) must fall back to the full commit fold
     and stay exact."""
-    from meteomatics_e2e_data_pipeline_spark.sources.txlog_batch import (
-        _fold_snapshot,
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        LocalLogIO, replay,
     )
 
     p = str(tmp_path / "t")
@@ -460,7 +462,7 @@ def _heavy_test_newline_truncated_checkpoint_rejected_by_count_trailer(
     fresh = TxTable(spark, p)
     assert fresh.live_files() == want_live       # full-fold fallback
     assert fresh.read().count() == want_rows
-    _, _, live, _, _ = _fold_snapshot(p)
+    _, _, live, _, _ = replay(LocalLogIO(p))
     assert sorted(live) == want_live
 
     # a truncation that keeps the trailer line itself is caught too
@@ -468,7 +470,7 @@ def _heavy_test_newline_truncated_checkpoint_rejected_by_count_trailer(
     with open(ck, "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines[:-3] + [lines[-1]]) + "\n")
     assert TxTable(spark, p).live_files() == want_live
-    _, _, live, _, _ = _fold_snapshot(p)
+    _, _, live, _, _ = replay(LocalLogIO(p))
     assert sorted(live) == want_live
 
 

@@ -101,7 +101,8 @@ def _heavy_test_protocol_survives_checkpoint_accelerated_folds(spark, tmp_path):
     t = _t(spark, tmp_path)
     _stamp(t, {"minReader": 2, "minWriter": 2})
     ckpt_v = t.write_checkpoint()
-    meta, live, txns, proto = t._read_checkpoint(ckpt_v)
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import read_checkpoint
+    meta, live, txns, proto = read_checkpoint(t._io, ckpt_v)
     assert proto == {"minReader": 2, "minWriter": 2} and meta and live
     # a fold that STARTS from the checkpoint (not commit 0) still
     # carries the gate — the stamped protocol is seen without ever

@@ -21,8 +21,8 @@ import pytest
 
 from meteomatics_e2e_data_pipeline_spark.operators.txlog import TxTable
 from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
-    TxCorruption, commit_payload, is_torn, parse_commit_lines)
-from meteomatics_e2e_data_pipeline_spark.sources import txlog_stream
+    LocalLogIO, TxCorruption, commit_payload, is_torn, parse_commit_lines,
+    read_commit)
 
 
 # ---------------------------------------------------------------- protocol
@@ -107,7 +107,7 @@ def _heavy_test_torn_commit_fails_loudly_then_repairs(spark, tmp_path, partial):
     with pytest.raises(TxCorruption):
         t.read_changes(0).collect()
     with pytest.raises(TxCorruption):  # the executor-side parser too
-        txlog_stream._read_commit(str(tmp_path / "torn"), victim)
+        read_commit(LocalLogIO(str(tmp_path / "torn")), victim)
 
     # refusal guard: an intact commit is never "repairable"
     with pytest.raises(ValueError, match="refusing"):
