@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .incremental import net_changes
 from .similarity import ivf_assign, knn_ivf_preassigned, quantize_int8
 from .txlog import TxTable
 
@@ -114,12 +115,11 @@ def fold_cdc_ann(changes: DataFrame, st: TxTable,
     :meth:`TxTable.apply_delta`. Net inserts are upserts (an id in the
     insert set sheds its old rows first — idempotent replays, same
     discipline as :func:`~.neardup.fold_cdc_near_dup_delta`)."""
-    ins = changes.filter(F.col("_change_type") == "insert") \
-        .select(id_col, vec_col)
-    dels = changes.filter(F.col("_change_type") == "delete") \
-        .select(id_col, vec_col)
-    net_ins = ins.exceptAll(dels).localCheckpoint(eager=True)
-    net_del = dels.exceptAll(ins)
+    net = net_changes(changes, [id_col, vec_col]).localCheckpoint(
+        eager=True)
+    is_ins = F.col("_change_type") == "insert"
+    net_ins = net.filter(is_ins).select(id_col, vec_col)
+    net_del = net.filter(~is_ins).select(id_col, vec_col)
     del_ids = (net_del.select(id_col)
                .unionByName(net_ins.select(id_col)).distinct()
                .localCheckpoint(eager=True))

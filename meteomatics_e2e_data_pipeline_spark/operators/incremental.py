@@ -38,6 +38,35 @@ def new_files_only(df: DataFrame, existing: DataFrame | None,
     return df.join(seen, on=file_col, how="left_anti")
 
 
+def net_changes(changes: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Net one change-data-feed window: the multiset difference of its
+    ``_change_type='insert'`` and ``'delete'`` rows over ``cols``, both
+    ways, as one feed ``(*cols, _change_type)``.
+
+    A copy-on-write feed carries every untouched row of a rewritten file
+    as both a delete and an insert; netting cancels them, so downstream
+    work follows the rows that really changed. It equals
+    ``ins.exceptAll(dels)`` tagged insert plus ``dels.exceptAll(ins)``
+    tagged delete, computed in ONE signed-count aggregate instead of
+    two: group by ``cols``, sum +1 per insert and -1 per delete, drop
+    zeros, and replicate each surviving row ``|n|`` times under its
+    tag. That is the rewrite Spark applies to each ``exceptAll``
+    (``RewriteExceptAll``), so grouping semantics — nulls group
+    together, NaN and -0.0 are normalized — are the same. Rows with any
+    other tag (update pre/post images) are ignored."""
+    tag = F.col("_change_type")
+    sign = F.when(tag == "insert", 1).otherwise(-1)
+    counted = (changes.filter(tag.isin("insert", "delete"))
+               .groupBy(*cols).agg(F.sum(sign).alias("_n"))
+               .filter(F.col("_n") != 0))
+    return counted.select(
+        *cols,
+        F.when(F.col("_n") > 0, F.lit("insert")).otherwise(F.lit("delete"))
+        .alias("_change_type"),
+        F.explode(F.sequence(F.lit(1), F.abs("_n").cast("int")))
+        .alias("_copy")).drop("_copy")
+
+
 def read_target(spark: SparkSession, target_path: str) -> DataFrame | None:
     """Read an existing parquet target, or None if it doesn't exist yet.
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from .incremental import net_changes
 from .textops import MINHASH_P, base_hash48, tokens
 
 NUM_PERM = 24
@@ -961,8 +962,8 @@ def fold_cdc_near_dup(changes: DataFrame, state: dict,
 
     The feed is FILE-grain copy-on-write: a row carried unchanged
     through a rewrite appears as both delete and insert, so the fold
-    first nets the window (``exceptAll`` both ways) — untouched rows
-    cancel and cost nothing downstream. Then, in CDC order:
+    first nets the window (:func:`~.incremental.net_changes`) —
+    untouched rows cancel and cost nothing downstream. Then, in CDC order:
 
     1. DELETE phase (net-deleted ids, which include the old row of
        every update): pairs touching a deleted id are dropped
@@ -1007,12 +1008,11 @@ def fold_cdc_near_dup(changes: DataFrame, state: dict,
     bands_cur = state.get("bands")
     if bands_cur is None:
         bands_cur = band_rows(minhash_from_shingles(sh_cur, id_col), id_col)
-    ins = changes.filter(F.col("_change_type") == "insert") \
-        .select(id_col, text_col)
-    dels = changes.filter(F.col("_change_type") == "delete") \
-        .select(id_col, text_col)
-    net_ins = ins.exceptAll(dels).localCheckpoint(eager=True)
-    net_del = dels.exceptAll(ins).localCheckpoint(eager=True)
+    net = net_changes(changes, [id_col, text_col]).localCheckpoint(
+        eager=True)
+    is_ins = F.col("_change_type") == "insert"
+    net_ins = net.filter(is_ins).select(id_col, text_col)
+    net_del = net.filter(~is_ins).select(id_col, text_col)
     # Net inserts are treated as UPSERTS: any doc id arriving in the
     # insert set sheds its existing corpus row and edges in the delete
     # phase before re-insertion. In the normal (disjoint) case this
@@ -1111,12 +1111,11 @@ def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
       never rewritten.
     """
     st = state_table
-    ins = changes.filter(F.col("_change_type") == "insert") \
-        .select(id_col, text_col)
-    dels = changes.filter(F.col("_change_type") == "delete") \
-        .select(id_col, text_col)
-    net_ins = ins.exceptAll(dels).localCheckpoint(eager=True)
-    net_del = dels.exceptAll(ins).localCheckpoint(eager=True)
+    net = net_changes(changes, [id_col, text_col]).localCheckpoint(
+        eager=True)
+    is_ins = F.col("_change_type") == "insert"
+    net_ins = net.filter(is_ins).select(id_col, text_col)
+    net_del = net.filter(~is_ins).select(id_col, text_col)
     # Upsert discipline (same as the in-memory fold): an id arriving in
     # the insert set sheds its old rows first, keeping folds idempotent.
     del_ids = (net_del.select(id_col)

@@ -63,6 +63,7 @@ from pyspark.sql.types import StructField, StructType
 
 from . import txproto
 from .genexpr import parse_generation_expr
+from .incremental import net_changes
 from .txproto import (BASE_PROTOCOL, CHECKPOINT_INTERVAL, COLMAP_PROTOCOL,
                       LOG_DIR, PARTITION_PROTOCOL, SUPPORTED_READER,
                       SUPPORTED_WRITER, HadoopLogIO, LocalLogIO, LogState,
@@ -2466,12 +2467,20 @@ class TxTable:
         (2k+1)-scalar agg, so emptiness and bounds cost a single
         driver-synchronous job (the probe chains are latency-bound)."""
         row = batch.agg(F.count(F.lit(1)).alias("_n"),
-                        *[f for k in keys for f in
-                          (F.min(k).alias(f"lo_{k}"),
-                           F.max(k).alias(f"hi_{k}"))]).collect()[0]
-        return int(row["_n"]), {k: (stat_scalar(row[f"lo_{k}"]),
-                                    stat_scalar(row[f"hi_{k}"]))
-                                for k in keys}
+                        *TxTable._bound_aggs(keys)).collect()[0]
+        return int(row["_n"]), TxTable._bounds_of(row, keys)
+
+    @staticmethod
+    def _bound_aggs(keys: Sequence[str]) -> list:
+        """Per-key min/max aggregates for :meth:`_bounds_of`."""
+        return [f for k in keys for f in (F.min(k).alias(f"lo_{k}"),
+                                          F.max(k).alias(f"hi_{k}"))]
+
+    @staticmethod
+    def _bounds_of(row, keys: Sequence[str]) -> dict:
+        """Per-key [min, max] read off a row holding :meth:`_bound_aggs`."""
+        return {k: (stat_scalar(row[f"lo_{k}"]), stat_scalar(row[f"hi_{k}"]))
+                for k in keys}
 
     @staticmethod
     def _overlaps(add: dict, keys: Sequence[str], bounds: dict) -> bool:
@@ -2884,10 +2893,13 @@ class TxTable:
         arbitrary row. Copy-on-write sources never trip this — a
         rewritten row's old value arrives as a delete and nets away.
 
-        The window is netted first (``exceptAll`` both ways), so rows
-        carried unchanged through the source's copy-on-write rewrites
-        cancel and cost nothing — the same discipline as
-        :func:`~..operators.neardup.fold_cdc_near_dup`. Then ONE
+        The window is netted first, once, by
+        :func:`~..operators.incremental.net_changes` (one signed-count
+        aggregate, checkpointed), so rows carried unchanged through the
+        source's copy-on-write rewrites cancel and cost nothing — the
+        same discipline as :func:`~..operators.neardup.fold_cdc_near_dup`.
+        The touched-key count, the key-uniqueness check and the key
+        bounds come from one summary row over that checkpoint. Then ONE
         stat-pruned probe finds the files holding any touched key, and
         one rewrite drops/replaces them: cost ∝ files containing
         touched keys, never table size. A window that nets to nothing
@@ -2909,12 +2921,12 @@ class TxTable:
         extra = [c for c in feed_cols if c not in stored]
         # Net on the FEED's schema (both tags share it), so a widened
         # source column participates in the cancel before conforming.
-        ins = changes.filter(F.col("_change_type") == "insert") \
-            .select(*feed_cols)
-        dels = changes.filter(F.col("_change_type") == "delete") \
-            .select(*feed_cols)
-        net_ins = ins.exceptAll(dels)
-        net_del = dels.exceptAll(ins)
+        # ONE checkpoint of the netted window feeds every later step:
+        # the summary row, the file probe and the staged rewrite.
+        net = net_changes(changes, feed_cols).localCheckpoint(eager=True)
+        is_ins = F.col("_change_type") == "insert"
+        net_ins = net.filter(is_ins).select(*feed_cols)
+        net_del = net.filter(~is_ins).select(*feed_cols)
         evolve_validators: list = []
         new_meta = None
         if extra:
@@ -2928,25 +2940,31 @@ class TxTable:
                 schema = StructType.fromJson(meta["schema"])
         else:
             net_ins = self._check_schema(net_ins)
+        key_rows = (net_ins.select(*keys, F.lit(1).alias("_i"))
+                    .unionByName(net_del.select(*keys, F.lit(0).alias("_i"))))
+        # ONE summary row over the touched keys: their count, the most
+        # netted inserts any key holds, and the key bounds.
+        summary = (key_rows.groupBy(*keys).agg(F.sum("_i").alias("_i"))
+                   .agg(F.count(F.lit(1)).alias("_n"),
+                        F.max("_i").alias("_max_ins"),
+                        *self._bound_aggs(keys)).collect()[0])
         # Keyed replication needs key-unique sources: >1 netted insert
         # per key means the source holds duplicate keys — keeping an
         # arbitrary one would silently diverge the replica (see
-        # docstring). One extra 2-col agg, bounded by the window.
-        dup = (net_ins.groupBy(*keys).count()
-               .filter(F.col("count") > 1).limit(1).collect())
-        if dup:
+        # docstring). Only this error path looks the key up.
+        if (summary["_max_ins"] or 0) > 1:
+            dup = (net_ins.groupBy(*keys).count()
+                   .filter(F.col("count") > 1).limit(1).collect())
             kv = {k: dup[0][k] for k in keys}
             raise ValueError(
                 f"apply_changes on {self.path}: change window nets "
                 f">1 insert for key {kv}; keyed replication requires a "
                 f"key-unique source (copy-on-write sources net to one "
                 f"row per key — duplicate appends of a key do not)")
-        touched = (net_ins.select(*keys)
-                   .unionByName(net_del.select(*keys)).distinct()
-                   .localCheckpoint(eager=True))
-        n_touched, bounds = self._batch_bounds(touched, keys)
-        if n_touched == 0:
+        if summary["_n"] == 0:
             return self.version  # window netted to nothing: no commit
+        bounds = self._bounds_of(summary, keys)
+        touched = key_rows.select(*keys).distinct()
         pkeys, pbounds = self._extend_generated_bounds(meta, keys, bounds)
         cand = self._candidate_files(live, pkeys, pbounds)
         cand = self._bloom_candidates(cand, live, keys, touched, meta)

@@ -20,13 +20,17 @@ Fold design (exact, not approximate):
   WINNERS state table holding the current winning staging row per key,
   restricted to the P5 as-of window (keys outside it can never reach a
   fact, which also keeps state bounded by the window, not by history).
-- Per change window: net the feed (``exceptAll`` both ways, so rows
-  carried through copy-on-write rewrites cancel), probe current winners
-  for the touched keys (:meth:`TxTable.read_keys`, stat-pruned), rank
-  candidates with the SAME :func:`~..operators.dedupe.latest_record_wins`
-  the batch path uses, and emit per-table change feeds applied via
+- Per change window: net the feed ONCE
+  (:func:`~..operators.incremental.net_changes`, one signed-count
+  aggregate, checkpointed; rows carried through copy-on-write rewrites
+  cancel), probe current winners for the touched keys
+  (:meth:`TxTable.read_keys`, stat-pruned), rank candidates with the
+  SAME :func:`~..operators.dedupe.latest_record_wins` the batch path
+  uses, and emit per-table change feeds applied via
   :meth:`TxTable.apply_changes` — ONE atomic, txn-guarded commit per
-  table per fold.
+  table per fold. The two dim merges and the four fact applies are
+  independent of each other, so they run concurrently (one thread
+  each, inheriting the caller's job group).
 - A delete that removes a key's CURRENT winner re-opens the key: the
   true new winner may be an older issuance the winner was shadowing, so
   those keys (only those) are recomputed from the staging snapshot AT
@@ -40,11 +44,16 @@ Fold design (exact, not approximate):
 
 Exactly-once across crashes WITHOUT cross-table atomicity: every fold is
 a deterministic pure function of (winners state at the last applied
-version, the change window), every per-table apply carries
-``txn=("weather_star", to_version)``, and the WINNERS table — whose txn
-floor drives the next fold's window — commits LAST. A crash anywhere
-re-derives byte-identical feeds on replay; tables that already committed
-skip via their txn guard (pytest-pinned with an injected crash).
+version, the change window), every fact apply carries
+``txn=("weather_star", to_version)``, the dim merges are first-wins
+idempotent, and the WINNERS table — whose txn floor drives the next
+fold's window — commits LAST, only after all six concurrent dim and
+fact writes have finished. A crash (or a failed write) before it may
+leave ANY subset of those six committed, not just a prefix; the replay
+re-derives byte-identical feeds, tables that already committed skip via
+their txn guard (or merge nothing new), and the rest commit
+(pytest-pinned with an injected crash and an injected failed fact
+write).
 
 Scale shape: all probes are stat-pruned file reads + keyed semi-joins;
 the winner ranking windows over a frame ∝ touched keys; every write is
@@ -54,16 +63,19 @@ the staging table or a fact table end to end.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import date, datetime, timedelta
+from functools import partial
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from ..operators.dedupe import latest_record_wins
-from ..operators.incremental import new_files_only
+from ..operators.incremental import net_changes, new_files_only
 from ..operators.txlog import TxTable
 from ..sources.bronze import read_bronze
 from .weather import (
@@ -232,6 +244,19 @@ def _feed(new: DataFrame, old: DataFrame) -> DataFrame:
             .unionByName(old.withColumn("_change_type", F.lit("delete"))))
 
 
+def _run_all(spark: SparkSession, writes: list) -> None:
+    """Run independent table writes concurrently, one thread each. Every
+    thread inherits the caller's Spark local properties (job group,
+    scheduler pool), so the writes' jobs stay attributed to the caller.
+    Returns once ALL writes have finished; the first failed write's
+    error (in list order) is then re-raised."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w))
+                   for w in writes]
+    for f in futures:
+        f.result()
+
+
 def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
           as_of: date) -> None:
     """Fold the staging change window ``(from_v, to_v]`` into the star.
@@ -240,17 +265,10 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
     cols = [f.name for f in star.stg.schema().fields]
     lo, hi = _window_bounds(as_of)
     in_win = F.col("reading_datetime").between(F.lit(lo), F.lit(hi))
-    changes = star.stg.read_changes(from_v, to_v)
-    ins = (changes.filter(F.col("_change_type") == "insert")
-           .select(*cols).filter(in_win))
-    dels = (changes.filter(F.col("_change_type") == "delete")
-            .select(*cols).filter(in_win))
-    net_ins = ins.exceptAll(dels).localCheckpoint(eager=True)
-    net_del = dels.exceptAll(ins).localCheckpoint(eager=True)
-    touched = (net_ins.select(*STG_KEYS)
-               .unionByName(net_del.select(*STG_KEYS))
-               .distinct().localCheckpoint(eager=True))
-    if touched.isEmpty():
+    net = (net_changes(star.stg.read_changes(from_v, to_v).filter(in_win),
+                       cols).localCheckpoint(eager=True))
+    n_tag = dict(net.groupBy("_change_type").count().collect())
+    if not n_tag:
         # Advance the maintenance floor even for a no-data window
         # (layout-only commits, out-of-window readings) so the next
         # fold never re-reads it. A bare txn action is that floor.
@@ -259,13 +277,16 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
             [{"txn": {"appId": _APP, "version": int(to_v)}}], rv)
         return
 
-    cur = (star.winners.read_keys(touched, STG_KEYS)
+    is_ins = F.col("_change_type") == "insert"
+    net_ins = net.filter(is_ins).select(*cols)
+    net_del = net.filter(~is_ins).select(*cols)
+    cur = (star.winners.read_keys(net.select(*STG_KEYS), STG_KEYS)
            .localCheckpoint(eager=True))
     # Keys whose CURRENT winner row this window deleted: the new winner
     # may be a previously shadowed older issuance, visible only in the
     # staging snapshot — recompute exactly those keys from staging AT
     # to_v (deterministic under replay; cost ∝ those keys' rows).
-    if net_del.isEmpty():
+    if "delete" not in n_tag:
         reopened = None
         pool = cur.unionByName(net_ins.select(*cur.columns))
     else:
@@ -282,21 +303,25 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
     new_w = (latest_record_wins(pool, STG_KEYS, STG_ORDER)
              .localCheckpoint(eager=True))
 
-    # Dims first: grow-only DISTINCT projections (reference dims are
+    # Dims and facts commit concurrently, winners LAST (its txn floor
+    # gates the window — a crash before it replays this fold
+    # deterministically, whichever of the six already committed). Dims
+    # are grow-only DISTINCT projections (reference dims are
     # full-refresh DISTINCTs over all-time staging; an attribute row,
-    # once seen, is content-determined, so first-wins MERGE is exact for
-    # the append/reissue histories the reference produces).
-    star.dim_location.merge_upsert(
-        dim_location_from_stg(net_ins), ["location_key"])
-    star.dim_condition.merge_upsert(
-        dim_condition_from_stg(net_ins), ["condition_key"])
-
-    # Facts next, winners LAST (its txn floor gates the window — a crash
-    # between the two replays this fold deterministically).
+    # once seen, is content-determined, so first-wins MERGE is exact
+    # for the append/reissue histories the reference produces).
+    writes = [
+        partial(star.dim_location.merge_upsert,
+                dim_location_from_stg(net_ins), ["location_key"]),
+        partial(star.dim_condition.merge_upsert,
+                dim_condition_from_stg(net_ins), ["condition_key"]),
+    ]
     for (sun, hist), name in FACT_NAMES.items():
-        star.facts[name].apply_changes(
+        writes.append(partial(
+            star.facts[name].apply_changes,
             _feed(_fact_rows(new_w, sun, hist), _fact_rows(cur, sun, hist)),
-            FACT_KEYS, txn=(_APP, to_v))
+            FACT_KEYS, txn=(_APP, to_v)))
+    _run_all(spark, writes)
     star.winners.apply_changes(_feed(new_w, cur), STG_KEYS,
                                txn=(_APP, to_v))
     if (star.winners.last_txn(_APP) or 0) < to_v:

@@ -128,6 +128,109 @@ def _heavy_test_star_fold_is_exactly_once_across_crash_and_bounded_catchup(
     assert star.applied_version == star.stg.version
     _assert_star_equals_batch(spark, star)
 
+
+def _heavy_test_star_fold_failed_write_waits_all_and_replays_exactly(
+        spark, tmp_path):
+    """The fold's six dim and fact writes run concurrently. One fact
+    write failing re-raises ITS error only after every other write has
+    finished, the winners floor does not advance, and a re-run — with
+    any subset of the six already committed — yields, per table, the
+    same star as an uninterrupted fold of the same window."""
+    root = ensure_fixtures()
+    glob = f"{root}/*/*/weather_raw_*2025-03-2[68]*.json"
+    star = sl.create_weather_star(spark, str(tmp_path / "star"))
+    twin = sl.create_weather_star(spark, str(tmp_path / "twin"))
+    for s in (star, twin):
+        sl.ingest_bronze_increment(spark, s, glob)
+    sl.maintain_weather_star(spark, twin)
+
+    victim = "fact_weather_params_history"
+    finished = []
+
+    def failing(*a, **k):
+        raise RuntimeError("injected fact write failure")
+
+    def recording(name, fn):
+        def run(*a, **k):
+            out = fn(*a, **k)
+            finished.append(name)
+            return out
+        return run
+
+    others = {"dim_location": star.dim_location,
+              "dim_condition": star.dim_condition,
+              **{n: t for n, t in star.facts.items() if n != victim}}
+    for name, t in others.items():
+        attr = "apply_changes" if name in star.facts else "merge_upsert"
+        setattr(t, attr, recording(name, getattr(t, attr)))
+    star.facts[victim].apply_changes = failing
+    with pytest.raises(RuntimeError, match="injected fact write failure"):
+        sl.maintain_weather_star(spark, star)
+    # every other write ran to completion before the error surfaced
+    assert sorted(finished) == sorted(others)
+    assert star.applied_version == 0
+    for t in (star.facts[victim], *others.values()):
+        vars(t).pop("apply_changes", None)
+        vars(t).pop("merge_upsert", None)
+
+    assert sl.maintain_weather_star(spark, star) == star.stg.version
+
+    def tables(s):
+        return {"winners": s.winners, "dim_location": s.dim_location,
+                "dim_condition": s.dim_condition, **s.facts}
+    for name, t in tables(star).items():
+        assert _ms(t.read()) == _ms(tables(twin)[name].read()), name
+
+
+#: Spark jobs of one ingest + star fold + rollup fold of the 03-26 run
+#: date on an empty star (``_heavy_test_star_fold_jobs_stay_in_callers_
+#: group``). Measured in isolation: 127 before the fold netted each
+#: window once and ran its dim/fact writes concurrently, 91 after.
+FOLD_CYCLE_JOB_BUDGET = 91
+
+
+def _heavy_test_star_fold_jobs_stay_in_callers_group(spark, tmp_path):
+    """One ingest + ``maintain_weather_star`` + ``maintain_city_daily_
+    rollup`` under the caller's job group: every write — the six that
+    run on their own threads included — runs under that group, so all
+    of the cycle's jobs are attributed to the caller (job-group scoped
+    profiling and cancellation keep working), and the cycle stays
+    within its job budget."""
+    root = ensure_fixtures()
+    star = sl.create_weather_star(spark, str(tmp_path / "star"))
+    sc = spark.sparkContext
+    group = f"star-fold-{tmp_path.name}"
+    seen = []
+
+    def recording(fn):
+        def run(*a, **k):
+            seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+            out = fn(*a, **k)
+            seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+            return out
+        return run
+
+    star.winners.apply_changes = recording(star.winners.apply_changes)
+    for t in star.facts.values():
+        t.apply_changes = recording(t.apply_changes)
+    for t in (star.dim_location, star.dim_condition):
+        t.merge_upsert = recording(t.merge_upsert)
+    sc.setJobGroup(group, "one star maintenance cycle")
+    try:
+        sl.ingest_bronze_increment(
+            spark, star, f"{root}/*/*/weather_raw_*2025-03-26*.json")
+        sl.maintain_weather_star(spark, star)
+        sl.maintain_city_daily_rollup(spark, star)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # 7 writes (2 dims, 4 facts, winners), each checked on entry and exit
+    assert seen == [group] * 14
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= FOLD_CYCLE_JOB_BUDGET, n_jobs
+
 def _heavy_test_run_star_pipeline_cycles_with_compaction(spark, tmp_path):
     """The one-call cycle (ingest -> fold -> OPTIMIZE -> dbt-equivalent
     checks): two cycles with per-version compaction still equal the
@@ -285,6 +388,8 @@ _POOLED = {
     "test_cdc_maintained_star_equals_batch_rebuild": _heavy_test_cdc_maintained_star_equals_batch_rebuild,
     "test_star_fold_is_exactly_once_across_crash_and_bounded_catchup": _heavy_test_star_fold_is_exactly_once_across_crash_and_bounded_catchup,
     "test_run_star_pipeline_cycles_with_compaction": _heavy_test_run_star_pipeline_cycles_with_compaction,
+    "test_star_fold_failed_write_waits_all_and_replays_exactly": _heavy_test_star_fold_failed_write_waits_all_and_replays_exactly,
+    "test_star_fold_jobs_stay_in_callers_group": _heavy_test_star_fold_jobs_stay_in_callers_group,
 }
 
 
@@ -323,5 +428,17 @@ def test_star_fold_is_exactly_once_across_crash_and_bounded_catchup(star_pool):
 
 def test_run_star_pipeline_cycles_with_compaction(star_pool):
     ex = star_pool["test_run_star_pipeline_cycles_with_compaction"]
+    if ex is not None:
+        raise ex
+
+
+def test_star_fold_failed_write_waits_all_and_replays_exactly(star_pool):
+    ex = star_pool["test_star_fold_failed_write_waits_all_and_replays_exactly"]
+    if ex is not None:
+        raise ex
+
+
+def test_star_fold_jobs_stay_in_callers_group(star_pool):
+    ex = star_pool["test_star_fold_jobs_stay_in_callers_group"]
     if ex is not None:
         raise ex
