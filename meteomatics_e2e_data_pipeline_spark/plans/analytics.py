@@ -32,7 +32,8 @@ from ..functions.keys import surrogate_key, surrogate_key_sql
 from ..functions.strings import slugify, split_part_compat
 from ..operators import quantiles
 from ..operators.dedupe import latest_record_wins
-from ..sources.tables import load_table
+from .. import artifacts
+from ..sources.tables import load_table, table_path
 
 # --------------------------------------------------------------------------
 # Aggregation family (SURVEY §2.5 — GROUP BY extensions the star schema
@@ -3078,38 +3079,26 @@ JOIN supplier ON l_suppkey = s_suppkey
 """
 
 
+def _orders_table(spark: SparkSession, sf_dir: str, name: str, build):
+    """The txlog table ``build(out)`` derives from ``orders``, built once
+    per machine (:func:`artifacts.built_dir`) and reopened."""
+    from ..operators.txlog import TxTable
+
+    return TxTable(spark, artifacts.built_dir(
+        f"orders_{name}", [table_path(sf_dir, "orders")], build))
+
+
 def _converted_orders(spark: SparkSession, sf_dir: str):
     """Build-or-reopen the ADOPTED orders table (see
     :func:`q_orders_converted_rollup` for the full story)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}".encode()
-    ).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         (load_table(spark, sf_dir, "orders")
-         .repartitionByRange(4, "o_orderkey")
-         .write.parquet(str(build / "orders")))
-        TxTable.convert(spark, str(build / "orders"),
-                        stat_cols=["o_orderkey"],
+         .repartitionByRange(4, "o_orderkey").write.parquet(out))
+        TxTable.convert(spark, out, stat_cols=["o_orderkey"],
                         bloom_cols=["o_orderkey"])
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    return TxTable(spark, str(base))
+    return _orders_table(spark, sf_dir, "converted", build)
 
 
 def q_orders_converted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3120,9 +3109,7 @@ def q_orders_converted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the adopted txlog SNAPSHOT, so adopt → commit-0 → tear-check
     → snapshot-read is value-hash-checked against the SAME SQL the
     oracle runs on the original orders view. Built once per (machine,
-    source, wire-format version) into a fingerprinted temp dir (the
-    weather-star cache discipline; concurrent builders race benignly
-    on an atomic dir rename). Scale shape: adoption costs one scan of
+    source, wire-format version). Scale shape: adoption costs one scan of
     the directory regardless of size; the rollup is a partial-agg
     groupBy on a 3-value status key — no skew, no wide shuffle."""
     t = _converted_orders(spark, sf_dir)
@@ -3174,28 +3161,12 @@ def q_orders_dv_pointget(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``IN (...) AND NOT IN (...)``. Scale shape: the point-delete costs
     one log line instead of a file rewrite; reads pay a broadcast
     anti-join per tombstoned file until OPTIMIZE materializes it."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:dv"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         (load_table(spark, sf_dir, "orders")
-         .repartitionByRange(4, "o_orderkey")
-         .write.parquet(str(build / "orders")))
-        t = TxTable.convert(spark, str(build / "orders"),
-                            stat_cols=["o_orderkey"],
+         .repartitionByRange(4, "o_orderkey").write.parquet(out))
+        t = TxTable.convert(spark, out, stat_cols=["o_orderkey"],
                             bloom_cols=["o_orderkey"])
         files0 = sorted(t.live_files())
         t.delete(spark.createDataFrame([(k,) for k in _DV_KEYS],
@@ -3204,12 +3175,7 @@ def q_orders_dv_pointget(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the dv contract, asserted at build: no data file was touched
         assert sorted(t.live_files()) == files0, \
             "dv delete must rewrite zero files"
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    t = TxTable(spark, str(base))
+    t = _orders_table(spark, sf_dir, "dv", build)
     # literal probe + literal DV anti-predicate (r14): one Spark job
     return (t.read_keys([(k,) for k in POINT_KEYS], ["o_orderkey"])
             .select("o_orderkey", "o_orderstatus", "o_totalprice"))
@@ -3239,28 +3205,12 @@ def q_orders_renamed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen. Reference parity: the reference's own staging model
     renames API fields (stg_weather_raw.sql param.value:parameter →
     parameter); this is the lake-side rename."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:renamed"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         (load_table(spark, sf_dir, "orders")
-         .repartitionByRange(4, "o_orderkey")
-         .write.parquet(str(build / "orders")))
-        t = TxTable.convert(spark, str(build / "orders"),
-                            stat_cols=["o_orderkey"],
+         .repartitionByRange(4, "o_orderkey").write.parquet(out))
+        t = TxTable.convert(spark, out, stat_cols=["o_orderkey"],
                             bloom_cols=["o_orderkey"])
         files0 = sorted(t.live_files())
         t.rename_column("o_orderkey", "order_id")
@@ -3269,12 +3219,7 @@ def q_orders_renamed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # changes were pure metadata — no data file touched
         assert sorted(t.live_files()) == files0, \
             "rename/drop must rewrite zero files"
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    t = TxTable(spark, str(base))
+    t = _orders_table(spark, sf_dir, "renamed", build)
     return (t.read().groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_orders"),
                  F.sum("order_id").alias("sum_ids"),
@@ -3311,29 +3256,16 @@ def q_orders_generated_pruned(spark: SparkSession, sf_dir: str
     whole year-partitions driver-side before any task launches —
     IO for pruned partitions is zero at any per-partition size."""
     import datetime
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
 
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
     from ..sources.txlog_batch import TxLogBatchReader, register
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:gen"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         t = TxTable.create(
             spark,
             load_table(spark, sf_dir, "orders")
             .repartitionByRange(4, "o_orderkey"),
-            str(build / "orders"), stat_cols=["o_orderkey"],
+            out, stat_cols=["o_orderkey"],
             partition_cols=["o_year"],
             generated={"o_year": "year(o_orderdate)"})
         # the derivation contract, asserted at build: a base-column
@@ -3352,13 +3284,10 @@ def q_orders_generated_pruned(spark: SparkSession, sf_dir: str
         assert all(
             1994 <= int(p.file_path.split("o_year=")[1][:4]) <= 1996
             for p in planned), "planned files outside the derived years"
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
+    base = artifacts.built_dir(
+        "orders_generated", [table_path(sf_dir, "orders")], build)
     register(spark)
-    return (spark.read.format("txlog").option("path", str(base)).load()
+    return (spark.read.format("txlog").option("path", base).load()
             .filter(_GEN_WHERE)
             .groupBy(F.col("o_year").cast("long").alias("o_year"))
             .agg(F.count(F.lit(1)).alias("n_orders"),
@@ -3392,36 +3321,17 @@ def q_orders_identity_audit(spark: SparkSession, sf_dir: str
     a step violation each break a column. Scale shape: assignment is
     one ``mapInPandas`` pass (no count pre-job, no driver loop); the
     hwm rides stats the write computes anyway."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:ident"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice")
         t = TxTable.create(
             spark, orders.filter("o_orderkey % 2 = 0").repartition(4),
-            str(build / "orders"), stat_cols=["o_orderkey"],
+            out, stat_cols=["o_orderkey"],
             identity={"row_id": {"start": 1000, "step": 2}})
         t.append(orders.filter("o_orderkey % 2 = 1").repartition(4))
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    t = TxTable(spark, str(base))
+    t = _orders_table(spark, sf_dir, "identity", build)
     return t.read().agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("row_id").alias("n_distinct_ids"),
@@ -3456,28 +3366,13 @@ def q_orders_repartitioned_rollup(spark: SparkSession, sf_dir: str
     evolution is one rewrite (the Delta-documented cost, made atomic +
     history-preserving); afterwards the filter is a driver-side dict
     pass with zero IO for pruned partitions."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:repart"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         t = TxTable.create(spark,
                            load_table(spark, sf_dir, "orders")
                            .repartitionByRange(4, "o_orderkey"),
-                           str(build / "orders"),
-                           stat_cols=["o_orderkey"])
+                           out, stat_cols=["o_orderkey"])
         v0 = t.version
         t.repartition_table(["o_orderpriority"], target_rows=200_000)
         # the layout-evolution contract, asserted at build: the swap is
@@ -3486,12 +3381,7 @@ def q_orders_repartitioned_rollup(spark: SparkSession, sf_dir: str
             "repartition_table must be CDC-silent"
         assert all(p.startswith("o_orderpriority=")
                    for p in t.live_files())
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    t = TxTable(spark, str(base))
+    t = _orders_table(spark, sf_dir, "repartitioned", build)
     return (t.read()
             .filter(F.col("o_orderpriority") != "3-MEDIUM")
             .groupBy("o_orderpriority")
@@ -3532,28 +3422,13 @@ def q_orders_cdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     image, or a wrong version tag breaks the hash. Scale shape: per-
     commit frames cost ∝ that commit's changed files; in-commit
     cancel + image pairing shuffle ∝ the commit's changed rows."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:cdf"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         t = TxTable.create(spark,
                            orders.repartitionByRange(4, "o_orderkey"),
-                           str(build / "orders"),
-                           stat_cols=["o_orderkey"])
+                           out, stat_cols=["o_orderkey"])
         upd = (orders.filter(F.col("o_orderkey")
                              .isin(_CDF_UPD_KEYS))
                .withColumn("o_totalprice", F.lit(1111.0)))
@@ -3571,12 +3446,7 @@ def q_orders_cdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.delete(spark.createDataFrame(
             [(k,) for k in _CDF_DEL_KEYS], "o_orderkey long"),
             ["o_orderkey"])
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    t = TxTable(spark, str(base))
+    t = _orders_table(spark, sf_dir, "cdf", build)
     feed = t.read_changes_per_commit(
         0, update_images_for=["o_orderkey"])
     return (feed.groupBy("_change_type", "_commit_version")
@@ -3619,26 +3489,9 @@ def q_orders_cloned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolation (the sibling `orders_converted_rollup` keeps hashing the
     UNTOUCHED source in the same gate). Build-once per (machine,
     source, wire version), like every adopted-table gate."""
-    import hashlib
-    import os
-    import tempfile
-    from pathlib import Path
-
-    from ..operators.txlog import TxTable
-    import shutil
-
-    from ..operators.txproto import TXPROTO_VERSION
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:clone"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
+    def build(out: str) -> None:
         source = _converted_orders(spark, sf_dir)
-        build = Path(tempfile.mkdtemp(prefix="clone_build_",
-                                      dir=tempfile.gettempdir()))
-        cl = source.clone(str(build / "orders"))
+        cl = source.clone(out)
         src_files = set(source.live_files())
         cl.delete(spark.createDataFrame(
             [(k,) for k in _CLONE_DEL_KEYS], "o_orderkey long"),
@@ -3647,12 +3500,7 @@ def q_orders_cloned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # set is byte-identical after the clone's delete
         assert set(source.live_files()) == src_files, \
             "clone DML must never touch the source"
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    t = TxTable(spark, str(base))
+    t = _orders_table(spark, sf_dir, "cloned", build)
     return (t.read().groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_orders"),
                  F.sum("o_orderkey").alias("sum_keys"),
@@ -3690,32 +3538,14 @@ def _partitioned_orders(spark: SparkSession, sf_dir: str):
     through the PARTITIONED DML planners — a last-wins MERGE zeroing
     ``_PART_ZERO_KEYS``' prices and a keyed DELETE of
     ``_PART_DEL_KEYS`` — so the gate hashes cover adopt → partition
-    pruning → partition-aware rewrite, not just the happy read path.
-    Same fingerprint-keyed build-once cache as
-    :func:`_converted_orders`."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    pruning → partition-aware rewrite, not just the happy read path."""
     from ..operators.txlog import TxTable
-    from ..operators.txproto import TXPROTO_VERSION
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{src}:{os.path.getsize(src)}:txproto={TXPROTO_VERSION}:hive2"
-        .encode()).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_convert_{key}"
-    if not base.exists():
-        build = Path(tempfile.mkdtemp(prefix="convert_build_",
-                                      dir=tempfile.gettempdir()))
+    def build(out: str) -> None:
         (load_table(spark, sf_dir, "orders")
          .repartition(2, "o_orderstatus")
-         .write.partitionBy("o_orderstatus")
-         .parquet(str(build / "orders")))
-        t = TxTable.convert(spark, str(build / "orders"),
-                            stat_cols=["o_orderkey"])
+         .write.partitionBy("o_orderstatus").parquet(out))
+        t = TxTable.convert(spark, out, stat_cols=["o_orderkey"])
         zero = (t.read()
                 .filter(F.col("o_orderkey").isin(_PART_ZERO_KEYS))
                 .withColumn("o_totalprice", F.lit(0.0)))
@@ -3729,12 +3559,7 @@ def _partitioned_orders(spark: SparkSession, sf_dir: str):
         t.overwrite_partitions(
             cur_p.withColumn("o_totalprice", F.col("o_totalprice") * 2),
             {"o_orderstatus": "P"})
-        try:
-            os.rename(build / "orders", base)
-        except OSError:
-            pass  # lost the race: reopen the winner's copy below
-        shutil.rmtree(build, ignore_errors=True)
-    return TxTable(spark, str(base))
+    return _orders_table(spark, sf_dir, "hive", build)
 
 
 def q_orders_partitioned_pruned(spark: SparkSession, sf_dir: str

@@ -24,7 +24,7 @@ Scale notes are in the operator modules; the headline ones:
 
 from __future__ import annotations
 
-import weakref
+import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -39,7 +39,8 @@ from ..operators.textops import (
 )
 from ..operators.textops import quality_percentile_filter as textops_qpf
 from ..operators.textops import unigram_logprob as textops_unigram
-from ..sources.tables import load_table
+from .. import artifacts
+from ..sources.tables import load_table, table_path
 
 # Shared query parameters (mirrored into the generated oracle SQL).
 SHINGLE_N = 3
@@ -56,6 +57,12 @@ IVF_K = 5
 
 _DUCK_TOKENS = r"regexp_split_to_array(trim(text), '\s+')"
 _DUCK_HASH48 = "('0x' || substr(md5({c}), 1, 12))::BIGINT"
+
+
+def _memo(spark: SparkSession, key: tuple, table: str, build):
+    """``artifacts.memo`` over one input table; ``key[1]`` is the
+    ``sf_dir``."""
+    return artifacts.memo(spark, key, [table_path(key[1], table)], build)
 
 
 # --------------------------------------------------------------------------
@@ -178,23 +185,16 @@ GROUP BY 1, 2
 # ~8×, so inlined CTEs would expand 8^K-fold).
 BPE_MERGES = 4
 
-# Trained merge tables + segmented vocabs, materialized once per sf_dir
-# (the tokenizer artifact production writes to disk; same cache pattern
-# as the trained quantizer).
-_BPE_CACHE: dict = {}
-
 
 def _bpe_artifacts(spark: SparkSession, sf_dir: str):
-    key = (sf_dir, BPE_MERGES)
-    if key not in _BPE_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        hist = bpe.word_histogram(docs)
+    """Trained merge table + segmented vocab (the tokenizer artifact
+    production writes to disk)."""
+    def build():
+        hist = bpe.word_histogram(load_table(spark, sf_dir, "documents"))
         merges, vocab = bpe.bpe_train(hist, BPE_MERGES)
-        _BPE_CACHE[key] = (
-            merges,
-            [(r["word"], int(r["cnt"]), list(r["syms"]))
-             for r in vocab.collect()])
-    return _BPE_CACHE[key]
+        return merges, [(r["word"], int(r["cnt"]), list(r["syms"]))
+                        for r in vocab.collect()]
+    return _memo(spark, ("bpe", sf_dir, BPE_MERGES), "documents", build)
 
 
 def q_docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,8 +390,6 @@ LOGREG_QUALITY_THRESHOLD = 0.52
 LOGREG_LEN_SATURATION = 400.0   # bonus = n_tok / (n_tok + this)
 LOGREG_FEATURES = classifier.FEATURE_COLS
 
-_LOGREG_CACHE: dict = {}
-
 
 def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-local numeric features + the teacher label: y = 1 iff the
@@ -413,29 +411,24 @@ def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _classifier_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scored-corpus artifact (doc_id, label, score, pred), built once
-    per (session, sf_dir): train (module-cached k+1-scalar weights),
-    score row-locally, localCheckpoint. The whole classifier readout
-    family (AUC, calibration, threshold sweep) reads THIS table instead
-    of re-tokenizing the corpus per readout — in production the gating
+    per (session, sf_dir): train (k+1-scalar weights), score
+    row-locally, localCheckpoint. The whole classifier readout family
+    (AUC, calibration, threshold sweep) reads THIS table instead of
+    re-tokenizing the corpus per readout — in production the gating
     pipeline writes the scores once and every evaluation reads them."""
-    cache = _session_artifacts(spark)
-    key = ("clf_scored", sf_dir, LOGREG_ITERS)
-    if key not in cache:
+    def build():
         feat = _logreg_features(spark, sf_dir)
-        wkey = (sf_dir, LOGREG_ITERS)
-        if wkey not in _LOGREG_CACHE:
-            _LOGREG_CACHE[wkey] = classifier.logreg_train(
-                feat, list(LOGREG_FEATURES), "y",
-                iters=LOGREG_ITERS, lr=LOGREG_LR)
-        w = _LOGREG_CACHE[wkey]
-        cache[key] = (feat.select(
+        w = classifier.logreg_train(feat, list(LOGREG_FEATURES), "y",
+                                    iters=LOGREG_ITERS, lr=LOGREG_LR)
+        return (feat.select(
             "doc_id",
             F.col("y").cast("int").alias("label"),
             classifier.logreg_score(feat, w, list(LOGREG_FEATURES))
             .alias("score"))
             .withColumn("pred", (F.col("score") >= F.lit(0.5)).cast("int"))
             .localCheckpoint())
-    return cache[key]
+    return _memo(spark, ("clf_scored", sf_dir, LOGREG_ITERS), "documents",
+                 build)
 
 
 def q_docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -888,47 +881,30 @@ FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= {mh}
 """
 
 
-# Shared localCheckpointed artifacts (pair sets), discovered ONCE per
-# (session, sf_dir) and reused by every consumer — in production the
-# dedup pipeline materializes pairs once and every downstream step
-# reads the table; re-running banded discovery per consumer was the
-# suite's largest redundant work. The outer map is a
-# WeakKeyDictionary keyed on the SparkSession itself: localCheckpoints
-# are session-scoped anyway, and the weak key lets a stopped/dropped
-# session's entries (and their checkpointed plans) be collected
-# instead of accumulating forever in long-lived processes.
-_DF_ARTIFACTS: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
-    weakref.WeakKeyDictionary()
-
-
-def _session_artifacts(spark: SparkSession) -> dict:
-    return _DF_ARTIFACTS.setdefault(spark, {})
-
-
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized (doc_id, hv) shingle-set table, built once per
     (session, sf_dir) — the base artifact the exact set-similarity
     operators (Jaccard prefix join, containment join) read instead of
     re-tokenizing the corpus; in production this IS a table the dedup
     pipeline writes first."""
-    cache = _session_artifacts(spark)
-    key = ("shingles", sf_dir, SHINGLE_N)
-    if key not in cache:
-        docs = load_table(spark, sf_dir, "documents")
-        cache[key] = neardup.shingle_hashes(
-            docs, "doc_id", "text", SHINGLE_N).localCheckpoint()
-    return cache[key]
+    return _memo(
+        spark, ("shingles", sf_dir, SHINGLE_N), "documents",
+        lambda: neardup.shingle_hashes(
+            load_table(spark, sf_dir, "documents"), "doc_id", "text",
+            SHINGLE_N).localCheckpoint())
 
 
 def _full_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cache = _session_artifacts(spark)
-    key = ("full_pairs", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD)
-    if key not in cache:
-        docs = load_table(spark, sf_dir, "documents")
-        cache[key] = neardup.near_dup_pairs(
-            docs, n=SHINGLE_N,
-            threshold=NEARDUP_THRESHOLD).localCheckpoint()
-    return cache[key]
+    """Verified near-dup pair set, discovered ONCE per (session, sf_dir)
+    and reused by every consumer — in production the dedup pipeline
+    materializes pairs once and every downstream step reads the
+    table."""
+    return _memo(
+        spark, ("full_pairs", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD),
+        "documents",
+        lambda: neardup.near_dup_pairs(
+            load_table(spark, sf_dir, "documents"), n=SHINGLE_N,
+            threshold=NEARDUP_THRESHOLD).localCheckpoint())
 
 
 def q_docs_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1233,17 +1209,15 @@ def _scrubbed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     that bloat the full inverted index are exactly what the scrub
     removes, so the index this artifact feeds is both smaller and
     skew-free."""
-    cache = _session_artifacts(spark)
-    key = ("scrubbed_shingles", sf_dir, SHINGLE_N, HOT_MIN_DF, HOT_TOP)
-    if key not in cache:
-        docs = load_table(spark, sf_dir, "documents")
+    def build():
         scrubbed = (
-            neardup.scrub_hot_ngrams(docs, HOT_MIN_DF, HOT_TOP,
-                                     n=SHINGLE_N)
+            neardup.scrub_hot_ngrams(load_table(spark, sf_dir, "documents"),
+                                     HOT_MIN_DF, HOT_TOP, n=SHINGLE_N)
             .select("doc_id", F.col("clean_text").alias("text")))
-        cache[key] = neardup.shingle_hashes(
+        return neardup.shingle_hashes(
             scrubbed, "doc_id", "text", SHINGLE_N).localCheckpoint()
-    return cache[key]
+    return _memo(spark, ("scrubbed_shingles", sf_dir, SHINGLE_N, HOT_MIN_DF,
+                         HOT_TOP), "documents", build)
 
 
 def q_docs_scrubbed_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1512,14 +1486,13 @@ def _bf_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor materializes the truth set once and reuses it across tier
     evals). Carries ``rank``, so lower-k consumers slice EXACTLY:
     top-5 == rank <= 5 under the same (cos desc, neighbor_id) order."""
-    cache = _session_artifacts(spark)
-    key = ("bf_truth", sf_dir, KNN_QUERY_MAX_ID, KNN_K)
-    if key not in cache:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
-        cache[key] = similarity.knn_bruteforce(
+        return similarity.knn_bruteforce(
             emb, queries, KNN_K).localCheckpoint()
-    return cache[key]
+    return _memo(spark, ("bf_truth", sf_dir, KNN_QUERY_MAX_ID, KNN_K),
+                 "embeddings", build)
 
 
 def q_emb_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1572,51 +1545,30 @@ def q_emb_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, the rest arrives as a CDC-folded append, and the query
     reads the maintained assign frame — so the oracle row proves
     bootstrap + fold + serve end to end against the SAME SQL that
-    checks the in-memory form. Built once per machine into a
-    fingerprint-keyed temp dir (same cache discipline as the weather
-    star; bench warms it explicitly)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    checks the in-memory form. Built once per machine
+    (:func:`artifacts.built_dir`; bench warms it explicitly)."""
     from ..operators import annindex
     from ..operators.txlog import TxTable
 
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
-    src_file = os.path.join(sf_dir, "embeddings.parquet")
-    from ..operators.txproto import TXPROTO_VERSION
-    # fingerprint from file metadata only (r15): the old key also baked
-    # in emb.count(), a driver-synchronous Spark job paid on EVERY
-    # query invocation just to name the cache dir — size+path is the
-    # same discipline the convert fixtures use
-    key = hashlib.md5(
-        f"{src_file}:{os.path.getsize(src_file)}"
-        f":txproto={TXPROTO_VERSION}".encode()
-    ).hexdigest()[:16]
-    base = Path(tempfile.gettempdir()) / f"spark_graft_ann_{key}"
-    if not (base / "_DONE").exists():
-        build = Path(tempfile.mkdtemp(prefix="ann_build_",
-                                      dir=tempfile.gettempdir()))
+
+    def build(out: str) -> None:
         cut = int(emb.count() * 0.8)
         centroids = (emb.filter(F.col("vec_id") < IVF_CENTROID_MAX_ID)
                      .select(F.col("vec_id").alias("centroid_id"),
                              "embedding"))
         t = TxTable.create(spark,
                            emb.filter(F.col("vec_id") < cut).coalesce(2),
-                           str(build / "emb"), stat_cols=["vec_id"])
+                           os.path.join(out, "emb"), stat_cols=["vec_id"])
         t.append(emb.filter(F.col("vec_id") >= cut).coalesce(1))
         annindex.stream_cdc_ann_maintenance(
-            spark, t.path, str(build / "ck"), str(build / "ann"),
-            centroids=centroids)
-        (build / "_DONE").touch()
-        try:
-            os.rename(build, base)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)  # lost the race
-    st = TxTable(spark, str(base / "ann"))
+            spark, t.path, os.path.join(out, "ck"),
+            os.path.join(out, "ann"), centroids=centroids)
+
+    base = artifacts.built_dir(
+        "ann", [table_path(sf_dir, "embeddings")], build)
+    st = TxTable(spark, os.path.join(base, "ann"))
     queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
     return annindex.knn_ivf_from_index(st, queries, IVF_K)
 
@@ -1814,31 +1766,26 @@ SELECT doc_id, term, tfidf, rk::INT AS rk FROM ranked WHERE rk <= {TFIDF_TOP_K}
 IVF_TRAIN_ITERS = 2
 
 
-# Trained coarse-quantizer centroids, materialized once per
-# (sf_dir, k, iters) and shared by every consumer (ANN, cosine near-dup,
-# semantic dedup) — exactly how a production pipeline treats a trained
-# quantizer: an artifact written once at training time, broadcast to
-# every serving query, never retrained per query. Training is
-# deterministic (seeded on lowest-id vectors, order-free decimal means),
-# so the cache cannot change any result; the tiny collected rows
-# (k × dim doubles) also free the training job's localCheckpoint blocks
-# from the block manager instead of re-accumulating them per query.
-_CENTROID_CACHE: dict = {}
-_PQ_CODEBOOK_CACHE: dict = {}
-
-
 def _trained_centroids(spark: SparkSession, sf_dir: str,
                        iters: int = IVF_TRAIN_ITERS) -> DataFrame:
-    key = (sf_dir, IVF_CENTROID_MAX_ID, iters)
-    if key not in _CENTROID_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
+    """Trained coarse-quantizer centroids, shared by every consumer
+    (ANN, cosine near-dup, semantic dedup) — exactly how a production
+    pipeline treats a trained quantizer: an artifact written once at
+    training time, broadcast to every serving query, never retrained
+    per query. Training is deterministic (seeded on lowest-id vectors,
+    order-free decimal means); the tiny collected rows (k × dim
+    doubles) also free the training job's localCheckpoint blocks from
+    the block manager instead of re-accumulating them per query."""
+    def build():
         trained = similarity.train_ivf_centroids(
-            emb, k=IVF_CENTROID_MAX_ID, iters=iters)
-        _CENTROID_CACHE[key] = [
-            (int(r["centroid_id"]), [float(x) for x in r["embedding"]])
-            for r in trained.collect()]
+            load_table(spark, sf_dir, "embeddings"),
+            k=IVF_CENTROID_MAX_ID, iters=iters)
+        return [(int(r["centroid_id"]), [float(x) for x in r["embedding"]])
+                for r in trained.collect()]
+    rows = _memo(spark, ("centroids", sf_dir, IVF_CENTROID_MAX_ID, iters),
+                 "embeddings", build)
     return spark.createDataFrame(
-        _CENTROID_CACHE[key], "centroid_id int, embedding array<double>")
+        rows, "centroid_id int, embedding array<double>")
 
 
 def q_emb_ann_ivf_trained(spark: SparkSession, sf_dir: str,
@@ -1989,21 +1936,19 @@ FROM ranked WHERE rank <= {LSH_K}
 
 COSINE_DUP_THRESHOLD = 0.4
 
-# The co-bucket cosine pair-score table (raw cosines retained), built
-# once per (session, sf_dir) over the trained quantizer and shared by
-# the near-dup cut, semantic dedup, and the calibration histogram —
-# the embedding-side analog of the `_full_pairs` artifact. Thresholds
-# apply to cos_raw downstream, so every consumer keeps its exact
-# oracle semantics.
 def _cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cache = _session_artifacts(spark)
-    key = ("cos_pairs", sf_dir, IVF_TRAIN_ITERS, IVF_CENTROID_MAX_ID)
-    if key not in cache:
-        emb = load_table(spark, sf_dir, "embeddings")
-        centroids = _trained_centroids(spark, sf_dir)
-        cache[key] = similarity.cosine_pair_scores(
-            emb, centroids).localCheckpoint()
-    return cache[key]
+    """The co-bucket cosine pair-score table (raw cosines retained),
+    built once per (session, sf_dir) over the trained quantizer and
+    shared by the near-dup cut, semantic dedup, and the calibration
+    histogram — the embedding-side analog of the `_full_pairs`
+    artifact. Thresholds apply to cos_raw downstream, so every consumer
+    keeps its exact oracle semantics."""
+    return _memo(
+        spark, ("cos_pairs", sf_dir, IVF_TRAIN_ITERS, IVF_CENTROID_MAX_ID),
+        "embeddings",
+        lambda: similarity.cosine_pair_scores(
+            load_table(spark, sf_dir, "embeddings"),
+            _trained_centroids(spark, sf_dir)).localCheckpoint())
 
 
 def q_emb_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2103,12 +2048,11 @@ def _full_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup family, so every consumer (the cluster query, the kept
     corpus, the training-mix pipeline's vertex-deletion recompute)
     reads this artifact instead of re-looping."""
-    cache = _session_artifacts(spark)
-    key = ("full_clusters", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD)
-    if key not in cache:
-        cache[key] = neardup.dup_clusters(
-            _full_pairs(spark, sf_dir)).localCheckpoint()
-    return cache[key]
+    return _memo(
+        spark, ("full_clusters", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD),
+        "documents",
+        lambda: neardup.dup_clusters(
+            _full_pairs(spark, sf_dir)).localCheckpoint())
 
 
 def q_docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2231,50 +2175,40 @@ FROM pr{PR_ITERS} p JOIN deg dg ON dg.u = p.node""")
     return "".join(parts)
 
 
-# Prior corpus-only near-dup labels, materialized once per sf_dir (the
-# previous ingest's written label table in production). Tiny by
-# construction — one row per document that sits in a near-dup cluster.
-_PRIOR_LABEL_CACHE: dict = {}
-
-
 def _prior_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, SHINGLE_N, NEARDUP_THRESHOLD, INCR_BATCH_MOD)
-    if key not in _PRIOR_LABEL_CACHE:
+    """Prior corpus-only near-dup labels (the previous ingest's written
+    label table in production). Tiny by construction — one row per
+    document that sits in a near-dup cluster."""
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
         prev = neardup.dup_clusters(
             neardup.near_dup_pairs(corpus, n=SHINGLE_N,
                                    threshold=NEARDUP_THRESHOLD))
-        _PRIOR_LABEL_CACHE[key] = [
-            (int(r["doc_id"]), int(r["cluster_id"]), bool(r["is_canonical"]))
-            for r in prev.collect()]
+        return [(int(r["doc_id"]), int(r["cluster_id"]),
+                 bool(r["is_canonical"])) for r in prev.collect()]
+    rows = _memo(spark, ("prior_labels", sf_dir, SHINGLE_N,
+                         NEARDUP_THRESHOLD, INCR_BATCH_MOD),
+                 "documents", build)
     return spark.createDataFrame(
-        _PRIOR_LABEL_CACHE[key],
-        "doc_id long, cluster_id long, is_canonical boolean")
-
-
-# The increment's verified pair set, discovered ONCE per (session,
-# sf_dir) and shared by BOTH incremental queries — in production the
-# daily ingest writes these pairs before label maintenance folds them
-# in, so discovery and maintenance never re-run the banded pipeline
-# against the corpus index twice (round-6 watch item: the duplicated
-# ~3.7 s banded discovery was the suite's largest redundant work).
-# Weak-session-keyed (see _DF_ARTIFACTS) because the localCheckpoint
-# that materializes the artifact is session-scoped.
+        rows, "doc_id long, cluster_id long, is_canonical boolean")
 
 
 def _incr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cache = _session_artifacts(spark)
-    key = ("incr_pairs", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD,
-           INCR_BATCH_MOD)
-    if key not in cache:
+    """The increment's verified pair set, discovered ONCE per (session,
+    sf_dir) and shared by BOTH incremental queries — in production the
+    daily ingest writes these pairs before label maintenance folds them
+    in, so discovery and maintenance never re-run the banded pipeline
+    against the corpus index twice."""
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
         batch = docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
-        cache[key] = neardup.near_dup_pairs_incremental(
+        return neardup.near_dup_pairs_incremental(
             corpus, batch, n=SHINGLE_N,
             threshold=NEARDUP_THRESHOLD).localCheckpoint()
-    return cache[key]
+    return _memo(spark, ("incr_pairs", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD,
+                         INCR_BATCH_MOD), "documents", build)
 
 
 def q_docs_dup_clusters_incremental(spark: SparkSession,
@@ -2289,8 +2223,8 @@ def q_docs_dup_clusters_incremental(spark: SparkSession,
     per-ingest work ∝ increment with zero drift from the batch truth.
 
     The PRIOR label table is a materialized artifact in production (the
-    previous ingest wrote it); `_prior_labels` models that with the
-    trained-quantizer cache pattern — built once per sf_dir, rebuilt
+    previous ingest wrote it); `_prior_labels` models that as a
+    registry artifact — built once per (session, sf_dir), rebuilt
     from its (tiny: one row per duplicate-cluster member) collected rows
     for every consumer. Without it the maintenance step's three
     references to `prev` each re-ran the full batch clustering
@@ -2395,12 +2329,10 @@ def _gopher_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed training-mix pipeline (whose quality gate is exactly a
     filter over these rows); in production this is the doc-stats table
     every downstream curation job reads."""
-    cache = _session_artifacts(spark)
-    key = ("gopher_stats", sf_dir)
-    if key not in cache:
-        docs = load_table(spark, sf_dir, "documents")
-        cache[key] = repetition_stats(docs).localCheckpoint()
-    return cache[key]
+    return _memo(spark, ("gopher_stats", sf_dir), "documents",
+                 lambda: repetition_stats(
+                     load_table(spark, sf_dir, "documents"))
+                 .localCheckpoint())
 
 
 def q_docs_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2809,10 +2741,6 @@ FROM r WHERE rn = 1
 """
 
 
-# Benchmark Bloom filter, built once per sf_dir (8 KB dense word list).
-_BLOOM_CACHE: dict = {}
-
-
 def q_docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination through a fixed-size Bloom filter — the scale
     path of ``docs_contamination``: when the benchmark/prior-run n-gram
@@ -2825,16 +2753,16 @@ def q_docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The FILTER is a build-once artifact (a benchmark suite changes
     rarely; a production run builds it at publish time and every scan
-    reuses it) — cached per sf_dir with the trained-quantizer pattern,
-    8 KB of words."""
+    reuses it) — an 8 KB dense word list."""
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-    key = (sf_dir, CONTAM_N, CONTAM_BENCH_MOD)
-    if key not in _BLOOM_CACHE:
-        bench = docs.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0)
-        _BLOOM_CACHE[key] = neardup.bloom_build(bench, n=CONTAM_N)
+    bloom = _memo(
+        spark, ("bloom", sf_dir, CONTAM_N, CONTAM_BENCH_MOD), "documents",
+        lambda: neardup.bloom_build(
+            docs.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0),
+            n=CONTAM_N))
     return neardup.bloom_contamination_hits(
-        corpus, None, n=CONTAM_N, prebuilt=_BLOOM_CACHE[key])
+        corpus, None, n=CONTAM_N, prebuilt=bloom)
 
 
 def _oracle_bloom_contamination() -> str:
@@ -3594,12 +3522,6 @@ FROM n GROUP BY 1
 
 PCA_ITERS = 4   # fixed power-iteration steps (oracle unrolls them)
 
-# Trained (mean, direction) artifact — 2·dim floats, cached per sf_dir
-# like the k-means centroids and PQ codebooks; with it the projection
-# query is one row-local zero-shuffle pass.
-_PCA_CACHE: dict = {}
-
-
 def q_emb_pca1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Principal-axis projection via fixed-step power iteration — the
     variance screen / whitening primitive
@@ -3607,13 +3529,15 @@ def q_emb_pca1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ w·x are exact decimal sums rounded at 6 dp, normalization is
     row-free double math, so the fixed-iteration loop unrolls into the
     DuckDB oracle below exactly like the Lloyd unrolls of the trained
-    ANN queries."""
+    ANN queries. The trained (mean, direction) artifact is 2·dim
+    floats; with it the projection query is one row-local zero-shuffle
+    pass."""
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, EMB_DIM, PCA_ITERS)
-    if key not in _PCA_CACHE:
-        _PCA_CACHE[key] = similarity.pca1_direction(emb, EMB_DIM, PCA_ITERS)
+    direction = _memo(
+        spark, ("pca1", sf_dir, EMB_DIM, PCA_ITERS), "embeddings",
+        lambda: similarity.pca1_direction(emb, EMB_DIM, PCA_ITERS))
     return similarity.pca1_projection(emb, EMB_DIM, PCA_ITERS,
-                                      direction=_PCA_CACHE[key])
+                                      direction=direction)
 
 
 def _oracle_pca1() -> str:
@@ -3694,15 +3618,14 @@ def _untrained_pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook, localCheckpointed once per (session, sf_dir) — shared by
     the plain PQ kNN and the IVF-PQ composition (both scan this index
     table; in production the codes are written at ingest)."""
-    cache = _session_artifacts(spark)
-    key = ("pq_recon_untrained", sf_dir, PQ_M, PQ_NCENT)
-    if key not in cache:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         cb = similarity.pq_codebook(emb, PQ_NCENT)
-        cache[key] = similarity.pq_reconstruct(
+        return similarity.pq_reconstruct(
             similarity.pq_codes(emb, cb, EMB_DIM, PQ_M),
             cb, EMB_DIM, PQ_M).localCheckpoint()
-    return cache[key]
+    return _memo(spark, ("pq_recon_untrained", sf_dir, PQ_M, PQ_NCENT),
+                 "embeddings", build)
 
 
 def q_emb_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3929,19 +3852,17 @@ PQ_TRAIN_ITERS = 2
 
 def _trained_pq_codebook(spark: SparkSession, sf_dir: str,
                          iters: int) -> DataFrame:
-    """Trained PQ codebook, materialized once per (sf_dir, iters) —
-    same artifact semantics as ``_trained_centroids`` (training is
-    deterministic, so the cache cannot change results)."""
-    key = (sf_dir, PQ_M, PQ_NCENT, iters)
-    if key not in _PQ_CODEBOOK_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cb = similarity.train_pq_codebook(emb, EMB_DIM, PQ_M, PQ_NCENT,
-                                          iters)
-        _PQ_CODEBOOK_CACHE[key] = [
-            (int(r["cid"]), [float(x) for x in r["cvec"]])
-            for r in cb.collect()]
-    return spark.createDataFrame(
-        _PQ_CODEBOOK_CACHE[key], "cid int, cvec array<double>")
+    """Trained PQ codebook, materialized once per (session, sf_dir,
+    iters) — same artifact semantics as ``_trained_centroids``."""
+    def build():
+        cb = similarity.train_pq_codebook(
+            load_table(spark, sf_dir, "embeddings"), EMB_DIM, PQ_M,
+            PQ_NCENT, iters)
+        return [(int(r["cid"]), [float(x) for x in r["cvec"]])
+                for r in cb.collect()]
+    rows = _memo(spark, ("pq_codebook", sf_dir, PQ_M, PQ_NCENT, iters),
+                 "embeddings", build)
+    return spark.createDataFrame(rows, "cid int, cvec array<double>")
 
 
 def _trained_pq_recon(spark: SparkSession, sf_dir: str,
@@ -3950,15 +3871,14 @@ def _trained_pq_recon(spark: SparkSession, sf_dir: str,
     localCheckpointed once per (session, sf_dir, iters) — the
     production INDEX table: codes are written at ingest, not re-encoded
     per query, so repeated searches pay only the LUT/scoring scan."""
-    cache = _session_artifacts(spark)
-    key = ("pq_recon", sf_dir, PQ_M, PQ_NCENT, iters)
-    if key not in cache:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         cb = _trained_pq_codebook(spark, sf_dir, iters)
-        cache[key] = similarity.pq_reconstruct(
+        return similarity.pq_reconstruct(
             similarity.pq_codes(emb, cb, EMB_DIM, PQ_M),
             cb, EMB_DIM, PQ_M).localCheckpoint()
-    return cache[key]
+    return _memo(spark, ("pq_recon", sf_dir, PQ_M, PQ_NCENT, iters),
+                 "embeddings", build)
 
 
 def q_emb_knn_pq_trained(spark: SparkSession, sf_dir: str,
@@ -4596,18 +4516,16 @@ def q_emb_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster_id, is_canonical) over the cosine near-dup
     graph, localCheckpointed once per (session, sf_dir)."""
-    cache = _session_artifacts(spark)
-    key = ("emb_clusters", sf_dir, COSINE_DUP_THRESHOLD)
-    if key not in cache:
-        emb = load_table(spark, sf_dir, "embeddings")
-        centroids = _trained_centroids(spark, sf_dir)
+    def build():
         pairs = similarity.cosine_near_dup_pairs(
-            emb, centroids, COSINE_DUP_THRESHOLD,
+            load_table(spark, sf_dir, "embeddings"),
+            _trained_centroids(spark, sf_dir), COSINE_DUP_THRESHOLD,
             pair_scores=_cosine_pairs(spark, sf_dir))
-        cache[key] = (neardup.dup_clusters(pairs, src="id_a", dst="id_b")
-                      .withColumnRenamed("doc_id", "vec_id")
-                      .localCheckpoint())
-    return cache[key]
+        return (neardup.dup_clusters(pairs, src="id_a", dst="id_b")
+                .withColumnRenamed("doc_id", "vec_id")
+                .localCheckpoint())
+    return _memo(spark, ("emb_clusters", sf_dir, COSINE_DUP_THRESHOLD),
+                 "embeddings", build)
 
 
 def _oracle_emb_dedup_keep() -> str:

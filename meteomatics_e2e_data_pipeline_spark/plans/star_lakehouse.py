@@ -434,55 +434,24 @@ def maintain_weather_star(spark: SparkSession, star: WeatherStar,
 # --------------------------------------------------------------------------
 # Oracle-backed query entries: read the MAINTAINED fact tables.
 #
-# The star is built once per machine into a fingerprint-keyed temp dir
-# (two out-of-order ingest increments + a maintenance fold each — the
-# late-reissuance path included) and reused by later calls: the gate then
-# hash-compares a fact table produced by the CDC fold chain against the
-# same DuckDB SQL that checks the batch fact — maintained ≡ batch ≡
-# oracle, proven at value level every round.
+# The star is built once per machine (two out-of-order ingest increments
+# + a maintenance fold each — the late-reissuance path included) and
+# reused by later calls: the gate then hash-compares a fact table
+# produced by the CDC fold chain against the same DuckDB SQL that checks
+# the batch fact — maintained ≡ batch ≡ oracle, proven at value level
+# every round.
 # --------------------------------------------------------------------------
 
-def _bronze_fingerprint() -> str:
-    import hashlib
-    from pathlib import Path
-
-    from ..sources.fixtures import default_bronze_root, ensure_fixtures
-
-    root = Path(ensure_fixtures())
-    h = hashlib.md5()
-    for p in sorted(root.rglob("*.json")):
-        h.update(f"{p.relative_to(root)}:{p.stat().st_size}".encode())
-    h.update(f"as_of={AS_OF}".encode())
-    # cached star tables are txlog tables on disk: a commit-format bump
-    # must rebuild them, not hand strict readers a pre-bump log
-    from ..operators.txproto import TXPROTO_VERSION
-    h.update(f"txproto={TXPROTO_VERSION}".encode())
-    # star-schema layout version: r13 added the maintained city-daily
-    # rollup table; r14 partitions the fact tables by date_key — either
-    # change means pre-existing cached stars must rebuild
-    h.update(b"star_layout=3")
-    return h.hexdigest()[:16]
-
-
 def maintained_star(spark: SparkSession) -> WeatherStar:
-    """The fixture-bronze star, built via the incremental fold chain and
-    cached under a content-fingerprinted temp dir. Concurrent builders
-    race benignly: each builds in a private dir and atomically renames;
-    the loser discards its copy and reopens the winner's."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
+    """The fixture-bronze star, built via the incremental fold chain
+    once per fixture fingerprint (:func:`artifacts.built_dir`)."""
+    from .. import artifacts
+    from ..sources.fixtures import ensure_fixtures
 
-    from ..sources.fixtures import default_bronze_root
+    root = ensure_fixtures()
 
-    root = default_bronze_root()
-    base = (Path(tempfile.gettempdir())
-            / f"spark_graft_weather_star_{_bronze_fingerprint()}")
-    if not (base / "_DONE").exists():
-        build = Path(tempfile.mkdtemp(prefix="weather_star_build_",
-                                      dir=tempfile.gettempdir()))
-        star = create_weather_star(spark, str(build))
+    def build(out: str) -> None:
+        star = create_weather_star(spark, out)
         # two increments, the second a LATE (stale-winning-and-losing)
         # run date — the same contested-window path the e2e pins
         for pattern in ("*2025-03-2[689]*", "*2025-03-27*"):
@@ -493,12 +462,12 @@ def maintained_star(spark: SparkSession) -> WeatherStar:
             # cached rollup has lived through the late-reissuance
             # family-flip window (fact deletes), not just appends
             maintain_city_daily_rollup(spark, star)
-        (build / "_DONE").touch()
-        try:
-            os.rename(build, base)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)  # lost the race
-    return create_weather_star(spark, str(base))
+
+    # the name carries what the file fingerprint cannot see: the as-of
+    # date and the star layout version (bump it when a table changes
+    # shape, so cached stars rebuild)
+    return create_weather_star(spark, artifacts.built_dir(
+        f"weather_star_{AS_OF}_layout3", [root], build))
 
 
 def _q_fact_maintained(sun: bool, history: bool):

@@ -8,9 +8,10 @@ directory-partitioned lake; nothing here assumes local files.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import artifacts
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -24,27 +25,23 @@ TABLE_NAMES = (
 SMALL_TABLES = frozenset({"region", "nation"})
 
 
-# Scan-handle reuse, keyed (session, sf_dir, name). This caches the
-# lazy DataFrame PLAN object only — no rows, no .cache(): every
-# execution still scans the parquet files. Building a fresh handle
-# costs ~100-150 ms of driver work (file listing + footer/schema read
-# over py4j), and a typical star query opens 3-5 tables, so rebuilding
-# identical handles per query was one of the suite's largest fixed
-# costs (guide §5: the driver should do almost no data work — that
-# includes re-doing metadata work). Weak-keyed on the session, same
-# discipline as plans/llmdata._DF_ARTIFACTS.
-_HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
-    weakref.WeakKeyDictionary()
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan handle of one table. The lazy plan (no rows) is kept in the
+    artifact registry while the table's files are unchanged: building a
+    handle costs ~100-150 ms of driver work (file listing + footer read
+    over py4j), and a typical star query opens 3-5 tables."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    cache = _HANDLES.setdefault(spark, {})
-    hit = cache.get((sf_dir, name))
-    if hit is not None:
-        return hit
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
+    return artifacts.memo(spark, ("table", sf_dir, name), [path],
+                          lambda: _scan(spark, path, name))
+
+
+def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) in some data
         # generations and TIMESTAMP(MICROS) in others. Engine-wide policy
@@ -65,26 +62,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # normalize to TIMESTAMP (session-TZ) so downstream date/window
             # arithmetic and the DuckDB oracle agree on one timestamp kind
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        cache[(sf_dir, name)] = df
         return df
-    df = spark.read.parquet(path)
-    cache[(sf_dir, name)] = df
-    return df
+    return spark.read.parquet(path)
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every table and register it as a temp view (for the SQL API).
 
-    Registration is memoized per (session, sf_dir): each
+    Registration is kept in the artifact registry under one key per
+    session, fingerprinted on every table's files: each
     ``createOrReplaceTempView`` is a catalog round-trip over py4j, and
-    the SQL-surface queries call this on every invocation — re-binding
-    ten identical views per query was pure fixed driver cost (guide §5).
-    A different ``sf_dir`` re-registers (views are replaced), so the
-    visible behavior is unchanged."""
-    cache = _HANDLES.setdefault(spark, {})
+    the SQL-surface queries call this on every invocation. Another
+    ``sf_dir`` or a rewritten table re-registers (views are replaced)."""
     out = {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-    if cache.get("__registered_sf_dir") != sf_dir:
+
+    def register():
         for name, df in out.items():
             df.createOrReplaceTempView(name)
-        cache["__registered_sf_dir"] = sf_dir
+
+    artifacts.memo(spark, ("temp_views",),
+                   [table_path(sf_dir, name) for name in TABLE_NAMES],
+                   register)
     return out
