@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize
 from .incremental import net_changes
 from .similarity import ivf_assign, knn_ivf_preassigned, quantize_int8
 from .txlog import TxTable
@@ -115,14 +116,13 @@ def fold_cdc_ann(changes: DataFrame, st: TxTable,
     :meth:`TxTable.apply_delta`. Net inserts are upserts (an id in the
     insert set sheds its old rows first — idempotent replays, same
     discipline as :func:`~.neardup.fold_cdc_near_dup_delta`)."""
-    net = net_changes(changes, [id_col, vec_col]).localCheckpoint(
-        eager=True)
+    net = materialize(net_changes(changes, [id_col, vec_col]), "eager")
     is_ins = F.col("_change_type") == "insert"
     net_ins = net.filter(is_ins).select(id_col, vec_col)
     net_del = net.filter(~is_ins).select(id_col, vec_col)
-    del_ids = (net_del.select(id_col)
-               .unionByName(net_ins.select(id_col)).distinct()
-               .localCheckpoint(eager=True))
+    del_ids = materialize(net_del.select(id_col)
+                          .unionByName(net_ins.select(id_col)).distinct(),
+                          "eager")
 
     def keyed(tag):
         return del_ids.select(F.lit(tag).alias("frame"),

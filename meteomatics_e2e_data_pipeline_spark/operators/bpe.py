@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize
 from .textops import tokens
 
 
@@ -101,8 +102,9 @@ def bpe_train(hist: DataFrame, n_merges: int):
     """
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    vocab = hist.select("word", "cnt", _chars(F.col("word")).alias("syms")) \
-        .localCheckpoint()
+    vocab = materialize(
+        hist.select("word", "cnt", _chars(F.col("word")).alias("syms")),
+        "eager")
     merges: list[tuple] = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -118,8 +120,8 @@ def bpe_train(hist: DataFrame, n_merges: int):
             break
         left, right, c = best[0]["a"], best[0]["b"], int(best[0]["c"])
         merges.append((rank, left, right, left + right, c))
-        vocab = vocab.withColumn(
-            "syms", merge_fold(F.col("syms"), left, right)).localCheckpoint()
+        vocab = materialize(vocab.withColumn(
+            "syms", merge_fold(F.col("syms"), left, right)), "eager")
     return merges, vocab
 
 

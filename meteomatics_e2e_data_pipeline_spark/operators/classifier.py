@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..artifacts import materialize
+
 WEIGHT_DP = 8     # per-iteration weight quantization (HALF_UP, both engines)
 SCORE_DP = 6      # final score rounding
 
@@ -90,7 +92,7 @@ def logreg_train(feat: DataFrame, feature_cols: list[str], label_col: str,
     a k-scalar artifact (bounded like a centroid table). ``lr`` must be
     exactly binary-representable (0.5, 0.25, ...) so the literal parses
     to the same double in both engines."""
-    feat = feat.localCheckpoint(eager=True)  # scanned iters+1 times
+    feat = materialize(feat, "eager")  # scanned iters+1 times
     n = feat.count()
     cols = [F.col(c) for c in feature_cols]
     weights = [0.0] * len(feature_cols)

@@ -16,16 +16,10 @@ reassociates the path addition, so float weights could drift vs a
 sequential oracle walk; decimal addition is associative and matches
 the recursive-CTE oracle bit-for-bit.
 
-Driver-job budget (r16, guide §5): each round is ONE eager
-localCheckpoint job plus a cheap convergence aggregate over the
-truncated frame. A persist()-based round (single combined job) was
-implemented and REVERTED: persist does not truncate the logical plan,
-and the state appears twice per round (as itself and as its own join
-target), so the analyzed tree has 2^rounds paths — analyzer tree
-walks hung the driver and OOMed the heap on deep chains; only the
-checkpoint's plan→LogicalRDD truncation bounds the tree (and its RDDs
-are ContextCleaner-collectable, so repeated calls don't leak cache
-entries). vs r15 the round count still shrinks: the state carries
+Driver-job budget: each round is ONE eager checkpoint job plus a
+cheap convergence aggregate over the truncated frame (the state
+appears twice per round, as itself and as its own join target, so an
+untruncated plan would have 2^rounds paths). The state carries
 ``at_root`` ("my jump pointer is a root"), which composes exactly
 (new at_root = target's at_root), so the loop stops the same round
 convergence happens — no extra no-change round — and the orphan test
@@ -39,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..artifacts import materialize
 
 __all__ = ["ancestor_rollup"]
 
@@ -75,7 +71,7 @@ def ancestor_rollup(nodes: DataFrame, id_col: str = "id",
                      (F.col("parent") == F.col("id")).alias("p_is_root"))
     is_root = F.col("id") == F.col("parent")
     zero_w = F.lit(0).cast(base.schema["w"].dataType)
-    state = (
+    state = materialize(
         base.join(pw, "parent", "left")
         .select(
             "id",
@@ -89,9 +85,8 @@ def ancestor_rollup(nodes: DataFrame, id_col: str = "id",
             # roots always self-match in pw, so "marker absent" alone is
             # the orphan signal (a NULL parent also lands here — ``~is_root``
             # would go NULL on it and hide the orphan from max())
-            F.col("_parent_seen").isNull().alias("__orphan"))
-        .localCheckpoint(eager=True)
-    )
+            F.col("_parent_seen").isNull().alias("__orphan")),
+        "eager")
     # one cheap aggregate over the truncated state answers both the
     # orphan test and "how many nodes still point below a root"
     row = state.agg(
@@ -117,16 +112,15 @@ def ancestor_rollup(nodes: DataFrame, id_col: str = "id",
                               F.col("d").alias("jd"),
                               F.col("s").alias("js"),
                               F.col("at_root").alias("jat_root"))
-        new_state = (
+        new_state = materialize(
             state.join(target, state.jump == target.jid)
             .select("id", F.col("jjump").alias("jump"),
                     (F.col("d") + F.col("jd")).alias("d"),
                     (F.col("s") + F.col("js")).alias("s"),
                     # my new jump is the target's jump, so "my jump is
                     # a root" is exactly the target's own flag
-                    F.col("jat_root").alias("at_root"))
-            .localCheckpoint(eager=True)
-        )
+                    F.col("jat_root").alias("at_root")),
+            "eager")
         unresolved = new_state.agg(
             F.sum((~F.col("at_root")).cast("int"))).first()[0] or 0
         state = new_state

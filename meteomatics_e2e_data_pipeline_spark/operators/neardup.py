@@ -12,13 +12,14 @@ Designed for the 100 TB shape of the problem:
 - **Cross-engine reproducible hashing** (``textops.base_hash48``) so the
   whole sketch is oracle-checkable in DuckDB, not just "plausible".
 
-Persist lifetime: the pair operators persist shared subplans
-(MEMORY_AND_DISK) and deliberately do NOT unpersist — the returned frame
-is lazy, so the blocks must outlive this function, and Spark evicts
-memory blocks LRU. The assumption is the usual one-action-per-query
-shape; a long-lived service calling these in a loop should materialize
-signatures to a table between stages instead (see near_dup_pairs notes),
-which is also the right shape at warehouse scale.
+Cache lifetime: the pair operators return LAZY frames, so they only
+register the subplans they share (``artifacts.materialize(df,
+"shared")``) and leave the release to the caller's
+``artifacts.scope()``. Operators whose outputs are eager checkpoints
+(:func:`connected_components`, :func:`init_near_dup_state` and the two
+CDC folds) open their own scope, so a fold loop caches nothing past
+each fold. With no scope open, shared frames stay cached until Spark
+evicts them.
 
 Default parameters: 24 permutations in 6 bands of 4 rows — the LSH
 S-curve crosses ~50% candidate probability near Jaccard ≈ (1/6)^(1/4) ≈
@@ -28,9 +29,9 @@ S-curve crosses ~50% candidate probability near Jaccard ≈ (1/6)^(1/4) ≈
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize, scope
 from .incremental import net_changes
 from .textops import MINHASH_P, base_hash48, tokens
 
@@ -185,12 +186,10 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     already collapses. Default None = exact behavior, used by the
     oracle-checked queries.
 
-    The band rows feed BOTH sides of the self-join, so they are persisted:
+    The band rows feed BOTH sides of the self-join, so they are shared:
     without it every upstream stage (tokenize → shingle → hash → signature
     agg) runs twice, once per side. N·BANDS rows of (id, band_id, hash) is
     a small cache even at corpus scale."""
-    from pyspark import StorageLevel
-
     b = band_rows(sigs, id_col)
     if max_bucket is not None:
         if max_bucket < 2:
@@ -200,7 +199,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
               .filter(F.col("__bs") <= max_bucket)
               .select("band_id", "band_hash"))
         b = b.join(ok, ["band_id", "band_hash"], "left_semi")
-    b = b.persist(StorageLevel.MEMORY_AND_DISK)
+    b = materialize(b, "shared")
     left = b.withColumnRenamed(id_col, "id_a")
     right = b.withColumnRenamed(id_col, "id_b")
     return (
@@ -223,17 +222,13 @@ def near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     The shingle-hash subplan is shared by FIVE consumers (the signature
     aggregate feeding the band self-join, both sides of the intersection
-    join, the size aggregate), so it is persisted — tokenize+shingle+hash
+    join, the size aggregate), so it is shared — tokenize+shingle+hash
     runs once, not per consumer (the band rows inside
-    :func:`lsh_candidate_pairs` are persisted for the same reason). On a
+    :func:`lsh_candidate_pairs` are shared for the same reason). On a
     real lake the same effect is had by materializing signatures to a
-    table between stages; within a single query, persist is the idiomatic
-    form (MEMORY_AND_DISK spills rather than recomputing).
+    table between stages.
     """
-    from pyspark import StorageLevel
-
-    sh = shingle_hashes(docs, id_col, text_col, n) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize(shingle_hashes(docs, id_col, text_col, n), "shared")
     cand = lsh_candidate_pairs(minhash_from_shingles(sh, id_col), id_col)
     return verify_jaccard(cand, sh, id_col, threshold)
 
@@ -312,21 +307,20 @@ def jaccard_prefix_pairs(docs: DataFrame, id_col: str = "doc_id",
     prefix-bucket collision counts (rare-first ordering keeps those
     buckets small). Both shuffle on shingle-hash keys — never O(N²).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     # a prebuilt (already materialized) shingle table skips both the
-    # recompute AND the local persist — the production shape where the
+    # recompute AND the local cache — the production shape where the
     # dedup pipeline writes shingles once and every set-similarity
     # operator reads the table
     sh = (prebuilt_shingles if prebuilt_shingles is not None
-          else shingle_hashes(docs, id_col, text_col, n)
-          .persist(StorageLevel.MEMORY_AND_DISK))
+          else materialize(shingle_hashes(docs, id_col, text_col, n),
+                           "shared"))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     freq = sh.groupBy("hv").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy(id_col).orderBy(F.col("df").asc(),
                                            F.col("hv").asc())
-    prefix = (
+    prefix = materialize(  # feeds both sides of the join
         sh.join(freq, "hv")
         .withColumn("rk", F.row_number().over(w))
         .join(sizes, id_col)
@@ -336,19 +330,14 @@ def jaccard_prefix_pairs(docs: DataFrame, id_col: str = "doc_id",
         # pairs); the oracle applies the identical guard
         .filter(F.col("rk")
                 <= F.col("n_sh")
-                - F.ceil(F.round(F.lit(threshold) * F.col("n_sh"), 9)) + 1)
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # feeds both sides of the join
+                - F.ceil(F.round(F.lit(threshold) * F.col("n_sh"), 9)) + 1),
+        "shared")
     pa = prefix.select(F.col(id_col).alias("id_a"), "hv")
     pb = prefix.select(F.col(id_col).alias("id_b"), "hv")
-    cand = (
-        pa.join(pb, "hv")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        # verification consumes cand twice (semi-join + outer attach);
-        # without persist the whole prefix chain would run per consumer
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # verification consumes cand twice (semi-join + outer attach)
+    cand = materialize(pa.join(pb, "hv")
+                       .filter(F.col("id_a") < F.col("id_b"))
+                       .select("id_a", "id_b").distinct(), "shared")
     # Moderate thresholds make the prefix candidate set broad, so count
     # intersections from the inverted index (∝ Σ df²), not per pair.
     return verify_jaccard(cand, sh, id_col, threshold, mode="inverted")
@@ -405,12 +394,11 @@ def containment_prefix_pairs(docs: DataFrame, id_col: str = "doc_id",
     round-before-ceil FP guard as the Jaccard prefix — no float
     comparison.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     sh = (prebuilt_shingles if prebuilt_shingles is not None
-          else shingle_hashes(docs, id_col, text_col, n)
-          .persist(StorageLevel.MEMORY_AND_DISK))
+          else materialize(shingle_hashes(docs, id_col, text_col, n),
+                           "shared"))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     freq = sh.groupBy("hv").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy(id_col).orderBy(F.col("df").asc(),
@@ -422,12 +410,9 @@ def containment_prefix_pairs(docs: DataFrame, id_col: str = "doc_id",
     import math
     r_cap = math.ceil(round(threshold * min_n, 9))
     # one ranked frame feeds BOTH the a-side prefix and the b-side cap
-    ranked = (
-        sh.join(freq, "hv")
-        .withColumn("rk", F.row_number().over(w))
-        .join(sizes, id_col)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    ranked = materialize(sh.join(freq, "hv")
+                         .withColumn("rk", F.row_number().over(w))
+                         .join(sizes, id_col), "shared")
     prefix = (
         ranked.filter(F.col("rk") <= F.col("n_sh") - need + 1)
         .select(F.col(id_col).alias("id_a"), "hv")
@@ -436,12 +421,9 @@ def containment_prefix_pairs(docs: DataFrame, id_col: str = "doc_id",
         ranked.filter(F.col("rk") <= F.col("n_sh") - F.lit(r_cap) + 1)
         .select(F.col(id_col).alias("id_b"), "hv")
     )
-    cand = (
-        prefix.join(index_b, "hv")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b").distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    cand = materialize(prefix.join(index_b, "hv")
+                       .filter(F.col("id_a") != F.col("id_b"))
+                       .select("id_a", "id_b").distinct(), "shared")
     sh_a = sh.select(F.col(id_col).alias("id_a"), "hv")
     sh_b = sh.select(F.col(id_col).alias("id_b"), "hv")
     inter = (
@@ -556,8 +538,6 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     all-pairs); verification is one ``bit_count(xor)`` per candidate.
     Output: (doc_a, doc_b, hamming).
     """
-    from pyspark import StorageLevel
-
     if max_hamming >= SIMHASH_BANDS:
         # the pigeonhole guarantee needs bands > threshold; a larger
         # threshold would silently lose pairs whose differing bits spread
@@ -565,7 +545,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
         raise ValueError(
             f"max_hamming must be < {SIMHASH_BANDS} bands for exact "
             f"blocking, got {max_hamming}")
-    fp = simhash(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    fp = materialize(simhash(docs, id_col, text_col), "shared")
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -627,9 +607,7 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
     checkpoint plus a filter+limit+count job per round and two more at
     construction). The checkpoint's plan truncation is STRUCTURAL, not
     optional — ``work`` appears twice per round, so an untruncated
-    tree doubles per round; a persist()-based round (no truncation)
-    was tried in r16 and reverted after the analyzer hung/OOMed on
-    deep graphs in the sibling propagation loop. ``verts`` is consumed
+    tree doubles per round. ``verts`` is consumed
     exactly once (the final label join), so it is left fully lazy:
     materializing it early would add a job without saving any work.
     """
@@ -638,9 +616,9 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
     verts = (edges.select("u")
              .unionByName(edges.select(F.col("v").alias("u")))
              .distinct())
-    work = (edges.select(F.greatest("u", "v").alias("hi"),
-                         F.least("u", "v").alias("lo"))
-            .distinct().localCheckpoint(eager=True))
+    work = materialize(edges.select(F.greatest("u", "v").alias("hi"),
+                                    F.least("u", "v").alias("lo"))
+                       .distinct(), "eager")
     for _ in range(max_iter):
         # -- large-star --
         sym = (work.select(F.col("hi").alias("n"), F.col("lo").alias("m"))
@@ -657,12 +635,12 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
         # -- small-star (input already oriented hi → lo) --
         smins = large.groupBy("hi").agg(F.min("lo").alias("mn"))
         withm = large.join(smins, "hi")
-        new_work = (
+        new_work = materialize(
             withm.select("hi", F.col("mn").alias("lo"))
             .unionByName(withm.filter(F.col("lo") != F.col("mn"))
                          .select(F.col("lo").alias("hi"),
                                  F.col("mn").alias("lo")))
-            .distinct().localCheckpoint(eager=True))
+            .distinct(), "eager")
         # one job: materializes new_work's checkpoint AND answers the
         # fixed-point test (a full aggregate, not filter+limit+count —
         # a limit could short-circuit before every partition computes)
@@ -684,6 +662,7 @@ def connected_components_star(pairs: DataFrame, src: str = "doc_a",
         "pathological input, not a long chain)")
 
 
+@scope()
 def connected_components(pairs: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b",
                          max_iter: int = 30,
@@ -709,78 +688,61 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
       adversarial long-chain graphs pass ``algorithm="star"`` to run
       :func:`connected_components_star` (large-star/small-star,
       O(log d) rounds) behind the same contract;
-    - the edge list is persisted once and re-read per iteration; labels
-      are O(V), edges O(E), never materializing pairs² anything.
+    - the edge list is shared by every iteration and released on
+      return; labels are O(V), edges O(E), never materializing pairs²
+      anything.
 
     Returns (vertex, label) with one row per distinct endpoint of
     ``pairs``. Raises if ``max_iter`` passes without convergence rather
     than returning a half-propagated labeling.
     """
-    from pyspark import StorageLevel
-
     if algorithm == "star":
         return connected_components_star(pairs, src, dst)
     if algorithm != "propagation":
         raise ValueError(f"unknown algorithm {algorithm!r}; "
                          "expected 'propagation' or 'star'")
 
-    edges = (
+    edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(pairs.select(F.col(dst).alias("u"),
                                   F.col(src).alias("v")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Rounds MUST be localCheckpoint(eager=True) — measured AND
-    # structural (r16): a persist()-based round (one combined
-    # materialize+convergence job) was implemented and it EXPLODED on
-    # deep graphs — persist does not truncate the logical plan, each
-    # round references the previous one twice (own ∪ neighbor), so the
-    # analyzed tree has 2^iterations paths and analyzer rules like
-    # UpdateAttributeNullability walk (and reallocate) every path: a
-    # 15-vertex chain graph hung the driver in the ANALYZER and the
-    # property-test lane OOMed an 8 GB heap. Only the checkpoint's
-    # DataFrame-level truncation (plan → LogicalRDD) bounds the tree;
-    # its RDDs are also ContextCleaner-collectable, unlike CacheManager
-    # entries, so repeated calls in one session do not leak. The
+        .distinct(), "shared")
+    # Each round references the previous one twice (own ∪ neighbor), so
+    # rounds are eager checkpoints: an untruncated plan has
+    # 2^iterations paths (a 15-vertex chain hung the analyzer). The
     # convergence aggregate then reads the truncated frame — a cheap
     # second job per round on the already-materialized RDD.
-    labels = (edges.select("u").distinct()
-              .select("u", F.col("u").alias("lbl"))
-              .localCheckpoint(eager=True))
-    try:
-        for _ in range(max_iter):
-            # Tag each unioned row with whether it carries the vertex's
-            # OWN current label; the propagation aggregate then yields
-            # both the new label (min over own+neighbors) and the old one
-            # (min over the single own row) in ONE job, so convergence
-            # detection needs no separate old-vs-new join per iteration.
-            own = labels.select("u", "lbl", F.lit(True).alias("__own"))
-            neighbor = (
-                edges.join(labels.withColumnRenamed("u", "v"), "v")
-                .select("u", "lbl", F.lit(False).alias("__own"))
-            )
-            new_labels = (
-                own.unionByName(neighbor)
-                .groupBy("u")
-                .agg(F.min("lbl").alias("lbl"),
-                     F.min(F.when(F.col("__own"), F.col("lbl"))).alias("__old"))
-                .select("u", "lbl",
-                        (F.col("lbl") != F.col("__old")).alias("__chg"))
-                .localCheckpoint(eager=True)
-            )
-            changed = new_labels.agg(
-                F.max(F.col("__chg").cast("int"))).first()[0]
-            labels = new_labels.select("u", "lbl")
-            if not changed:
-                return labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "iterations — component diameter exceeds the cap; raise "
-            "max_iter or pass algorithm='star' (large-star/small-star, "
-            "logarithmic rounds)")
-    finally:
-        edges.unpersist()
+    labels = materialize(edges.select("u").distinct()
+                         .select("u", F.col("u").alias("lbl")), "eager")
+    for _ in range(max_iter):
+        # Tag each unioned row with whether it carries the vertex's
+        # OWN current label; the propagation aggregate then yields
+        # both the new label (min over own+neighbors) and the old one
+        # (min over the single own row) in ONE job, so convergence
+        # detection needs no separate old-vs-new join per iteration.
+        own = labels.select("u", "lbl", F.lit(True).alias("__own"))
+        neighbor = (
+            edges.join(labels.withColumnRenamed("u", "v"), "v")
+            .select("u", "lbl", F.lit(False).alias("__own"))
+        )
+        new_labels = materialize(
+            own.unionByName(neighbor)
+            .groupBy("u")
+            .agg(F.min("lbl").alias("lbl"),
+                 F.min(F.when(F.col("__own"), F.col("lbl"))).alias("__old"))
+            .select("u", "lbl",
+                    (F.col("lbl") != F.col("__old")).alias("__chg")),
+            "eager")
+        changed = new_labels.agg(
+            F.max(F.col("__chg").cast("int"))).first()[0]
+        labels = new_labels.select("u", "lbl")
+        if not changed:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} "
+        "iterations — component diameter exceeds the cap; raise "
+        "max_iter or pass algorithm='star' (large-star/small-star, "
+        "logarithmic rounds)")
 
 
 def dup_clusters(pairs: DataFrame, src: str = "doc_a",
@@ -892,19 +854,16 @@ def near_dup_pairs_incremental(corpus: DataFrame, batch: DataFrame,
     ``corpus`` and ``batch`` must be disjoint in ``id_col``; the output
     pair is normalized to (least, greatest).
     """
-    from pyspark import StorageLevel
-
     if corpus_index is not None:
         sh_c = corpus_index["shingles"]
         bands_c = corpus_index["bands"]
     else:
-        sh_c = shingle_hashes(corpus, id_col, text_col, n) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        sh_c = materialize(shingle_hashes(corpus, id_col, text_col, n),
+                           "shared")
         bands_c = band_rows(minhash_from_shingles(sh_c, id_col), id_col)
-    sh_b = shingle_hashes(batch, id_col, text_col, n) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    bands_b = band_rows(minhash_from_shingles(sh_b, id_col), id_col) \
-        .persist(StorageLevel.MEMORY_AND_DISK)  # feeds cross AND self join
+    sh_b = materialize(shingle_hashes(batch, id_col, text_col, n), "shared")
+    bands_b = materialize(  # feeds cross AND self join
+        band_rows(minhash_from_shingles(sh_b, id_col), id_col), "shared")
     b_side = bands_b.withColumnRenamed(id_col, "id_x")
     cross = (
         b_side.join(bands_c.withColumnRenamed(id_col, "id_y"),
@@ -918,12 +877,12 @@ def near_dup_pairs_incremental(corpus: DataFrame, batch: DataFrame,
         .filter(F.col("id_x") < F.col("id_y"))
         .select(F.col("id_x").alias("id_a"), F.col("id_y").alias("id_b"))
     )
-    cand = cross.unionByName(self_).distinct() \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    cand = materialize(cross.unionByName(self_).distinct(), "shared")
     sh = sh_c.unionByName(sh_b)
     return verify_jaccard(cand, sh, id_col, threshold)
 
 
+@scope()
 def init_near_dup_state(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         threshold: float = 0.5) -> dict:
@@ -936,22 +895,21 @@ def init_near_dup_state(docs: DataFrame, id_col: str = "doc_id",
     — what makes later folds' work truly ∝ the increment: without them
     every fold would re-shingle and re-band the whole corpus just to
     join the new batch against it."""
-    corpus = docs.select(id_col, text_col).localCheckpoint(eager=True)
-    sh = shingle_hashes(corpus, id_col, text_col, n) \
-        .localCheckpoint(eager=True)
-    bands = band_rows(minhash_from_shingles(sh, id_col), id_col) \
-        .localCheckpoint(eager=True)
-    pairs = near_dup_pairs(corpus, id_col, text_col, n, threshold) \
-        .localCheckpoint(eager=True)
-    clusters = dup_clusters(pairs).localCheckpoint(eager=True)
+    corpus = materialize(docs.select(id_col, text_col), "eager")
+    sh = materialize(shingle_hashes(corpus, id_col, text_col, n), "eager")
+    bands = materialize(
+        band_rows(minhash_from_shingles(sh, id_col), id_col), "eager")
+    pairs = materialize(
+        near_dup_pairs(corpus, id_col, text_col, n, threshold), "eager")
+    clusters = materialize(dup_clusters(pairs), "eager")
     return {"corpus": corpus, "pairs": pairs, "clusters": clusters,
             "shingles": sh, "bands": bands}
 
 
+@scope()
 def fold_cdc_near_dup(changes: DataFrame, state: dict,
                       id_col: str = "doc_id", text_col: str = "text",
-                      n: int = 3, threshold: float = 0.5,
-                      materialize: bool = True) -> dict:
+                      n: int = 3, threshold: float = 0.5) -> dict:
     """Fold ONE change-data-feed window into a maintained near-dup index
     — the composition of the lakehouse tier's CDC feed
     (``TxTable.read_changes`` / the ``txlog_cdc`` stream: rows tagged
@@ -984,17 +942,11 @@ def fold_cdc_near_dup(changes: DataFrame, state: dict,
     and both phases reproduce exactly the edge set of the post-window
     corpus — pairs(after) = pairs(before) ∖ touching(deleted) ∪
     touching(inserted), which LSH banding preserves (signatures are
-    per-document). With ``materialize=True`` (default) the output
-    frames are eagerly localCheckpointed so an IN-MEMORY streaming
-    driver (foreachBatch over ``txlog_cdc``) can fold window after
-    window without plan growth — note this makes every fold pay
-    O(corpus) materialization IO regardless of batch size (measured:
-    the checkpoint discipline, not the compute, dominates small-batch
-    folds). A caller that immediately persists the returned frames to
-    a lake table (the durable loop) should pass ``materialize=False``:
-    the plans then flow straight into the table write — one
-    materialization instead of two — and the next fold reads the
-    TABLE, so lineage never grows anyway.
+    per-document). The output frames are eager checkpoints so an
+    IN-MEMORY streaming driver (foreachBatch over ``txlog_cdc``) can
+    fold window after window without plan growth — every fold pays
+    O(corpus) materialization IO regardless of batch size; the durable
+    loop uses :func:`fold_cdc_near_dup_delta` instead.
     """
     corpus, pairs, clusters = (state["corpus"], state["pairs"],
                                state["clusters"])
@@ -1008,8 +960,7 @@ def fold_cdc_near_dup(changes: DataFrame, state: dict,
     bands_cur = state.get("bands")
     if bands_cur is None:
         bands_cur = band_rows(minhash_from_shingles(sh_cur, id_col), id_col)
-    net = net_changes(changes, [id_col, text_col]).localCheckpoint(
-        eager=True)
+    net = materialize(net_changes(changes, [id_col, text_col]), "eager")
     is_ins = F.col("_change_type") == "insert"
     net_ins = net.filter(is_ins).select(id_col, text_col)
     net_del = net.filter(~is_ins).select(id_col, text_col)
@@ -1050,18 +1001,17 @@ def fold_cdc_near_dup(changes: DataFrame, state: dict,
     corpus_after_del = corpus.join(del_ids, id_col, "left_anti")
     sh_after_del = sh_cur.join(del_ids, id_col, "left_anti")
     bands_after_del = bands_cur.join(del_ids, id_col, "left_anti")
-    ck = ((lambda df: df.localCheckpoint(eager=True)) if materialize
-          else (lambda df: df))
+    def ck(df):
+        return materialize(df, "eager")
+
     if net_ins.isEmpty():
         return {"corpus": ck(corpus_after_del), "pairs": ck(pairs_d),
                 "clusters": ck(clusters_d), "shingles": ck(sh_after_del),
                 "bands": ck(bands_after_del)}
-    # increment-sized and consumed twice (pairs union + cluster fold):
-    # always materialized, independent of the corpus-sized flag
-    new_pairs = near_dup_pairs_incremental(
+    # increment-sized and consumed twice (pairs union + cluster fold)
+    new_pairs = ck(near_dup_pairs_incremental(
         corpus_after_del, net_ins, id_col, text_col, n, threshold,
-        corpus_index={"shingles": sh_after_del, "bands": bands_after_del}
-    ).localCheckpoint(eager=True)
+        corpus_index={"shingles": sh_after_del, "bands": bands_after_del}))
     out_pairs = ck(pairs_d.unionByName(new_pairs))
     out_clusters = ck(dup_clusters_incremental(
         clusters_d, new_pairs, id_col=id_col))
@@ -1075,6 +1025,7 @@ def fold_cdc_near_dup(changes: DataFrame, state: dict,
             "bands": out_bands}
 
 
+@scope()
 def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
                             id_col: str = "doc_id",
                             text_col: str = "text", n: int = 3,
@@ -1111,16 +1062,15 @@ def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
       never rewritten.
     """
     st = state_table
-    net = net_changes(changes, [id_col, text_col]).localCheckpoint(
-        eager=True)
+    net = materialize(net_changes(changes, [id_col, text_col]), "eager")
     is_ins = F.col("_change_type") == "insert"
     net_ins = net.filter(is_ins).select(id_col, text_col)
     net_del = net.filter(~is_ins).select(id_col, text_col)
     # Upsert discipline (same as the in-memory fold): an id arriving in
     # the insert set sheds its old rows first, keeping folds idempotent.
-    del_ids = (net_del.select(id_col)
-               .unionByName(net_ins.select(id_col)).distinct()
-               .localCheckpoint(eager=True))
+    del_ids = materialize(net_del.select(id_col)
+                          .unionByName(net_ins.select(id_col)).distinct(),
+                          "eager")
 
     def fr(tag):
         return F.lit(tag).alias("frame")
@@ -1137,10 +1087,9 @@ def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
     if net_ins.isEmpty():
         new_pairs = None
     else:
-        new_pairs = near_dup_pairs_incremental(
+        new_pairs = materialize(near_dup_pairs_incremental(
             None, net_ins, id_col, text_col, n, threshold,
-            corpus_index={"shingles": sh_c, "bands": bands_c}
-        ).localCheckpoint(eager=True)
+            corpus_index={"shingles": sh_c, "bands": bands_c}), "eager")
 
     # Components that can change: those holding a deleted id, plus
     # those incident to a new edge.
@@ -1150,14 +1099,14 @@ def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
             new_pairs.select(F.col("doc_a").alias(id_col))
             .unionByName(new_pairs.select(F.col("doc_b").alias(id_col)))
         ).distinct()
-    ends = ends.localCheckpoint(eager=True)
+    ends = materialize(ends, "eager")
     touched = (st.read_keys(ends.select(fr("clusters"), F.col(id_col)
                                         .alias("doc_id")),
                             ["frame", "doc_id"])
                .select("cluster_id").distinct())
-    members = (st.read_keys(touched.select(fr("clusters"), "cluster_id"),
-                            ["frame", "cluster_id"])
-               .select("doc_id").localCheckpoint(eager=True))
+    members = materialize(
+        st.read_keys(touched.select(fr("clusters"), "cluster_id"),
+                     ["frame", "cluster_id"]).select("doc_id"), "eager")
     # Surviving edges inside the touched components (doc_a membership
     # suffices — both endpoints share the component), minus dead ones.
     sub = (st.read_keys(members.select(fr("pairs"),
@@ -1545,7 +1494,7 @@ def _dup_span_starts(docs: DataFrame, id_col: str, text_col: str,
         w = Window.partitionBy("hv")
         return (sp.withColumn("c", F.count(F.lit(1)).over(w))
                 .filter(F.col("c") >= 2).select(id_col, "pos"))
-    sp = sp.localCheckpoint(eager=True)
+    sp = materialize(sp, "eager")
     dup_set = (sp.groupBy("hv").agg(F.count(F.lit(1)).alias("c"))
                .filter(F.col("c") >= 2).select("hv"))
     words = F.lit(bloom_words_from_hv(dup_set))
@@ -1719,17 +1668,13 @@ def scrub_effect_summary(docs: DataFrame, id_col: str = "doc_id",
     """
     from pyspark.sql import Window
 
-    # persist (r16, guide §5): both consumers (the before-metric
-    # window and the scrub rewrite) live inside the ONE final action
-    # and no driver decision reads the frame, so the materialization
-    # rides that action instead of costing construction-time blocking
-    # jobs (persist, not a lazy localCheckpoint — the latter still
-    # materializes upstream stages at construction under AQE); the
-    # first branch to execute populates the cache the other reads
-    # (block locks serialize concurrent computation of a partition, so
-    # the gram scan still runs once).
-    dup = _dup_span_starts(docs, id_col, text_col, span_len
-                           ).persist(StorageLevel.MEMORY_AND_DISK)
+    # shared: both consumers (the before-metric window and the scrub
+    # rewrite) live inside the ONE final action; the first branch to
+    # execute populates the cache the other reads (block locks
+    # serialize concurrent computation of a partition, so the gram scan
+    # still runs once).
+    dup = materialize(_dup_span_starts(docs, id_col, text_col, span_len),
+                      "shared")
     w = Window.partitionBy(id_col).orderBy("pos")
     before = (dup.withColumn(
         "contrib",
@@ -1740,15 +1685,13 @@ def scrub_effect_summary(docs: DataFrame, id_col: str = "doc_id",
     tok_before = docs.agg(
         F.sum(F.size(tokens(F.col(text_col)))).cast("bigint")
         .alias("tokens_before"))
-    # persist: the after-metric's self-join + base branch would
+    # shared: the after-metric's self-join + base branch would
     # otherwise re-execute the whole scrub rewrite three times; the
     # rebuilt corpus is docs-sized, exactly what a real pipeline would
-    # have written to the lake before re-measuring. Lazy for the same
-    # reason as ``dup`` above — the after-metric is the only consumer
-    # tree and it runs inside the final action.
-    clean = (_scrub_rewrite(docs, dup, id_col, text_col, span_len)
-             .select(id_col, F.col("clean_text").alias(text_col))
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    # have written to the lake before re-measuring.
+    clean = materialize(_scrub_rewrite(docs, dup, id_col, text_col, span_len)
+                        .select(id_col, F.col("clean_text").alias(text_col)),
+                        "shared")
     after = (dup_span_coverage(clean, id_col, text_col, span_len)
              .agg(F.sum("n_tokens").cast("bigint").alias("tokens_after"),
                   F.sum("covered_tokens").cast("bigint")
@@ -1810,8 +1753,8 @@ def exact_substring_scrub_fixpoint(docs: DataFrame, id_col: str = "doc_id",
     rows: list[DataFrame] = []
     cur = docs.select(id_col, F.col(text_col).alias(text_col))
     for p in range(passes + 1):
-        dup = _dup_span_starts(cur, id_col, text_col, span_len
-                               ).localCheckpoint(eager=True)
+        dup = materialize(_dup_span_starts(cur, id_col, text_col, span_len),
+                          "eager")
         tok_total = cur.agg(
             F.sum(F.size(tokens(F.col(text_col)))).cast("bigint")
             .alias("tokens"))
@@ -1844,15 +1787,13 @@ def exact_substring_scrub_fixpoint(docs: DataFrame, id_col: str = "doc_id",
                     F.round(F.lit(0).cast("bigint") / F.col("tokens"), 6)
                     .alias("coverage")))
             break
-        # persist, lazy (r16, guide §5): the next pass's eager ``dup``
-        # checkpoint job materializes this cache en route, and the
-        # pass's token/coverage readers then hit it — one construction
-        # job per pass instead of two. ``dup`` itself stays an EAGER
-        # checkpoint: the isEmpty convergence probe is a driver
-        # decision that reads it immediately.
-        cur = (_scrub_rewrite(cur, dup, id_col, text_col, span_len)
-               .select(id_col, F.col("clean_text").alias(text_col))
-               .persist(StorageLevel.MEMORY_AND_DISK))
+        # shared: the next pass's eager ``dup`` checkpoint job fills
+        # this cache en route, and the pass's token/coverage readers
+        # then hit it — one construction job per pass instead of two.
+        # ``dup`` stays eager: the isEmpty convergence probe reads it.
+        cur = materialize(_scrub_rewrite(cur, dup, id_col, text_col, span_len)
+                          .select(id_col, F.col("clean_text").alias(text_col)),
+                          "shared")
     return reduce(DataFrame.unionAll, rows)
 
 
@@ -2028,27 +1969,19 @@ def pagerank(pairs: DataFrame, iters: int = 3, d: float = PAGERANK_D,
 
     Output: (doc_id, degree, pagerank) for every node of the graph.
     """
-    from pyspark import StorageLevel
-
-    # Materialize the edge list ONCE: without this every iteration's
+    # Share the edge list and degrees: without this every iteration's
     # join re-runs whatever pipeline produced `pairs` (for the near-dup
     # graph that is the full banded discovery — iters× the dominant
-    # cost). Same artifact discipline as the incremental pair cache.
-    # r16 (guide §5): edges/deg are persisted and BOTH ride the one
-    # unavoidable driver action (the N count); the fixed-iteration loop
-    # itself is left fully lazy — no driver ever reads a mid-loop
-    # frame, so the old per-iteration eager checkpoints were pure
-    # blocking-job overhead (3 extra driver syncs per query). Plan
-    # depth is iters (=3) joins over cached leaves — O(1) per round for
-    # the planner via InMemoryRelation substitution.
-    edges = (
+    # cost). Both fill during the one unavoidable driver action (the N
+    # count); the fixed-iteration loop stays lazy — no driver reads a
+    # mid-loop frame — and its plan is iters (=3) joins over cached
+    # leaves.
+    edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(pairs.select(F.col(dst).alias("u"),
-                                  F.col(src).alias("v")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+                                  F.col(src).alias("v"))), "shared")
+    deg = materialize(edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg")),
+                      "shared")
     n = deg.count()
     base = (1.0 - d) / n
     pr = deg.select(F.col("u").alias("node"), F.lit(1.0 / n).alias("pr"))
@@ -2088,32 +2021,26 @@ def kcore(pairs: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
     Scale shape: each round is one map-side-combinable degree aggregate
     plus two keyed LEFT SEMI joins (edge endpoint ∈ survivors) — no
     broadcast of vertex sets needed, no all-pairs anything; each
-    round's edge set is a LAZY localCheckpoint: the plan truncates to
-    a LogicalRDD per round (essential — each round references the
-    previous one three times, so an untruncated tree would grow 3^r;
-    a persist()-based round was tried in r16 and reverted for exactly
-    that analyzer blowup on the sibling loops) while the
-    materialization of the final stage rides the consumer's ONE
-    action (r16, guide §5: the r15 per-round EAGER checkpoints cost
-    rounds+1 driver-blocking jobs for a loop no driver decision ever
-    reads). Real k-core peel counts are tiny in
+    round's edge set is materialized as ``"truncate"``: the plan
+    truncates to a LogicalRDD per round (essential — each round
+    references the previous one three times, so an untruncated tree
+    would grow 3^r) while the materialization of the final stage rides
+    the consumer's ONE action (no driver decision reads a round).
+    Real k-core peel counts are tiny in
     practice (peeling is monotone: total work is bounded by
     Σ rounds · |E|)."""
-    edges = (
+    edges = materialize(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .unionByName(
             pairs.select(F.col("doc_b").alias("u"),
-                         F.col("doc_a").alias("v")))
-        .localCheckpoint(eager=False)
-    )
+                         F.col("doc_a").alias("v"))), "truncate")
     for _ in range(rounds):
         deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
-        edges = (
+        edges = materialize(
             edges.join(keep, "u", "left_semi")
-            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .localCheckpoint(eager=False)
-        )
+            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi"),
+            "truncate")
     return (edges.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
             .select(F.col("u").alias("doc_id"), "core_degree"))
 

@@ -24,11 +24,11 @@ for free):
    window for exclusive offsets + the grand total, broadcast back;
 5. global rank / cumsum = range offset + local value: row-local.
 
-The input is ``persist``-ed so the boundary-estimate branch and the
-main pass read ONE materialization (the frames are dimension-grain
-rollups — bounded by contract; persisting also means the fact is
-scanned once), and the materialization rides the consumer's action —
-no construction-time blocking job (r16).
+The input is shared (``artifacts.materialize``) so the
+boundary-estimate branch and the main pass read ONE materialization
+(the frames are dimension-grain rollups — bounded by contract; sharing
+also means the fact is scanned once), and the materialization rides
+the consumer's action — no construction-time blocking job.
 
 Exactness: ranks are integers built from row_number — no floating
 arithmetic — so ``global_ntile`` reproduces SQL ``ntile`` bit-for-bit
@@ -60,9 +60,10 @@ module serves the engine's analytics extension with the documented
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..artifacts import materialize
 
 __all__ = ["estimate_range_cuts", "global_ntile", "global_row_number",
            "global_running_sum", "global_running_sums", "quantile_cut"]
@@ -106,20 +107,11 @@ def _range_bucketed(df: DataFrame, value_col: str, descending: bool,
     boundaries from :func:`estimate_range_cuts`."""
     if n_ranges < 2:
         raise ValueError(f"n_ranges must be >= 2, got {n_ranges}")
-    # persist(), NOT localCheckpoint (r16, guide §5): all three
-    # consumers of the snapshot (boundary-estimate branch, local
-    # ranking, offsets aggregate) live inside the consumer's one
-    # action, and no driver decision reads it — so the materialization
-    # must ride that action. A localCheckpoint cannot deliver that even
-    # with eager=False: building the checkpoint RDD calls toRdd, and
-    # under AQE that MATERIALIZES every upstream query stage as
-    # construction-time jobs (measured: a 2-stage plan paid 2 jobs /
-    # 4.5 s at lazy-checkpoint construction vs 0 for persist). persist
-    # is genuinely lazy, and the cache substitutes into every consumer
-    # pre-optimization, preserving the one-materialization / one-scan
-    # property (the frames are dimension-grain rollups — bounded).
-    snap = (df.persist(StorageLevel.MEMORY_AND_DISK)
-            if checkpoint else df)
+    # shared: all three consumers of the snapshot (boundary-estimate
+    # branch, local ranking, offsets aggregate) live inside the
+    # consumer's one action (the frames are dimension-grain rollups —
+    # bounded).
+    snap = materialize(df, "shared") if checkpoint else df
     if cuts is None:
         # Lazy boundary estimate (r15): the cut array rides the plan as
         # a broadcast 1-row cross join instead of a driver-synchronous

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize, scope
+
 
 def _dot(a: Column, b: Column) -> Column:
     prod = F.zip_with(a.cast("array<double>"), b.cast("array<double>"),
@@ -325,10 +327,8 @@ def cosine_pair_scores(corpus: DataFrame, centroids: DataFrame,
     identically), never on the display-rounded value — a pair whose raw
     cosine sits just below the cut but rounds up would otherwise flip
     across engines. Output: (id_a, id_b, bucket, cos_raw)."""
-    from pyspark import StorageLevel
-
-    assigned = (ivf_assign(corpus, centroids, id_col, vec_col)
-                .persist(StorageLevel.MEMORY_AND_DISK))
+    assigned = materialize(ivf_assign(corpus, centroids, id_col, vec_col),
+                           "shared")
     a = (assigned.select(F.col(id_col).alias("id_a"),
                          F.col(vec_col).alias("q_vec"), "bucket")
          .withColumn("__qn", _norm(F.col("q_vec"))))
@@ -400,7 +400,7 @@ def train_ivf_centroids(corpus: DataFrame, k: int, iters: int = 3,
         # On a multi-executor cluster prefer a reliable checkpoint dir
         # (localCheckpoint blocks die with their executor); in this
         # single-JVM engine local is the right cost.
-        new = new.localCheckpoint(eager=True)
+        new = materialize(new, "eager")
         # carry forward centroids whose bucket went empty; all inputs are
         # checkpointed (prev centroids / new), so the union's lineage
         # stays one level deep
@@ -739,8 +739,6 @@ def pca1_direction(corpus: DataFrame, dim: int, iters: int = 4,
     the parity discipline."""
     import math
 
-    from pyspark import StorageLevel
-
     x = corpus.select(F.col(vec_col).cast("array<double>").alias("__v"))
     mrows = (x.select(F.posexplode("__v").alias("pos", "xj"))
              .groupBy("pos")
@@ -749,23 +747,23 @@ def pca1_direction(corpus: DataFrame, dim: int, iters: int = 4,
              .orderBy("pos").collect())
     mu = [round(float(r["s"]) / float(r["n"]), 6) for r in mrows]
     mu_lit = F.array(*[F.lit(float(m)) for m in mu])
-    xc = (x.withColumn("__c", F.zip_with(F.col("__v"), mu_lit,
-                                         lambda a, b: a - b))
-          .select("__c").persist(StorageLevel.MEMORY_AND_DISK))
     v = [1.0] + [0.0] * (dim - 1)
-    for _ in range(iters):
-        vlit = F.array(*[F.lit(float(c)) for c in v])
-        urows = (
-            xc.select(_dot(F.col("__c"), vlit).alias("w"),
-                      F.posexplode("__c").alias("pos", "xj"))
-            .groupBy("pos")
-            .agg(F.sum((F.col("w") * F.col("xj"))
-                       .cast("decimal(25,12)")).alias("s"))
-            .orderBy("pos").collect())
-        u = [round(float(r["s"]), 6) for r in urows]
-        nrm = math.sqrt(sum(c * c for c in u))
-        v = [c / nrm for c in u]
-    xc.unpersist()
+    with scope():
+        xc = materialize(x.withColumn("__c", F.zip_with(
+            F.col("__v"), mu_lit, lambda a, b: a - b)).select("__c"),
+            "shared")
+        for _ in range(iters):
+            vlit = F.array(*[F.lit(float(c)) for c in v])
+            urows = (
+                xc.select(_dot(F.col("__c"), vlit).alias("w"),
+                          F.posexplode("__c").alias("pos", "xj"))
+                .groupBy("pos")
+                .agg(F.sum((F.col("w") * F.col("xj"))
+                           .cast("decimal(25,12)")).alias("s"))
+                .orderBy("pos").collect())
+            u = [round(float(r["s"]), 6) for r in urows]
+            nrm = math.sqrt(sum(c * c for c in u))
+            v = [c / nrm for c in u]
     return mu, v
 
 
@@ -1000,70 +998,70 @@ def train_pq_codebook(corpus: DataFrame, dim: int, m: int = 8,
     ``n_cent`` vectors, so training from iters=0 IS the untrained
     codebook and distortion is non-increasing in ``iters``.
     """
-    from pyspark import StorageLevel
-
     subdim, rem = divmod(dim, m)
     if rem:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    cb = pq_codebook(corpus, n_cent, id_col, vec_col) \
-        .localCheckpoint(eager=True)
-    base = (corpus.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("__v"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    for _ in range(iters):
-        dists = (
-            base.join(F.broadcast(cb))
-            .select(id_col, "cid", "__v",
-                    *[_sub_sqdist(F.col("__v"), F.col("cvec"), j, subdim)
-                      .alias(f"__d{j}") for j in range(m)])
-        )
-        assigned = dists.groupBy(id_col).agg(
-            F.first("__v").alias("__v"),
-            *[F.min_by(F.col("cid"),
-                       F.struct(F.col(f"__d{j}"), F.col("cid")))
-              .alias(f"c{j}") for j in range(m)])
-        subs = (
-            assigned
-            .select(F.explode(F.array(*[
-                F.struct(F.lit(j).alias("j"), F.col(f"c{j}").alias("cid"),
-                         F.slice("__v", j * subdim + 1, subdim).alias("sv"))
-                for j in range(m)])).alias("s"))
-            .select("s.j", "s.cid", "s.sv")
-        )
-        # decimal-sum means rounded to 6 dp — order-free and engine-free,
-        # the property that lets the fixed-iteration oracle unroll this
-        # loop in SQL (same idiom as train_ivf_centroids)
-        dims = (subs.select("j", "cid", F.posexplode("sv").alias("pos", "x"))
-                .groupBy("j", "cid", "pos")
-                .agg(F.round(F.sum(F.col("x").cast("decimal(25,12)"))
-                             .cast("double") / F.count(F.lit(1)), 6)
-                     .alias("mval")))
-        new_slices = (
-            dims.groupBy("j", "cid")
-            .agg(F.sort_array(F.collect_list(F.struct("pos", "mval")))
-                 .alias("pm"))
-            .select("j", "cid",
-                    F.expr("transform(pm, s -> s.mval)").alias("sv")))
-        prev_slices = (
-            cb.select("cid", F.explode(F.array(*[
-                F.struct(F.lit(j).alias("j"),
-                         F.slice("cvec", j * subdim + 1, subdim).alias("sv"))
-                for j in range(m)])).alias("s"))
-            .select(F.col("s.j").alias("j"), "cid",
-                    F.col("s.sv").alias("sv_prev")))
-        merged = (prev_slices.join(new_slices, ["j", "cid"], "left")
-                  .select("j", "cid",
-                          F.coalesce("sv", "sv_prev").alias("sv")))
-        cb = (merged.groupBy("cid")
-              .agg(F.sort_array(F.collect_list(F.struct("j", "sv")))
-                   .alias("js"))
-              .select("cid",
-                      F.expr("flatten(transform(js, s -> s.sv))")
-                      .alias("cvec"))
-              .localCheckpoint(eager=True))
-    # cb is materialized by the eager checkpoint, so the cached corpus
-    # projection can be released before the serve path rescans the corpus
-    base.unpersist()
+    cb = materialize(pq_codebook(corpus, n_cent, id_col, vec_col), "eager")
+    # cb is an eager checkpoint, so the scope can release the cached
+    # corpus projection before the serve path rescans the corpus
+    with scope():
+        base = materialize(corpus.select(
+            id_col, F.col(vec_col).cast("array<double>").alias("__v")),
+            "shared")
+        for _ in range(iters):
+            dists = (
+                base.join(F.broadcast(cb))
+                .select(id_col, "cid", "__v",
+                        *[_sub_sqdist(F.col("__v"), F.col("cvec"), j, subdim)
+                          .alias(f"__d{j}") for j in range(m)])
+            )
+            assigned = dists.groupBy(id_col).agg(
+                F.first("__v").alias("__v"),
+                *[F.min_by(F.col("cid"),
+                           F.struct(F.col(f"__d{j}"), F.col("cid")))
+                  .alias(f"c{j}") for j in range(m)])
+            subs = (
+                assigned
+                .select(F.explode(F.array(*[
+                    F.struct(F.lit(j).alias("j"),
+                             F.col(f"c{j}").alias("cid"),
+                             F.slice("__v", j * subdim + 1, subdim)
+                             .alias("sv"))
+                    for j in range(m)])).alias("s"))
+                .select("s.j", "s.cid", "s.sv")
+            )
+            # decimal-sum means rounded to 6 dp — order-free and engine-free,
+            # the property that lets the fixed-iteration oracle unroll this
+            # loop in SQL (same idiom as train_ivf_centroids)
+            dims = (subs.select("j", "cid",
+                                F.posexplode("sv").alias("pos", "x"))
+                    .groupBy("j", "cid", "pos")
+                    .agg(F.round(F.sum(F.col("x").cast("decimal(25,12)"))
+                                 .cast("double") / F.count(F.lit(1)), 6)
+                         .alias("mval")))
+            new_slices = (
+                dims.groupBy("j", "cid")
+                .agg(F.sort_array(F.collect_list(F.struct("pos", "mval")))
+                     .alias("pm"))
+                .select("j", "cid",
+                        F.expr("transform(pm, s -> s.mval)").alias("sv")))
+            prev_slices = (
+                cb.select("cid", F.explode(F.array(*[
+                    F.struct(F.lit(j).alias("j"),
+                             F.slice("cvec", j * subdim + 1, subdim)
+                             .alias("sv"))
+                    for j in range(m)])).alias("s"))
+                .select(F.col("s.j").alias("j"), "cid",
+                        F.col("s.sv").alias("sv_prev")))
+            merged = (prev_slices.join(new_slices, ["j", "cid"], "left")
+                      .select("j", "cid",
+                              F.coalesce("sv", "sv_prev").alias("sv")))
+            cb = materialize(
+                merged.groupBy("cid")
+                .agg(F.sort_array(F.collect_list(F.struct("j", "sv")))
+                     .alias("js"))
+                .select("cid", F.expr("flatten(transform(js, s -> s.sv))")
+                        .alias("cvec")), "eager")
     return cb
 
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize
+
 # Modulus for MinHash permutations: a prime below 2^48 so that
 # a*h + b (a < 2^6, h < 2^48) stays well inside BIGINT range.
 MINHASH_P = 281474976710597
@@ -427,20 +429,16 @@ def unigram_logprob(docs, total_tokens: int | None = None,
     literal). Passing an explicit scalar keeps the operator action-free
     for callers that already know N.
 
-    r16 (guide §1.2/§2.5): ``tf`` feeds both the per-term left side and
-    the corpus-count aggregate — unpersisted, each reference
-    re-expanded the tokenize→explode scan; the lazy persist
-    (materialized inside the consumer's one action) reads the corpus
-    once. The scan is spread before the explode fan-out so a
+    ``tf`` feeds both the per-term left side and the corpus-count
+    aggregate, so it is shared and the corpus is read once. The scan is spread before the explode fan-out so a
     single-file source cannot pin the chain to one core.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     sp = spread_for_fanout(docs.select(id_col, text_col), id_col)
     tok = sp.select(id_col, F.explode(tokens(F.col(text_col))).alias("t"))
-    tf = (tok.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("tf"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    tf = materialize(
+        tok.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("tf")), "shared")
     corpus_c = tf.groupBy("t").agg(F.sum("tf").alias("c"))
     if total_tokens is None:
         n_tok = F.col("__n_tok").cast("double")
@@ -624,24 +622,18 @@ def bigram_nll(docs: DataFrame, total_tokens: int | None = None,
             F.slice(F.col("w"), 1, F.size("w") - 1).alias("w1"),
             F.slice(F.col("w"), 2, F.size("w") - 1).alias("w2"))).alias("b"),
     ).select(id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    # r16 (guide §1.2): ``tf`` feeds THREE plan branches (the per-pair
-    # left side, the corpus bigram count cb, and through cb the w1
-    # marginal cw1) and ``cu`` feeds two (the unigram join and the
-    # broadcast corpus-total row). Unpersisted, each reference
-    # re-expanded the tokenize→explode subtree — the before-plan ran
-    # TEN corpus scans; with the two lazy persists (materialized inside
-    # the consumer's one action) the plan reads the corpus twice: once
-    # for the bigram aggregate, once for the unigram counts. Both
-    # cached frames are count-aggregated (≪ corpus) at any scale.
-    from pyspark import StorageLevel
-
-    tf = (big.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("tf"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    # ``tf`` feeds three plan branches (the per-pair left side, the
+    # corpus bigram count cb, and through cb the w1 marginal cw1) and
+    # ``cu`` feeds two (the unigram join and the broadcast corpus-total
+    # row). Shared, the plan reads the corpus twice instead of ten
+    # times; both frames are count aggregates (≪ corpus) at any scale.
+    tf = materialize(big.groupBy(id_col, "w1", "w2")
+                     .agg(F.count(F.lit(1)).alias("tf")), "shared")
     cb = tf.groupBy("w1", "w2").agg(F.sum("tf").alias("cb"))
     cw1 = cb.groupBy("w1").agg(F.sum("cb").alias("cw1"))
-    cu = (sp.select(F.explode(tokens(F.col(text_col))).alias("w2"))
-          .groupBy("w2").agg(F.count(F.lit(1)).alias("cu"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    cu = materialize(sp.select(F.explode(tokens(F.col(text_col))).alias("w2"))
+                     .groupBy("w2").agg(F.count(F.lit(1)).alias("cu")),
+                     "shared")
     lam = float(BIGRAM_LAMBDA)
     if total_tokens is None:
         n_tok = F.col("__n_tok").cast("double")

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..artifacts import materialize
 from . import txproto
 from .genexpr import parse_generation_expr
 from .incremental import net_changes
@@ -550,7 +551,10 @@ class TxTable:
         else:
             file_expr = F.element_at(
                 F.split(F.input_file_name(), "/"), -1)
-        sdf = reader.parquet(staged).withColumn("_file", file_expr)
+        # read the listed part files, not the ``_staged_`` root: Spark's
+        # hidden-path filter drops a root named ``_*`` with a warning
+        sdf = (reader.parquet(*[f"{staged}/{p}" for p in parts])
+               .withColumn("_file", file_expr))
         if colmap:
             # back to logical for the stats/constraint pass (stat_cols,
             # bloom cols and CHECK expressions all speak logical names)
@@ -2923,7 +2927,7 @@ class TxTable:
         # source column participates in the cancel before conforming.
         # ONE checkpoint of the netted window feeds every later step:
         # the summary row, the file probe and the staged rewrite.
-        net = net_changes(changes, feed_cols).localCheckpoint(eager=True)
+        net = materialize(net_changes(changes, feed_cols), "eager")
         is_ins = F.col("_change_type") == "insert"
         net_ins = net.filter(is_ins).select(*feed_cols)
         net_del = net.filter(~is_ins).select(*feed_cols)
@@ -3064,10 +3068,10 @@ class TxTable:
             key_cols = list(key_cols)
             key_schema = StructType([f for f in schema.fields
                                      if f.name in key_cols])
-            probe = (kdf.select(*[F.col(f.name).cast(f.dataType)
-                                  for f in key_schema.fields])
-                     .dropDuplicates(key_cols)
-                     .localCheckpoint(eager=True))
+            probe = materialize(
+                kdf.select(*[F.col(f.name).cast(f.dataType)
+                             for f in key_schema.fields])
+                .dropDuplicates(key_cols), "eager")
             n_probe, bounds = self._batch_bounds(probe, key_cols)
             if n_probe == 0:
                 continue

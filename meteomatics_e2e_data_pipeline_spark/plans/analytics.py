@@ -23,10 +23,10 @@ parquet.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize
 from ..functions.dates import date_key, is_weekend, week_number, weekday_name
 from ..functions.keys import surrogate_key, surrogate_key_sql
 from ..functions.strings import slugify, split_part_compat
@@ -2341,10 +2341,8 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact — and the as-of date rides the plan as a broadcast 1-row
     scalar (r15: the collected-``first()`` form plus a separate
     boundary-estimate action cost two driver-synchronous jobs per run;
-    r16: the rollup is persisted rather than eagerly checkpointed, so
-    construction runs ZERO blocking jobs — the per-axis boundary
-    estimates are lazy broadcast branches inside ``global_ntile``
-    itself and the one materialization rides the final action). Each
+    the per-axis boundary estimates are lazy broadcast branches inside
+    ``global_ntile`` over the one eager rollup checkpoint). Each
     quartile runs through
     ``operators/quantiles.global_ntile`` (round 7): range-bucketed
     parallel ranking + broadcast offsets that reproduce SQL ntile
@@ -2367,19 +2365,11 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE materialization feeds all three quartile passes
     # (checkpoint=False skips the per-call copy), and the three
     # (custkey, bucket) frames join back on the key — custkey-keyed
-    # shuffles, no windowed chain. r16 MEASURED DECISION: this snap
-    # stays an EAGER localCheckpoint. The truly-lazy persist() form
-    # (zero construction jobs) was implemented and A-B-A-B-measured
-    # SLOWER here — 2.8–3.2 s vs 2.0–2.6 s best-of-5 — because this
-    # one frame feeds ~10 plan branches (3 × {boundary estimate, local
-    # ranking, offsets} + the final attach): re-reading a flat
-    # materialized row RDD ten times beats ten columnar-cache scans
-    # plus the extra AQE stage waves the unmaterialized form schedules.
-    # Single-pass quantile consumers (parts_abc, supplier_revenue_
-    # ranks, spend quartiles) measured FASTER with persist — that form
-    # lives in quantiles._range_bucketed; the crossover is the consumer
-    # count.
-    snap = rollup.localCheckpoint(eager=True)
+    # shuffles, no windowed chain. Eager, not shared, by measurement:
+    # this frame feeds ~10 plan branches, and re-reading a flat row RDD
+    # ten times beat ten columnar-cache scans (2.0–2.6 s vs 2.8–3.2 s
+    # best-of-5); single-pass quantile consumers measured faster shared.
+    snap = materialize(rollup, "eager")
     quart = snap
     for value, desc, out in (("recency_days", False, "r_quartile"),
                              ("frequency", True, "f_quartile"),

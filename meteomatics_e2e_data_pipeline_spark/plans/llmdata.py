@@ -26,10 +26,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize
 from ..operators import (
     bpe, classifier, neardup, packing, sampling, similarity, textops)
 from ..operators.multimodal import extract_features, to_media_table
@@ -420,13 +420,13 @@ def _classifier_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         feat = _logreg_features(spark, sf_dir)
         w = classifier.logreg_train(feat, list(LOGREG_FEATURES), "y",
                                     iters=LOGREG_ITERS, lr=LOGREG_LR)
-        return (feat.select(
+        return materialize(feat.select(
             "doc_id",
             F.col("y").cast("int").alias("label"),
             classifier.logreg_score(feat, w, list(LOGREG_FEATURES))
             .alias("score"))
-            .withColumn("pred", (F.col("score") >= F.lit(0.5)).cast("int"))
-            .localCheckpoint())
+            .withColumn("pred", (F.col("score") >= F.lit(0.5)).cast("int")),
+            "eager")
     return _memo(spark, ("clf_scored", sf_dir, LOGREG_ITERS), "documents",
                  build)
 
@@ -639,13 +639,9 @@ def q_docs_classifier_threshold(spark: SparkSession,
     (bounded by the 6-dp score domain, not the corpus) plus two
     bounded aggregates per criterion — no per-threshold rescan of the
     corpus, no single-partition window."""
-    # persist, not an eager localCheckpoint (r16, guide §5): both
-    # consumers of the metrics frame (the maxima aggregate and the
-    # sweep join below) live inside the final action and no driver
-    # decision reads it — the eager checkpoint cost ~9 construction-
-    # time stage jobs per run; the cache rides the action instead.
-    m = _classifier_threshold_metrics(spark, sf_dir) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # shared: both consumers of the metrics frame (the maxima
+    # aggregate and the sweep join below) live inside the final action.
+    m = materialize(_classifier_threshold_metrics(spark, sf_dir), "shared")
     # one aggregate finds BOTH criteria's maxima; matching rows tag
     # themselves via a row-local explode, and the min-threshold tie
     # break is a broadcast semi-aggregate — 2 bounded jobs total
@@ -889,9 +885,9 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline writes first."""
     return _memo(
         spark, ("shingles", sf_dir, SHINGLE_N), "documents",
-        lambda: neardup.shingle_hashes(
+        lambda: materialize(neardup.shingle_hashes(
             load_table(spark, sf_dir, "documents"), "doc_id", "text",
-            SHINGLE_N).localCheckpoint())
+            SHINGLE_N), "eager"))
 
 
 def _full_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -902,9 +898,9 @@ def _full_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo(
         spark, ("full_pairs", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD),
         "documents",
-        lambda: neardup.near_dup_pairs(
+        lambda: materialize(neardup.near_dup_pairs(
             load_table(spark, sf_dir, "documents"), n=SHINGLE_N,
-            threshold=NEARDUP_THRESHOLD).localCheckpoint())
+            threshold=NEARDUP_THRESHOLD), "eager"))
 
 
 def q_docs_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,18 +1003,13 @@ def q_docs_minhash_calibration(spark: SparkSession,
     6-dp grid) sums as DECIMAL(18,6) — so both engines aggregate
     exactly and divide once (correctly rounded). Work is |candidates|
     row-local comparisons + one partial agg."""
-    from pyspark import StorageLevel
-
     sh = _shingles(spark, sf_dir)
     # The signature frame feeds THREE plan branches (the LSH banding
     # inside lsh_candidate_pairs plus both sides of the coordinate-
-    # agreement self-join below); unpersisted, the 24-permutation min
-    # aggregate over the full shingle table ran 3× per invocation
-    # (r16, guide §1.2 — the before-plan shows the partial_min(...)×24
-    # HashAggregate three times). A lazy persist rides the consumer's
-    # one action; |docs| signature rows is a small cache at any scale.
-    sigs = (neardup.minhash_from_shingles(sh, "doc_id")
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    # agreement self-join below); uncached, the 24-permutation min
+    # aggregate over the full shingle table ran 3× per invocation.
+    # |docs| signature rows is a small cache at any scale.
+    sigs = materialize(neardup.minhash_from_shingles(sh, "doc_id"), "shared")
     cand = neardup.lsh_candidate_pairs(sigs, "doc_id")
     exact = neardup.verify_jaccard(cand, sh, "doc_id", 0.0)
     sa = sigs.select(F.col("doc_id").alias("doc_a"),
@@ -1214,8 +1205,8 @@ def _scrubbed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             neardup.scrub_hot_ngrams(load_table(spark, sf_dir, "documents"),
                                      HOT_MIN_DF, HOT_TOP, n=SHINGLE_N)
             .select("doc_id", F.col("clean_text").alias("text")))
-        return neardup.shingle_hashes(
-            scrubbed, "doc_id", "text", SHINGLE_N).localCheckpoint()
+        return materialize(neardup.shingle_hashes(
+            scrubbed, "doc_id", "text", SHINGLE_N), "eager")
     return _memo(spark, ("scrubbed_shingles", sf_dir, SHINGLE_N, HOT_MIN_DF,
                          HOT_TOP), "documents", build)
 
@@ -1489,8 +1480,8 @@ def _bf_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
         queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
-        return similarity.knn_bruteforce(
-            emb, queries, KNN_K).localCheckpoint()
+        return materialize(similarity.knn_bruteforce(
+            emb, queries, KNN_K), "eager")
     return _memo(spark, ("bf_truth", sf_dir, KNN_QUERY_MAX_ID, KNN_K),
                  "embeddings", build)
 
@@ -1946,9 +1937,9 @@ def _cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo(
         spark, ("cos_pairs", sf_dir, IVF_TRAIN_ITERS, IVF_CENTROID_MAX_ID),
         "embeddings",
-        lambda: similarity.cosine_pair_scores(
+        lambda: materialize(similarity.cosine_pair_scores(
             load_table(spark, sf_dir, "embeddings"),
-            _trained_centroids(spark, sf_dir)).localCheckpoint())
+            _trained_centroids(spark, sf_dir)), "eager"))
 
 
 def q_emb_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2051,8 +2042,8 @@ def _full_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo(
         spark, ("full_clusters", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD),
         "documents",
-        lambda: neardup.dup_clusters(
-            _full_pairs(spark, sf_dir)).localCheckpoint())
+        lambda: materialize(neardup.dup_clusters(
+            _full_pairs(spark, sf_dir)), "eager"))
 
 
 def q_docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2204,9 +2195,9 @@ def _incr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
         batch = docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
-        return neardup.near_dup_pairs_incremental(
+        return materialize(neardup.near_dup_pairs_incremental(
             corpus, batch, n=SHINGLE_N,
-            threshold=NEARDUP_THRESHOLD).localCheckpoint()
+            threshold=NEARDUP_THRESHOLD), "eager")
     return _memo(spark, ("incr_pairs", sf_dir, SHINGLE_N, NEARDUP_THRESHOLD,
                          INCR_BATCH_MOD), "documents", build)
 
@@ -2330,9 +2321,8 @@ def _gopher_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter over these rows); in production this is the doc-stats table
     every downstream curation job reads."""
     return _memo(spark, ("gopher_stats", sf_dir), "documents",
-                 lambda: repetition_stats(
-                     load_table(spark, sf_dir, "documents"))
-                 .localCheckpoint())
+                 lambda: materialize(repetition_stats(
+                     load_table(spark, sf_dir, "documents")), "eager"))
 
 
 def q_docs_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3621,9 +3611,9 @@ def _untrained_pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
         cb = similarity.pq_codebook(emb, PQ_NCENT)
-        return similarity.pq_reconstruct(
+        return materialize(similarity.pq_reconstruct(
             similarity.pq_codes(emb, cb, EMB_DIM, PQ_M),
-            cb, EMB_DIM, PQ_M).localCheckpoint()
+            cb, EMB_DIM, PQ_M), "eager")
     return _memo(spark, ("pq_recon_untrained", sf_dir, PQ_M, PQ_NCENT),
                  "embeddings", build)
 
@@ -3874,9 +3864,9 @@ def _trained_pq_recon(spark: SparkSession, sf_dir: str,
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
         cb = _trained_pq_codebook(spark, sf_dir, iters)
-        return similarity.pq_reconstruct(
+        return materialize(similarity.pq_reconstruct(
             similarity.pq_codes(emb, cb, EMB_DIM, PQ_M),
-            cb, EMB_DIM, PQ_M).localCheckpoint()
+            cb, EMB_DIM, PQ_M), "eager")
     return _memo(spark, ("pq_recon", sf_dir, PQ_M, PQ_NCENT, iters),
                  "embeddings", build)
 
@@ -4521,9 +4511,8 @@ def _emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "embeddings"),
             _trained_centroids(spark, sf_dir), COSINE_DUP_THRESHOLD,
             pair_scores=_cosine_pairs(spark, sf_dir))
-        return (neardup.dup_clusters(pairs, src="id_a", dst="id_b")
-                .withColumnRenamed("doc_id", "vec_id")
-                .localCheckpoint())
+        return materialize(neardup.dup_clusters(pairs, src="id_a", dst="id_b")
+                           .withColumnRenamed("doc_id", "vec_id"), "eager")
     return _memo(spark, ("emb_clusters", sf_dir, COSINE_DUP_THRESHOLD),
                  "embeddings", build)
 
@@ -4999,8 +4988,6 @@ def q_docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction-time blocking count() jobs. Integer sums reproduce
     the row counts exactly; N < 2^53 keeps the in-plan doubles
     bit-identical to the collected literals."""
-    from pyspark import StorageLevel
-
     B = DSIR_BUCKETS
     docs = load_table(spark, sf_dir, "documents")
     tb = (docs.select("doc_id", "lang",
@@ -5008,9 +4995,8 @@ def q_docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id", "lang",
                   (textops.base_hash48(F.col("t")) % B)
                   .cast("int").alias("b")))
-    dlb = (tb.groupBy("doc_id", "lang", "b")
-           .agg(F.count(F.lit(1)).alias("c"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    dlb = materialize(tb.groupBy("doc_id", "lang", "b")
+                      .agg(F.count(F.lit(1)).alias("c")), "shared")
     raw = dlb.groupBy("b").agg(F.sum("c").alias("cr"))
     tgt = (dlb.filter(F.col("lang") == "en")
            .groupBy("b").agg(F.sum("c").alias("ct")))

@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
+from ..artifacts import materialize
 from ..operators.dedupe import latest_record_wins
 from ..operators.incremental import net_changes, new_files_only
 from ..operators.txlog import TxTable
@@ -265,8 +266,9 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
     cols = [f.name for f in star.stg.schema().fields]
     lo, hi = _window_bounds(as_of)
     in_win = F.col("reading_datetime").between(F.lit(lo), F.lit(hi))
-    net = (net_changes(star.stg.read_changes(from_v, to_v).filter(in_win),
-                       cols).localCheckpoint(eager=True))
+    net = materialize(
+        net_changes(star.stg.read_changes(from_v, to_v).filter(in_win), cols),
+        "eager")
     n_tag = dict(net.groupBy("_change_type").count().collect())
     if not n_tag:
         # Advance the maintenance floor even for a no-data window
@@ -280,8 +282,8 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
     is_ins = F.col("_change_type") == "insert"
     net_ins = net.filter(is_ins).select(*cols)
     net_del = net.filter(~is_ins).select(*cols)
-    cur = (star.winners.read_keys(net.select(*STG_KEYS), STG_KEYS)
-           .localCheckpoint(eager=True))
+    cur = materialize(
+        star.winners.read_keys(net.select(*STG_KEYS), STG_KEYS), "eager")
     # Keys whose CURRENT winner row this window deleted: the new winner
     # may be a previously shadowed older issuance, visible only in the
     # staging snapshot — recompute exactly those keys from staging AT
@@ -290,9 +292,8 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
         reopened = None
         pool = cur.unionByName(net_ins.select(*cur.columns))
     else:
-        reopened = (cur.join(net_del, on=cols, how="left_semi")
-                    .select(*STG_KEYS).distinct()
-                    .localCheckpoint(eager=True))
+        reopened = materialize(cur.join(net_del, on=cols, how="left_semi")
+                               .select(*STG_KEYS).distinct(), "eager")
         from_snapshot = star.stg.read_keys(reopened, STG_KEYS,
                                            version=to_v).filter(in_win)
         kept = cur.join(reopened, on=STG_KEYS, how="left_anti")
@@ -300,8 +301,8 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
                  .join(reopened, on=STG_KEYS, how="left_anti"))
         pool = kept.unionByName(fresh).unionByName(
             from_snapshot.select(*cur.columns))
-    new_w = (latest_record_wins(pool, STG_KEYS, STG_ORDER)
-             .localCheckpoint(eager=True))
+    new_w = materialize(latest_record_wins(pool, STG_KEYS, STG_ORDER),
+                        "eager")
 
     # Dims and facts commit concurrently, winners LAST (its txn floor
     # gates the window — a crash before it replays this fold
@@ -371,8 +372,7 @@ def maintain_city_daily_rollup(spark: SparkSession,
     if frm >= to_v:
         return frm
     changes = fact.read_changes(frm, to_v)
-    touched = (changes.select(*ROLLUP_KEYS).distinct()
-               .localCheckpoint(eager=True))
+    touched = materialize(changes.select(*ROLLUP_KEYS).distinct(), "eager")
     if touched.isEmpty():
         rv, _, _ = roll._snapshot()
         roll._commit([{"txn": {"appId": _ROLLUP_APP,

@@ -30,6 +30,7 @@ from collections.abc import Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize, scope
 from .bronze import RAW_WEATHER_SCHEMA
 from .fixtures import LOCATIONS, _payload
 
@@ -320,23 +321,21 @@ def ingest_distributed(spark: SparkSession, run_date: str, bronze_root: str,
     cardinality is names, not rows) → executor-side fetch → validate →
     hive-partitioned bronze sink. Same contract as :func:`ingest` but no
     driver-side loop or collect of payloads."""
-    from pyspark import StorageLevel
-
     geo = geocode_locations(spark, location_names, geocode_fn)
-    # persist BEFORE the fork into valid/quarantine: the frame feeds three
+    # share BEFORE the fork into valid/quarantine: the frame feeds three
     # actions (quarantine count, quarantine write, bronze write) and an
-    # unpersisted fetch would re-invoke the external fetcher per action —
+    # uncached fetch would re-invoke the external fetcher per action —
     # 3× the API burn, and a transiently-flaky location could be counted
     # quarantined by one action yet written valid by another. NOTE:
-    # persist REDUCES re-invocation, it does not guarantee exactly-once —
+    # caching REDUCES re-invocation, it does not guarantee exactly-once —
     # executor loss, cache eviction, or speculative/retried tasks
     # recompute the partition and re-hit the fetcher. For true
     # at-most-once fetch semantics, write the raw payloads to durable
     # storage first and fork valid/quarantine off that materialized copy
     # (the bronze layer itself plays that role when quarantine is off).
-    raw = fetch_distributed(geo, run_date, fetcher, parallelism) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with scope():
+        raw = materialize(
+            fetch_distributed(geo, run_date, fetcher, parallelism), "shared")
         valid, quarantine = validate_payloads(spark, raw)
         n_q = quarantine.count()
         if quarantine_root and n_q:
@@ -344,12 +343,10 @@ def ingest_distributed(spark: SparkSession, run_date: str, bronze_root: str,
                 f"{quarantine_root}/run_date={run_date}")
         valid = valid.withColumn("run_date", F.lit(run_date))
         write_bronze_partitioned(valid, bronze_root)
-        # count THIS run's valid payloads (from the persisted fetch) — a
+        # count THIS run's valid payloads (from the shared fetch) — a
         # re-read of the lake would also count earlier appends of the same
         # run_date and force a full-lake scan
         n_ok = valid.count()
-    finally:
-        raw.unpersist()
     return n_ok, n_q
 
 

@@ -1,15 +1,23 @@
-"""``artifacts`` — the package's one artifact cache.
+"""``artifacts`` — the package's one artifact cache and materialization
+policy.
 
 - ``built_dir``: a failed build leaves nothing behind and the next call
-  builds; a rewritten input publishes a new dir; two threads racing on
-  one key get one published dir and leave no private build dirs.
+  builds; a rewritten input publishes a new dir and deletes the one it
+  superseded, but not the dir of the same name over other inputs; two
+  threads racing on one key get one published dir and leave no private
+  build dirs.
 - ``memo`` and its callers: a rewritten input rebuilds the entry in
   place (``q_docs_bpe_merges`` over a rewritten ``documents.parquet``,
   ``load_table`` over a directory table rewritten with
   ``mode("overwrite")``); unchanged inputs add no entry and run no job.
+- ``materialize``/``scope``: after four ``fold_cdc_near_dup`` windows,
+  and after two ``docs_scrub_fixpoint`` runs under ``scope()``, no frame
+  they shared is still cached; a frame shared under another thread's
+  open scope stays cached when this thread's scope exits.
 - The package has no other cache: no module outside ``artifacts.py``
   keeps a weak-keyed session map, a temp-dir build or a module-level
-  ``_*_CACHE`` dict.
+  ``_*_CACHE`` dict, and none persists, checkpoints or unpersists a
+  frame or names ``StorageLevel``.
 """
 
 from __future__ import annotations
@@ -18,6 +26,7 @@ import ast
 import glob
 import os
 import shutil
+import sys
 import tempfile
 import threading
 import uuid
@@ -25,9 +34,11 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark import StorageLevel
 
 import meteomatics_e2e_data_pipeline_spark as pkg
 from meteomatics_e2e_data_pipeline_spark import artifacts
+from meteomatics_e2e_data_pipeline_spark.operators import neardup
 from meteomatics_e2e_data_pipeline_spark.plans import llmdata
 from meteomatics_e2e_data_pipeline_spark.sources.tables import load_table
 
@@ -73,21 +84,25 @@ def test_failed_build_leaves_nothing_and_next_call_builds(tmp_path, name):
 
 
 def test_rewritten_input_publishes_a_new_dir(tmp_path, name):
-    src = tmp_path / "input"
+    src, other = tmp_path / "input", tmp_path / "other"
     src.write_text("v1")
+    other.write_text("v1")
     builds = []
 
     def build(out: str) -> None:
         builds.append(out)
         _copy_input(out, src)
 
+    kept = artifacts.built_dir(name, [other], build)
     first = artifacts.built_dir(name, [src], build)
     assert artifacts.built_dir(name, [src], build) == first
-    assert len(builds) == 1
+    assert len(builds) == 2
     src.write_text("v2, longer")
     second = artifacts.built_dir(name, [src], build)
-    assert second != first and len(builds) == 2
+    assert second != first and len(builds) == 3
     assert Path(second, "copy").read_text() == "v2, longer"
+    # the superseded dir of (name, [src]) is gone; (name, [other]) stays
+    assert _dirs(name) == (sorted([kept, second]), [])
 
 
 def test_racing_builders_publish_one_dir(tmp_path, name):
@@ -201,9 +216,97 @@ def _module_level_cache_dicts(tree: ast.Module) -> list[str]:
     return names
 
 
+@pytest.fixture
+def shared_frames(monkeypatch) -> list:
+    """Every frame ``materialize(df, "shared")`` returns on this thread
+    while the test runs (pooled bodies on other threads are not
+    recorded)."""
+    frames, real, me = [], artifacts.materialize, threading.get_ident()
+
+    def recording(df, kind):
+        out = real(df, kind)
+        if kind == "shared" and threading.get_ident() == me:
+            frames.append(out)
+        return out
+
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith(pkg.__name__)
+                and getattr(mod, "materialize", None) is real):
+            monkeypatch.setattr(mod, "materialize", recording)
+    return frames
+
+
+def _still_cached(frames: list) -> list:
+    return [f for f in frames if f.storageLevel != StorageLevel.NONE]
+
+
+def test_cdc_folds_release_what_they_share(spark, shared_frames):
+    tag = uuid.uuid4().hex[:8]  # plans no other test caches
+
+    def text(i: int, tweak: str = "") -> str:
+        return " ".join(f"{tag}w{i % 5}x{j}" for j in range(12)) + tweak
+
+    sch = "doc_id long, text string"
+    docs = spark.createDataFrame([(i, text(i)) for i in range(10)], sch)
+    state = neardup.init_near_dup_state(docs)
+    for w in range(4):
+        changes = spark.createDataFrame(
+            [(100 + w, text(w, " extra"), "insert"),
+             (w, text(w), "delete")], f"{sch}, _change_type string")
+        state = neardup.fold_cdc_near_dup(changes, state)
+    assert state["pairs"].count() > 0
+    assert len(shared_frames) >= 4 * 3
+    assert _still_cached(shared_frames) == []
+
+
+def test_scrub_fixpoint_runs_release_under_scope(spark, sf_smoke, tmp_path,
+                                                 shared_frames):
+    sf_dir = str(tmp_path)
+    shutil.copy(os.path.join(sf_smoke, "documents.parquet"), sf_dir)
+    for _ in range(2):
+        with artifacts.scope():
+            llmdata.q_docs_scrub_fixpoint(spark, sf_dir).collect()
+    assert shared_frames
+    assert _still_cached(shared_frames) == []
+
+
+def test_scope_leaves_another_threads_frames_cached(spark):
+    tag = uuid.uuid4().hex[:8]
+
+    def frame(mult: int):
+        return spark.range(9).selectExpr(f"id * {mult} AS x",
+                                         f"'{tag}' AS tag")
+
+    opened, done, theirs = threading.Event(), threading.Event(), []
+
+    def other() -> None:
+        with artifacts.scope():
+            theirs.append(artifacts.materialize(frame(3), "shared"))
+            opened.set()
+            done.wait(60)
+
+    t = threading.Thread(target=other)
+    t.start()
+    try:
+        assert opened.wait(60)
+        with artifacts.scope():
+            mine = artifacts.materialize(frame(2), "shared")
+            assert mine.storageLevel == StorageLevel.MEMORY_AND_DISK
+        assert mine.storageLevel == StorageLevel.NONE
+        assert theirs[0].storageLevel == StorageLevel.MEMORY_AND_DISK
+    finally:
+        done.set()
+        t.join()
+    assert _still_cached(theirs) == []
+    with pytest.raises(ValueError, match="unknown materialize kind"):
+        artifacts.materialize(frame(4), "cache")
+
+
 def test_artifacts_is_the_only_cache_in_the_package():
     root = Path(pkg.__file__).parent
-    banned = {"WeakKeyDictionary", "gettempdir", "mkdtemp"}
+    banned = {"WeakKeyDictionary", "gettempdir", "mkdtemp", "StorageLevel"}
+    banned_calls = {"persist", "cache", "localCheckpoint", "checkpoint",
+                    "unpersist"}
     offenders = []
     for path in sorted(root.rglob("*.py")):
         if path.name == "artifacts.py" and path.parent == root:
@@ -217,6 +320,11 @@ def test_artifacts_is_the_only_cache_in_the_package():
         rel = path.relative_to(root)
         offenders += [f"{rel}: {u}" for u in sorted(used & banned)]
         offenders += [f"{rel}: {c}" for c in _module_level_cache_dicts(tree)]
+        offenders += [f"{rel}:{n.lineno}: .{n.func.attr}()"
+                      for n in ast.walk(tree)
+                      if isinstance(n, ast.Call)
+                      and isinstance(n.func, ast.Attribute)
+                      and n.func.attr in banned_calls]
     assert offenders == [], (
-        "caches go through meteomatics_e2e_data_pipeline_spark.artifacts: "
-        f"{offenders}")
+        "caches and materializations go through "
+        f"meteomatics_e2e_data_pipeline_spark.artifacts: {offenders}")

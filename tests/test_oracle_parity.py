@@ -8,6 +8,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 
 import __spark_entry__ as entrymod
+from meteomatics_e2e_data_pipeline_spark import artifacts
 from tests.oracle_util import compare
 
 QUERIES = entrymod.queries()
@@ -28,13 +29,16 @@ def mirror_results(spark, sf_oracle) -> "dict[str, tuple]":
     still gets its own pytest row below: this fixture only moves the
     WORK, never the verdicts — exceptions are stored per query and
     re-raised in the owning test. Each compare() opens its own DuckDB
-    connection, so oracle runs are thread-isolated too."""
+    connection, so oracle runs are thread-isolated too. Each query runs
+    under ``artifacts.scope()``, so every result is also checked with
+    its shared frames released as soon as it is read."""
     def run(name: str):
         try:
-            df = QUERIES[name](spark, sf_oracle)
-            if name not in ORACLES:
-                return ("rows_only", df.count())
-            return ("cmp", compare(df, ORACLES[name], sf_oracle))
+            with artifacts.scope():
+                df = QUERIES[name](spark, sf_oracle)
+                if name not in ORACLES:
+                    return ("rows_only", df.count())
+                return ("cmp", compare(df, ORACLES[name], sf_oracle))
         except Exception as ex:  # re-raised by the owning test row
             return ("err", ex)
 
