@@ -1,5 +1,6 @@
 """Persisted, CDC-maintained ANN index — the similarity twin of the
-durable near-dup loop (VERDICT r11 directive #6).
+near-dup index (:mod:`.neardup`); one loop,
+``sources.txlog_stream.maintain_from_cdc``, maintains both.
 
 The index lives in ONE frame-discriminated txlog table so every
 maintenance fold is a single atomic commit (frames can never be
@@ -47,8 +48,8 @@ _ANN_STATE_SCHEMA = ("frame string, vec_id long, "
                      "scale double, q array<int>")
 
 
-def pack_ann_state(spark: SparkSession, centroids: DataFrame,
-                   assign: DataFrame, codes: DataFrame) -> DataFrame:
+def pack_ann_state(centroids: DataFrame, assign: DataFrame,
+                   codes: DataFrame) -> DataFrame:
     """(centroids, assign, codes) → one frame-discriminated DataFrame
     with the declared ``_ANN_STATE_SCHEMA`` layout."""
     types = {
@@ -103,7 +104,7 @@ def init_ann_state(spark: SparkSession, emb: DataFrame,
         "bucket")
     codes = quantize_int8(emb, id_col, vec_col).select(
         F.col(id_col).alias("vec_id"), "scale", "q")
-    packed = pack_ann_state(spark, centroids, assign, codes)
+    packed = pack_ann_state(centroids, assign, codes)
     packed = packed.repartitionByRange(
         "frame", F.coalesce(F.col("bucket"), F.col("vec_id")), "vec_id")
     return TxTable.create(spark, packed, state_path,
@@ -115,7 +116,7 @@ def fold_cdc_ann(changes: DataFrame, st: TxTable,
     """One CDC window → ``(delete_clauses, inserts)`` for
     :meth:`TxTable.apply_delta`. Net inserts are upserts (an id in the
     insert set sheds its old rows first — idempotent replays, same
-    discipline as :func:`~.neardup.fold_cdc_near_dup_delta`)."""
+    discipline as :func:`~.neardup.fold_cdc_near_dup`)."""
     net = materialize(net_changes(changes, [id_col, vec_col]), "eager")
     is_ins = F.col("_change_type") == "insert"
     net_ins = net.filter(is_ins).select(id_col, vec_col)
@@ -138,8 +139,8 @@ def fold_cdc_ann(changes: DataFrame, st: TxTable,
         "bucket")
     codes = quantize_int8(net_ins, id_col, vec_col).select(
         F.col(id_col).alias("vec_id"), "scale", "q")
-    inserts = pack_ann_state(
-        st.spark, centroids.limit(0), assign, codes).coalesce(1)
+    inserts = pack_ann_state(centroids.limit(0), assign,
+                             codes).coalesce(1)
     return delete_clauses, inserts
 
 
@@ -150,46 +151,25 @@ def stream_cdc_ann_maintenance(spark: SparkSession, table_path: str,
                                vec_col: str = "embedding") -> TxTable:
     """The maintenance loop: one ``availableNow`` pass over the
     embeddings table's ``txlog_cdc`` feed, each micro-batch folded into
-    the index table with ONE atomic keyed-delta commit carrying
-    ``txn=(app, batch_id)`` — exactly-once across the state-commit /
-    stream-checkpoint gap, replays publish nothing (the near-dup durable
-    loop's proven discipline). A missing index table bootstraps from the
-    embeddings table's version-0 snapshot with the supplied
-    ``centroids`` (required on first use; ignored afterwards — the
-    quantizer is versioned WITH the index). Returns the state table."""
-    import os
+    the index table by :func:`fold_cdc_ann` with ONE atomic keyed-delta
+    commit — run by :func:`..sources.txlog_stream.maintain_from_cdc`,
+    the loop the near-dup index uses too, so replays publish nothing. A
+    missing index table bootstraps from the embeddings table's version-0
+    snapshot with the supplied ``centroids`` (required on first use;
+    ignored afterwards — the quantizer is versioned WITH the index).
+    Returns the state table."""
+    from ..sources.txlog_stream import maintain_from_cdc
 
-    from ..sources.txlog_stream import register as register_cdc
-
-    register_cdc(spark)
-    app_id = f"{_APP}:{os.path.basename(state_path)}"
-    if os.path.isdir(os.path.join(state_path, "_txlog")):
-        st = TxTable(spark, state_path)
-    else:
+    def bootstrap(emb: DataFrame) -> TxTable:
         if centroids is None:
             raise ValueError("first maintenance call must supply the "
                              "offline-trained centroids")
-        st = init_ann_state(
-            spark, TxTable(spark, table_path).read(version=0),
-            centroids, state_path, id_col, vec_col)
+        return init_ann_state(spark, emb, centroids, state_path, id_col,
+                              vec_col)
 
-    def _fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        last = st.last_txn(app_id)
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already applied
-        clauses, inserts = fold_cdc_ann(batch_df, st, id_col, vec_col)
-        st.apply_delta(clauses, inserts, txn=(app_id, batch_id))
-
-    q = (spark.readStream.format("txlog_cdc")
-         .option("path", table_path).load()
-         .writeStream.foreachBatch(_fold)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return st
+    return maintain_from_cdc(
+        spark, table_path, checkpoint_path, state_path, _APP, bootstrap,
+        lambda batch, st: fold_cdc_ann(batch, st, id_col, vec_col))
 
 
 def knn_ivf_from_index(st: TxTable, queries: DataFrame, k: int,

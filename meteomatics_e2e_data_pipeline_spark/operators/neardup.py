@@ -16,10 +16,19 @@ Cache lifetime: the pair operators return LAZY frames, so they only
 register the subplans they share (``artifacts.materialize(df,
 "shared")``) and leave the release to the caller's
 ``artifacts.scope()``. Operators whose outputs are eager checkpoints
-(:func:`connected_components`, :func:`init_near_dup_state` and the two
-CDC folds) open their own scope, so a fold loop caches nothing past
-each fold. With no scope open, shared frames stay cached until Spark
-evicts them.
+(:func:`connected_components`, :func:`init_near_dup_state` and the CDC
+fold) open their own scope, so a fold loop caches nothing past each
+fold. With no scope open, shared frames stay cached until Spark evicts
+them.
+
+Index maintenance: the maintained index (corpus, pairs, clusters and
+the shingle/band corpus index) lives in ONE frame-discriminated txlog
+table (:func:`init_near_dup_table`), and :func:`fold_cdc_near_dup`
+turns one change-feed window into a keyed delta for it. The streaming
+loop that applies those deltas exactly once is
+``streaming.stream_cdc_near_dup_maintenance``, the same loop
+(``sources.txlog_stream.maintain_from_cdc``) that maintains the ANN
+index.
 
 Default parameters: 24 permutations in 6 bands of 4 rows — the LSH
 S-curve crosses ~50% candidate probability near Jaccard ≈ (1/6)^(1/4) ≈
@@ -28,12 +37,13 @@ S-curve crosses ~50% candidate probability near Jaccard ≈ (1/6)^(1/4) ≈
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..artifacts import materialize, scope
 from .incremental import net_changes
 from .textops import MINHASH_P, base_hash48, tokens
+from .txlog import TxTable
 
 NUM_PERM = 24
 BANDS = 6
@@ -577,96 +587,10 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def connected_components_star(pairs: DataFrame, src: str = "doc_a",
-                              dst: str = "doc_b",
-                              max_iter: int = 25) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the adversarial-graph path behind the same (vertex,
-    label) contract as :func:`connected_components`.
-
-    Min-label propagation needs diameter-many rounds; a path graph of
-    10^6 vertices would need 10^6 joins. Each large-star/small-star
-    round HALVES tree heights instead, converging in O(log d) rounds on
-    any topology:
-
-    - large-star: every node links each strictly-LARGER neighbor to the
-      minimum of its closed neighborhood (one symmetrized groupBy-min +
-      one equi-join);
-    - small-star: every node links its smaller neighbors and itself to
-      the minimum among them (one groupBy-min + one equi-join on the
-      already (hi→lo)-oriented output of large-star).
-
-    Both steps are partial-aggregatable min-reductions plus equi-joins —
-    no windows, nothing corpus-quadratic; the working edge set only
-    shrinks toward one star per component (edges (v, component_min)),
-    from which labels read off directly. Fixed-point detection is a
-    symmetric-difference aggregate on the O(E) edge frame: each round
-    is ONE eager localCheckpoint job plus a cheap fixed-point
-    aggregate over the truncated frames (the r15 form paid the same
-    checkpoint plus a filter+limit+count job per round and two more at
-    construction). The checkpoint's plan truncation is STRUCTURAL, not
-    optional — ``work`` appears twice per round, so an untruncated
-    tree doubles per round. ``verts`` is consumed
-    exactly once (the final label join), so it is left fully lazy:
-    materializing it early would add a job without saving any work.
-    """
-    edges = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-             .filter(F.col("u") != F.col("v")))
-    verts = (edges.select("u")
-             .unionByName(edges.select(F.col("v").alias("u")))
-             .distinct())
-    work = materialize(edges.select(F.greatest("u", "v").alias("hi"),
-                                    F.least("u", "v").alias("lo"))
-                       .distinct(), "eager")
-    for _ in range(max_iter):
-        # -- large-star --
-        sym = (work.select(F.col("hi").alias("n"), F.col("lo").alias("m"))
-               .unionByName(
-                   work.select(F.col("lo").alias("n"),
-                               F.col("hi").alias("m"))))
-        mins = (sym.groupBy("n").agg(F.min("m").alias("mn"))
-                .select("n", F.least("n", "mn").alias("mn")))
-        large = (sym.filter(F.col("m") > F.col("n"))
-                 .join(mins, "n")
-                 .select(F.col("m").alias("hi"), F.col("mn").alias("lo"))
-                 .filter(F.col("hi") != F.col("lo"))
-                 .distinct())
-        # -- small-star (input already oriented hi → lo) --
-        smins = large.groupBy("hi").agg(F.min("lo").alias("mn"))
-        withm = large.join(smins, "hi")
-        new_work = materialize(
-            withm.select("hi", F.col("mn").alias("lo"))
-            .unionByName(withm.filter(F.col("lo") != F.col("mn"))
-                         .select(F.col("lo").alias("hi"),
-                                 F.col("mn").alias("lo")))
-            .distinct(), "eager")
-        # one job: materializes new_work's checkpoint AND answers the
-        # fixed-point test (a full aggregate, not filter+limit+count —
-        # a limit could short-circuit before every partition computes)
-        changed = (new_work.unionByName(work)
-                   .groupBy("hi", "lo").agg(F.count(F.lit(1)).alias("c"))
-                   .agg(F.max(F.when(F.col("c") == 1, 1).otherwise(0)))
-                   .first()[0])
-        work = new_work
-        if not changed:
-            # fixed point: every edge is (vertex, component_min)
-            return (verts.join(
-                work.select(F.col("hi").alias("u"),
-                            F.col("lo").alias("lbl")), "u", "left")
-                .select("u", F.coalesce("lbl", F.col("u")).alias("lbl")))
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} "
-        "alternation rounds — raise max_iter (rounds needed are "
-        "logarithmic in component diameter, so this indicates a "
-        "pathological input, not a long chain)")
-
-
 @scope()
 def connected_components(pairs: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b",
-                         max_iter: int = 30,
-                         algorithm: str = "propagation") -> DataFrame:
+                         max_iter: int = 30) -> DataFrame:
     """Connected components over an undirected pair list via iterative
     min-label propagation: every vertex starts labeled with its own id and
     repeatedly takes the minimum of its own and its neighbors' labels
@@ -684,10 +608,10 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
       trap: an unmaterialized loop re-executes the whole history per
       action);
     - iterations needed = graph diameter. Near-dup components are
-      overwhelmingly shallow (stars around a popular document); for
-      adversarial long-chain graphs pass ``algorithm="star"`` to run
-      :func:`connected_components_star` (large-star/small-star,
-      O(log d) rounds) behind the same contract;
+      overwhelmingly shallow (stars around a popular document), so
+      large-star/small-star's O(log d) rounds do not pay for their
+      extra jobs per round (42 jobs against 25 on a 12-edge graph of
+      pairs, triangles, stars and 4-chains, same labels);
     - the edge list is shared by every iteration and released on
       return; labels are O(V), edges O(E), never materializing pairs²
       anything.
@@ -696,12 +620,6 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     ``pairs``. Raises if ``max_iter`` passes without convergence rather
     than returning a half-propagated labeling.
     """
-    if algorithm == "star":
-        return connected_components_star(pairs, src, dst)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown algorithm {algorithm!r}; "
-                         "expected 'propagation' or 'star'")
-
     edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(pairs.select(F.col(dst).alias("u"),
@@ -740,9 +658,7 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} "
-        "iterations — component diameter exceeds the cap; raise "
-        "max_iter or pass algorithm='star' (large-star/small-star, "
-        "logarithmic rounds)")
+        "iterations — component diameter exceeds the cap; raise max_iter")
 
 
 def dup_clusters(pairs: DataFrame, src: str = "doc_a",
@@ -882,19 +798,72 @@ def near_dup_pairs_incremental(corpus: DataFrame, batch: DataFrame,
     return verify_jaccard(cand, sh, id_col, threshold)
 
 
+# The index state as ONE frame-discriminated table: a single atomic
+# commit per fold keeps the five frames mutually consistent under any
+# crash (five separate tables could never commit together). The
+# shingle/band frames ARE the materialized corpus index that makes fold
+# work ∝ increment — persisting them is the point: a fold never
+# re-shingles the corpus.
+_NEARDUP_STATE_SCHEMA = ("frame string, doc_id long, text string, "
+                         "doc_a long, doc_b long, jaccard double, "
+                         "cluster_id long, is_canonical boolean, "
+                         "hv long, band_id int, band_hash string")
+
+
+def pack_near_dup_state(state: dict) -> DataFrame:
+    """(corpus, pairs, clusters, shingles, bands) → one
+    frame-discriminated DataFrame with the ``_NEARDUP_STATE_SCHEMA``
+    layout."""
+    n = F.lit(None)
+    blank = {
+        "doc_id": n.cast("long"), "text": n.cast("string"),
+        "doc_a": n.cast("long"), "doc_b": n.cast("long"),
+        "jaccard": n.cast("double"), "cluster_id": n.cast("long"),
+        "is_canonical": n.cast("boolean"), "hv": n.cast("long"),
+        "band_id": n.cast("int"), "band_hash": n.cast("string"),
+    }
+
+    def frame(tag, df, *cols):
+        sel = [F.lit(tag).alias("frame")]
+        sel += [F.col(c).alias(c) if c in cols else blank[c].alias(c)
+                for c in blank]
+        return df.select(*sel)
+
+    out = frame("corpus", state["corpus"], "doc_id", "text")
+    for tag, cols in (("pairs", ("doc_a", "doc_b", "jaccard")),
+                      ("clusters", ("doc_id", "cluster_id",
+                                    "is_canonical")),
+                      ("shingles", ("doc_id", "hv")),
+                      ("bands", ("doc_id", "band_id", "band_hash"))):
+        out = out.unionByName(frame(tag, state[tag], *cols))
+    return out
+
+
+def unpack_near_dup_state(packed: DataFrame) -> dict:
+    """One frame-discriminated DataFrame → the five state frames."""
+    def frame(tag, *cols):
+        return packed.filter(F.col("frame") == tag).select(*cols)
+
+    return {
+        "corpus": frame("corpus", "doc_id", "text"),
+        "pairs": frame("pairs", "doc_a", "doc_b", "jaccard"),
+        "clusters": frame("clusters", "doc_id", "cluster_id",
+                          "is_canonical"),
+        "shingles": frame("shingles", "doc_id", "hv"),
+        "bands": frame("bands", "doc_id", "band_id", "band_hash"),
+    }
+
+
 @scope()
 def init_near_dup_state(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         threshold: float = 0.5) -> dict:
-    """Build the maintained near-dup index state from a corpus snapshot —
-    the batch bootstrap for :func:`fold_cdc_near_dup`. Returns
+    """Build the near-dup index state from a corpus snapshot. Returns
     ``{"corpus", "pairs", "clusters", "shingles", "bands"}``, each an
-    eager localCheckpoint (the artifact a real deployment would persist
-    as lake tables between ingests; the fold reads and replaces them
-    wholesale). ``shingles``/``bands`` are the MATERIALIZED corpus index
-    — what makes later folds' work truly ∝ the increment: without them
-    every fold would re-shingle and re-band the whole corpus just to
-    join the new batch against it."""
+    eager localCheckpoint. ``shingles``/``bands`` are the MATERIALIZED
+    corpus index — what makes later folds' work truly ∝ the increment:
+    without them every fold would re-shingle and re-band the whole
+    corpus just to join the new batch against it."""
     corpus = materialize(docs.select(id_col, text_col), "eager")
     sh = materialize(shingle_hashes(corpus, id_col, text_col, n), "eager")
     bands = materialize(
@@ -906,146 +875,53 @@ def init_near_dup_state(docs: DataFrame, id_col: str = "doc_id",
             "shingles": sh, "bands": bands}
 
 
+def init_near_dup_table(spark: SparkSession, docs: DataFrame,
+                        state_path: str, id_col: str = "doc_id",
+                        text_col: str = "text", n: int = 3,
+                        threshold: float = 0.5) -> TxTable:
+    """Bootstrap the index table from a corpus snapshot: build the state
+    (:func:`init_near_dup_state`), pack, range-cluster, create. Files are
+    clustered by (frame, key) and the table keeps per-frame key stats,
+    so a fold's delete clauses rewrite only the files whose narrow key
+    range holds a touched key — a frame packed into one wide file would
+    make every keyed delete rewrite the whole frame."""
+    packed = pack_near_dup_state(
+        init_near_dup_state(docs, id_col, text_col, n, threshold))
+    packed = packed.repartitionByRange(
+        "frame", F.coalesce(F.col("doc_id"), F.col("doc_a")))
+    return TxTable.create(
+        spark, packed, state_path,
+        stat_cols=["frame", "doc_id", "doc_a", "doc_b", "cluster_id"])
+
+
 @scope()
-def fold_cdc_near_dup(changes: DataFrame, state: dict,
+def fold_cdc_near_dup(changes: DataFrame, st: TxTable,
                       id_col: str = "doc_id", text_col: str = "text",
-                      n: int = 3, threshold: float = 0.5) -> dict:
-    """Fold ONE change-data-feed window into a maintained near-dup index
-    — the composition of the lakehouse tier's CDC feed
-    (``TxTable.read_changes`` / the ``txlog_cdc`` stream: rows tagged
-    ``_change_type`` insert/delete) with the two incremental dedup
-    operators, so per-ingest work scales with the INCREMENT while the
-    index stays exactly equal to a from-scratch batch recompute
-    (pytest-pinned, tests/test_txlog_stream.py).
+                      n: int = 3, threshold: float = 0.5):
+    """Fold ONE change-data-feed window into the near-dup index table
+    ``st`` (:func:`init_near_dup_table` layout) — the composition of the
+    lakehouse tier's CDC feed (``TxTable.read_changes`` / the
+    ``txlog_cdc`` stream: rows tagged ``_change_type`` insert/delete)
+    with the two incremental dedup operators. Returns ``(delete_clauses,
+    inserts)`` for :meth:`~.txlog.TxTable.apply_delta`, so both the
+    compute and the state WRITE are ∝ the increment's neighborhood,
+    while the index stays exactly equal to a from-scratch batch
+    recompute (pytest-pinned, tests/test_txlog_stream.py).
 
     The feed is FILE-grain copy-on-write: a row carried unchanged
     through a rewrite appears as both delete and insert, so the fold
-    first nets the window (:func:`~.incremental.net_changes`) —
-    untouched rows cancel and cost nothing downstream. Then, in CDC order:
+    first nets the window (:func:`~.incremental.net_changes`) — untouched
+    rows cancel and cost nothing downstream. Net inserts are UPSERTS: an
+    id in the insert set sheds its old rows first, which makes re-folding
+    an already-applied window reproduce the same state (a replayed doc
+    never meets its own stale copy in the incremental join).
 
-    1. DELETE phase (net-deleted ids, which include the old row of
-       every update): pairs touching a deleted id are dropped
-       (broadcast anti-joins); cluster maintenance under vertex
-       deletion — only components that CONTAINED a deleted doc re-run
-       component finding, on their surviving edges (removing a vertex
-       can split its own component but cannot touch any other, since
-       every edge lies within one component); untouched labels pass
-       through without a shuffle.
-    2. INSERT phase (net-inserted docs, including updates' new text):
-       :func:`near_dup_pairs_incremental` (batch×corpus + batch×batch,
-       never corpus×corpus) against the post-delete corpus, then
-       :func:`dup_clusters_incremental` folds the new edges into the
-       surviving labels.
-
-    Exactness: deletes and inserts commute with the batch recompute
-    because min-label components are a pure function of the edge set,
-    and both phases reproduce exactly the edge set of the post-window
-    corpus — pairs(after) = pairs(before) ∖ touching(deleted) ∪
-    touching(inserted), which LSH banding preserves (signatures are
-    per-document). The output frames are eager checkpoints so an
-    IN-MEMORY streaming driver (foreachBatch over ``txlog_cdc``) can
-    fold window after window without plan growth — every fold pays
-    O(corpus) materialization IO regardless of batch size; the durable
-    loop uses :func:`fold_cdc_near_dup_delta` instead.
-    """
-    corpus, pairs, clusters = (state["corpus"], state["pairs"],
-                               state["clusters"])
-    # The materialized corpus index (shingles + band rows). A legacy
-    # state dict without it derives one from the corpus text ONCE —
-    # subsequent folds then carry it forward and never re-shingle the
-    # corpus again.
-    sh_cur = state.get("shingles")
-    if sh_cur is None:
-        sh_cur = shingle_hashes(corpus, id_col, text_col, n)
-    bands_cur = state.get("bands")
-    if bands_cur is None:
-        bands_cur = band_rows(minhash_from_shingles(sh_cur, id_col), id_col)
-    net = materialize(net_changes(changes, [id_col, text_col]), "eager")
-    is_ins = F.col("_change_type") == "insert"
-    net_ins = net.filter(is_ins).select(id_col, text_col)
-    net_del = net.filter(~is_ins).select(id_col, text_col)
-    # Net inserts are treated as UPSERTS: any doc id arriving in the
-    # insert set sheds its existing corpus row and edges in the delete
-    # phase before re-insertion. In the normal (disjoint) case this
-    # matches no rows and costs nothing; it makes the fold IDEMPOTENT —
-    # re-folding an already-applied window reproduces the same state
-    # (pinned by the durable loop's crash-replay test) instead of
-    # violating the incremental join's corpus∩batch=∅ precondition
-    # (under which a doc paired with its own stale copy divides by a
-    # zero union).
-    del_ids = (net_del.select(id_col)
-               .unionByName(net_ins.select(id_col)).distinct())
-
-    # 1. vertex deletion
-    pairs_d = (pairs
-               .join(F.broadcast(del_ids.select(
-                   F.col(id_col).alias("doc_a"))), "doc_a", "left_anti")
-               .join(F.broadcast(del_ids.select(
-                   F.col(id_col).alias("doc_b"))), "doc_b", "left_anti")
-               .select(*pairs.columns))  # joins move keys to the front
-    touched = (clusters.join(del_ids, id_col, "left_semi")
-               .select("cluster_id").distinct())
-    intact = clusters.join(F.broadcast(touched), "cluster_id", "left_anti")
-    members = (clusters.join(F.broadcast(touched), "cluster_id",
-                             "left_semi").select(id_col))
-    sub = pairs_d.join(members.select(F.col(id_col).alias("doc_a")),
-                       "doc_a", "left_semi")
-    has_touched = not touched.isEmpty()
-    clusters_d = (dup_clusters(sub).unionByName(intact) if has_touched
-                  else clusters)
-
-    # 2. incremental insertion — against the MAINTAINED index, so the
-    # corpus text is never re-shingled: index maintenance is two
-    # anti-joins (deletes) + increment-sized appends, and the banded
-    # probe joins the batch's bands against the stored corpus bands.
-    corpus_after_del = corpus.join(del_ids, id_col, "left_anti")
-    sh_after_del = sh_cur.join(del_ids, id_col, "left_anti")
-    bands_after_del = bands_cur.join(del_ids, id_col, "left_anti")
-    def ck(df):
-        return materialize(df, "eager")
-
-    if net_ins.isEmpty():
-        return {"corpus": ck(corpus_after_del), "pairs": ck(pairs_d),
-                "clusters": ck(clusters_d), "shingles": ck(sh_after_del),
-                "bands": ck(bands_after_del)}
-    # increment-sized and consumed twice (pairs union + cluster fold)
-    new_pairs = ck(near_dup_pairs_incremental(
-        corpus_after_del, net_ins, id_col, text_col, n, threshold,
-        corpus_index={"shingles": sh_after_del, "bands": bands_after_del}))
-    out_pairs = ck(pairs_d.unionByName(new_pairs))
-    out_clusters = ck(dup_clusters_incremental(
-        clusters_d, new_pairs, id_col=id_col))
-    new_corpus = ck(corpus_after_del.unionByName(net_ins))
-    sh_ins = shingle_hashes(net_ins, id_col, text_col, n)
-    out_sh = ck(sh_after_del.unionByName(sh_ins))
-    out_bands = ck(bands_after_del.unionByName(
-        band_rows(minhash_from_shingles(sh_ins, id_col), id_col)))
-    return {"corpus": new_corpus, "pairs": out_pairs,
-            "clusters": out_clusters, "shingles": out_sh,
-            "bands": out_bands}
-
-
-@scope()
-def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
-                            id_col: str = "doc_id",
-                            text_col: str = "text", n: int = 3,
-                            threshold: float = 0.5):
-    """The DELTA form of :func:`fold_cdc_near_dup` for TABLE-resident
-    state (the durable lakehouse loop): instead of producing full
-    replacement frames — whose single O(state) overwrite was the r11
-    5×-table's named residual — it returns ``(delete_clauses,
-    inserts)`` for :meth:`~.txlog.TxTable.apply_delta`, so the state
-    WRITE is ∝ the increment's neighborhood too.
-
-    ``state_table`` is the packed frame-discriminated TxTable
-    (``streaming.pack_near_dup_state`` layout). Every state read is
-    either a stat-pruned keyed probe (:meth:`TxTable.read_keys` on the
-    frame + key columns) or the banded index probe itself (batch bands
-    equi-joined against the stored band frame — the index SCAN, which
-    is the incremental join's intended shape). Nothing reconstructs a
-    frame just to rewrite it.
-
-    Exactness matches the in-memory fold's argument, localized:
+    Every state read is either a stat-pruned keyed probe
+    (:meth:`TxTable.read_keys` on the frame + key columns) or the banded
+    index probe itself (batch bands equi-joined against the stored band
+    frame — :func:`near_dup_pairs_incremental`, batch×corpus plus
+    batch×batch, never corpus×corpus). Nothing reconstructs a frame
+    just to rewrite it. Exactness, per frame:
 
     - corpus/shingles/bands: a deleted-or-upserted doc's rows are
       dropped by (frame, doc_id) and the increment's rows appended —
@@ -1061,13 +937,12 @@ def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
       deletion — all other labels are untouched and untouched rows are
       never rewritten.
     """
-    st = state_table
     net = materialize(net_changes(changes, [id_col, text_col]), "eager")
     is_ins = F.col("_change_type") == "insert"
     net_ins = net.filter(is_ins).select(id_col, text_col)
     net_del = net.filter(~is_ins).select(id_col, text_col)
-    # Upsert discipline (same as the in-memory fold): an id arriving in
-    # the insert set sheds its old rows first, keeping folds idempotent.
+    # Upsert discipline: an id arriving in the insert set sheds its old
+    # rows first, keeping folds idempotent.
     del_ids = materialize(net_del.select(id_col)
                           .unionByName(net_ins.select(id_col)).distinct(),
                           "eager")
@@ -1142,8 +1017,7 @@ def fold_cdc_near_dup_delta(changes: DataFrame, state_table,
         (["frame", "doc_id"], keyed("clusters", cluster_dead, "doc_id")),
     ]
     sh_ins = shingle_hashes(net_ins, id_col, text_col, n)
-    from ..streaming import pack_near_dup_state
-    inserts = pack_near_dup_state(st.spark, {
+    inserts = pack_near_dup_state({
         "corpus": net_ins,
         "pairs": (new_pairs if new_pairs is not None
                   else sub.limit(0)),

@@ -2901,7 +2901,9 @@ class TxTable:
         :func:`~..operators.incremental.net_changes` (one signed-count
         aggregate, checkpointed), so rows carried unchanged through the
         source's copy-on-write rewrites cancel and cost nothing — the
-        same discipline as :func:`~..operators.neardup.fold_cdc_near_dup`.
+        same discipline as the CDC index folds
+        (:func:`~.neardup.fold_cdc_near_dup`,
+        :func:`~.annindex.fold_cdc_ann`).
         The touched-key count, the key-uniqueness check and the key
         bounds come from one summary row over that checkpoint. Then ONE
         stat-pruned probe finds the files holding any touched key, and

@@ -19,7 +19,7 @@ consumer's assumed base; default 0 (follow everything after the create
 commit; the create's rows themselves are the version-0 snapshot a consumer
 bootstraps from via ``TxTable.read(version=0)``).
 
-Everything here runs WITHOUT a SparkSession. The log is replayed by the
+The source runs WITHOUT a SparkSession. The log is replayed by the
 one core in ``operators/txproto.py`` over its plain-``os`` log IO: the
 schema and the window-start snapshot come from ``replay``, and each
 micro-batch's files come from ``walk_changes`` — the same walk
@@ -28,6 +28,10 @@ Each partition is ONE data file read with pyarrow on an executor; the
 planner never touches row data. Vacuumed files limit how far back a
 fresh stream can start, exactly like Delta's CDF-vs-vacuum contract
 (:meth:`TxTable.read_changes` documents it).
+
+:func:`maintain_from_cdc` is the one consumer loop for table-resident
+indexes (near-dup, ANN): it folds each micro-batch into a state table
+with one txn-guarded commit, so a replayed batch publishes nothing.
 """
 
 from __future__ import annotations
@@ -309,3 +313,55 @@ class TxLogCdcDataSource(DataSource):
 def register(spark) -> None:
     """Register the source on the live session (idempotent)."""
     spark.dataSource.register(TxLogCdcDataSource)
+
+
+def maintain_from_cdc(spark, table_path: str, checkpoint_path: str,
+                      state_path: str, app: str, bootstrap, fold):
+    """Keep a table-resident index in step with a txlog table: one
+    ``availableNow`` pass over the table's ``txlog_cdc`` feed, each
+    micro-batch folded into the state table with ONE atomic
+    :meth:`~..operators.txlog.TxTable.apply_delta` commit. Returns the
+    state :class:`~..operators.txlog.TxTable`.
+
+    - ``bootstrap(snapshot) -> TxTable`` builds a missing state table at
+      ``state_path`` from the source table's version-0 snapshot (the
+      feed's implied base: it delivers exactly the commits after it).
+    - ``fold(batch_df, st) -> (delete_clauses, inserts)`` turns one
+      change window into a keyed delta against the current state.
+
+    Exactly-once across the two-commit gap (state commit published,
+    stream checkpoint commit lost): every commit carries
+    ``txn=(f"{app}:{basename(state_path)}", batch_id)``, a replayed
+    batch at or below the table's ``last_txn`` is skipped before any
+    compute, and so it publishes nothing — the Delta ``txn``-action
+    discipline of the streaming sink. A fold reads the state table's
+    CURRENT snapshot, so the next batch always folds from the state its
+    predecessors committed. Layout-only commits (OPTIMIZE) feed empty
+    batches and commit nothing.
+    """
+    from ..operators.txlog import TxTable
+
+    register(spark)
+    app_id = f"{app}:{os.path.basename(state_path)}"
+    if os.path.isdir(os.path.join(state_path, "_txlog")):
+        st = TxTable(spark, state_path)
+    else:
+        st = bootstrap(TxTable(spark, table_path).read(version=0))
+
+    def _fold(batch_df, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        last = st.last_txn(app_id)
+        if last is not None and last >= batch_id:
+            return
+        clauses, inserts = fold(batch_df, st)
+        st.apply_delta(clauses, inserts, txn=(app_id, batch_id))
+
+    q = (spark.readStream.format("txlog_cdc")
+         .option("path", table_path).load()
+         .writeStream.foreachBatch(_fold)
+         .option("checkpointLocation", checkpoint_path)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    return st

@@ -1072,261 +1072,42 @@ def stream_type_runs(spark: SparkSession, sf_dir: str,
     q.awaitTermination()
 
 
-def _checkpoint_max_version(checkpoint_path: str) -> int | None:
-    """Highest txlog version any COMMITTED batch in a stream checkpoint
-    has consumed (None when the checkpoint is fresh or nothing
-    committed). A committed batch is exactly what a restart will NOT
-    replay — a planned-but-uncommitted offsets file replays into
-    ``foreachBatch`` and so never strands in-memory state. Reads the
-    engine's ``offsets/<batchId>`` files (the source's serialized
-    offset JSON — ``{"version": N}`` for txlog_cdc — rides on its own
-    line; the v1 header and watermark-metadata lines are skipped) for
-    batch ids that have a matching ``commits/<batchId>`` entry."""
-    import json
-    import os
-
-    odir = os.path.join(checkpoint_path, "offsets")
-    cdir = os.path.join(checkpoint_path, "commits")
-    if not os.path.isdir(odir) or not os.path.isdir(cdir):
-        return None
-    committed = {n for n in os.listdir(cdir) if n.isdigit()}
-    best: int | None = None
-    for name in os.listdir(odir):
-        if not name.isdigit() or name not in committed:
-            continue
-        with open(os.path.join(odir, name), encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line.startswith("{"):
-                    continue
-                try:
-                    obj = json.loads(line)
-                except ValueError:
-                    continue
-                v = obj.get("version")
-                if isinstance(v, int) and (best is None or v > best):
-                    best = v
-    return best
-
-
-def stream_cdc_near_dup_maintenance(spark, table_path: str,
-                                    checkpoint_path: str, state: dict,
-                                    id_col: str = "doc_id",
-                                    text_col: str = "text", n: int = 3,
-                                    threshold: float = 0.5) -> dict:
-    """CDC → incremental near-dup, wired end to end: one
-    ``availableNow`` pass over a txlog documents table's change feed
-    (the ``txlog_cdc`` source — its offset IS the table version), each
-    micro-batch folded through
-    :func:`operators.neardup.fold_cdc_near_dup` so the maintained
-    (corpus, pairs, clusters) index tracks the table with per-batch
-    work ∝ the increment. ``state`` comes from
-    :func:`operators.neardup.init_near_dup_state` over the table's v0
-    snapshot (the CDC source's initial offset is version 0, so the feed
-    delivers exactly the commits AFTER it); the stream checkpoint makes
-    re-runs resume at the first unseen version — N more commits then
-    one more call folds exactly those (the relay pattern,
-    tests/test_txlog_stream.py proves maintained == batch recompute
-    after commits that include a delete-bearing MERGE and a keyed
-    DELETE).
-
-    In-driver state is deliberate for this composition's scope: each
-    fold ends in eager localCheckpoints, so plan lineage never grows
-    with batch count. A production pipeline would persist the three
-    frames to lake tables inside the same ``foreachBatch`` (with the
-    txlog sink's txn action making the fold exactly-once); the fold
-    itself is already batch-shaped for that.
-
-    Restart guard: driver-memory state + a DURABLE stream checkpoint is
-    a mismatch a restart can silently exploit — a process that
-    re-bootstraps ``state`` from the v0 snapshot while reusing the old
-    ``checkpointLocation`` would skip the already-committed CDC window
-    and serve a permanently stale index with no error. ``state`` may
-    carry ``"base_version"`` (the table version it was built from;
-    defaults to 0, the documented bootstrap contract — this function
-    keeps it ADVANCED to the consumed offset on return, so the relay
-    pattern over the same state dict keeps working); if the existing
-    checkpoint has already COMMITTED an offset ahead of it, this raises
-    and points at :func:`stream_cdc_near_dup_maintenance_durable`,
-    whose state lives in a table and re-reads consistently.
-
-    Returns the final state dict (also mutated in place).
-    """
-    from .operators.neardup import fold_cdc_near_dup
-    from .sources.txlog_stream import register as register_cdc
-
-    register_cdc(spark)
-    base = int(state.get("base_version", 0))
-    committed = _checkpoint_max_version(checkpoint_path)
-    if committed is not None and committed > base:
-        raise ValueError(
-            f"stream checkpoint {checkpoint_path} already committed the "
-            f"change window up to version {committed}, but the in-memory "
-            f"state was built from version {base}: resuming would skip "
-            f"committed changes and leave the index permanently stale. "
-            f"Rebuild state from the current snapshot with a fresh "
-            f"checkpoint, or use stream_cdc_near_dup_maintenance_durable "
-            f"(table-backed state survives restarts)")
-
-    def _fold(batch_df, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # layout-only commits (OPTIMIZE) feed nothing
-        state.update(fold_cdc_near_dup(
-            batch_df, state, id_col, text_col, n, threshold))
-
-    q = (spark.readStream.format("txlog_cdc")
-         .option("path", table_path).load()
-         .writeStream.foreachBatch(_fold)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    done = _checkpoint_max_version(checkpoint_path)
-    if done is not None:
-        state["base_version"] = max(base, done)
-    return state
-
-
-# Combined near-dup index state as ONE table: a single atomic commit per
-# fold keeps the five frames mutually consistent under any crash (five
-# separate tables could never commit together). The shingle/band frames
-# ARE the materialized corpus index that makes fold work ∝ increment —
-# persisting them is the point: a fold never re-shingles the corpus.
-_NEARDUP_STATE_SCHEMA = ("frame string, doc_id long, text string, "
-                         "doc_a long, doc_b long, jaccard double, "
-                         "cluster_id long, is_canonical boolean, "
-                         "hv long, band_id int, band_hash string")
-
-
-def pack_near_dup_state(spark, state: dict):
-    """(corpus, pairs, clusters, shingles, bands) → one
-    frame-discriminated DataFrame."""
-    from pyspark.sql import functions as F
-
-    n = F.lit(None)
-    blank = {
-        "doc_id": n.cast("long"), "text": n.cast("string"),
-        "doc_a": n.cast("long"), "doc_b": n.cast("long"),
-        "jaccard": n.cast("double"), "cluster_id": n.cast("long"),
-        "is_canonical": n.cast("boolean"), "hv": n.cast("long"),
-        "band_id": n.cast("int"), "band_hash": n.cast("string"),
-    }
-
-    def frame(tag, df, *cols):
-        sel = [F.lit(tag).alias("frame")]
-        sel += [F.col(c).alias(c) if c in cols else blank[c].alias(c)
-                for c in blank]
-        return df.select(*sel)
-
-    out = frame("corpus", state["corpus"], "doc_id", "text")
-    for tag, cols in (("pairs", ("doc_a", "doc_b", "jaccard")),
-                      ("clusters", ("doc_id", "cluster_id",
-                                    "is_canonical")),
-                      ("shingles", ("doc_id", "hv")),
-                      ("bands", ("doc_id", "band_id", "band_hash"))):
-        out = out.unionByName(frame(tag, state[tag], *cols))
-    return out
-
-
-def unpack_near_dup_state(packed) -> dict:
-    """One frame-discriminated DataFrame → the five state frames."""
-    from pyspark.sql import functions as F
-
-    def frame(tag, *cols):
-        return packed.filter(F.col("frame") == tag).select(*cols)
-
-    return {
-        "corpus": frame("corpus", "doc_id", "text"),
-        "pairs": frame("pairs", "doc_a", "doc_b", "jaccard"),
-        "clusters": frame("clusters", "doc_id", "cluster_id",
-                          "is_canonical"),
-        "shingles": frame("shingles", "doc_id", "hv"),
-        "bands": frame("bands", "doc_id", "band_id", "band_hash"),
-    }
-
-
-def stream_cdc_near_dup_maintenance_durable(
+def stream_cdc_near_dup_maintenance(
         spark, table_path: str, checkpoint_path: str, state_path: str,
         id_col: str = "doc_id", text_col: str = "text", n: int = 3,
         threshold: float = 0.5) -> dict:
-    """The LAKEHOUSE-NATIVE near-dup maintenance loop — the production
-    form :func:`stream_cdc_near_dup_maintenance`'s docstring promises:
-    state lives in a txlog table instead of the driver, and the whole
-    cycle is crash-safe end to end:
+    """Near-dup index maintenance, end to end and crash-safe:
 
         txlog documents table → ``txlog_cdc`` feed →
         :func:`operators.neardup.fold_cdc_near_dup` →
-        one ATOMIC ``overwrite(txn=...)`` of the state table.
+        one ATOMIC ``apply_delta(txn=...)`` of the state table,
 
-    The three state frames (corpus, pairs, clusters) pack into ONE
-    frame-discriminated table so each fold is a single atomic commit —
-    the frames can never be observed mutually inconsistent, under any
-    crash. Exactly-once across the classic two-commit gap (state-table
-    commit published, stream checkpoint commit lost): the replayed
-    micro-batch's overwrite carries ``txn=(app, batch_id)`` and the
-    table's txn ledger makes it publish NOTHING (pytest-pinned with an
-    injected crash, tests/test_txlog_stream.py) — the same Delta
-    ``txn``-action discipline as the streaming sink. A fold reads the
-    state table's CURRENT snapshot; a replay after a successful state
-    commit recomputes from post-batch state, and the discarded result
-    never lands, so convergence needs no compensating logic.
+    run by :func:`sources.txlog_stream.maintain_from_cdc`, the loop the
+    ANN index uses too. The five state frames (corpus, pairs, clusters
+    and the shingle/band corpus index) live in ONE frame-discriminated
+    txlog table at ``state_path``, so each fold is a single atomic
+    commit and the frames can never be observed mutually inconsistent.
+    A replayed micro-batch publishes NOTHING (pytest-pinned with an
+    injected crash, tests/test_txlog_stream.py), and re-runs resume at
+    the first unseen version: N more commits then one more call folds
+    exactly those.
 
     Bootstrap: a missing state table is built from the documents
-    table's version-0 snapshot (the CDC feed's implied base). Each
-    fold's per-batch work stays ∝ the increment; state history is
-    itself time-travelable (every index version auditable) and
-    compactable with the standard table maintenance (optimize/vacuum/
-    checkpoints). Returns the final unpacked state dict.
+    table's version-0 snapshot by
+    :func:`operators.neardup.init_near_dup_table`. Per-batch work and
+    write stay ∝ the increment; state history is itself
+    time-travelable (every index version auditable) and compactable
+    with the standard table maintenance. Returns the final unpacked
+    state dict.
     """
-    import os
+    from .operators import neardup
+    from .sources.txlog_stream import maintain_from_cdc
 
-    from .operators.neardup import (fold_cdc_near_dup_delta,
-                                    init_near_dup_state)
-    from .operators.txlog import TxTable
-    from .sources.txlog_stream import register as register_cdc
-
-    register_cdc(spark)
-    app_id = f"neardup-maintenance:{os.path.basename(state_path)}"
-    if os.path.isdir(os.path.join(state_path, "_txlog")):
-        st = TxTable(spark, state_path)
-    else:
-        boot = init_near_dup_state(
-            TxTable(spark, table_path).read(version=0),
-            id_col, text_col, n, threshold)
-        # (frame, key)-RANGE-clustered files + per-frame key stats: a
-        # fold's delete clauses rewrite only the files whose narrow
-        # key range actually holds a touched key — a frame packed into
-        # one wide file would make every keyed delete rewrite the whole
-        # frame, reintroducing the O(state) write this layout removes.
-        packed = pack_near_dup_state(spark, boot)
-        packed = packed.repartitionByRange(
-            "frame", F.coalesce(F.col("doc_id"), F.col("doc_a")))
-        st = TxTable.create(
-            spark, packed, state_path,
-            stat_cols=["frame", "doc_id", "doc_a", "doc_b",
-                       "cluster_id"])
-
-    def _fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # layout-only commits (OPTIMIZE) feed nothing
-        last = st.last_txn(app_id)
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already applied, skip the compute
-        # Keyed DELTA write (r11 directive #5): the fold emits per-frame
-        # delete clauses + increment-sized inserts, and apply_delta
-        # rewrites only the files holding touched keys in ONE atomic
-        # txn-guarded commit — the old full-state overwrite was the one
-        # O(state) term left in the 5× fold table (PLANS.md r11); write
-        # cost now tracks the increment's neighborhood like the compute.
-        clauses, inserts = fold_cdc_near_dup_delta(
-            batch_df, st, id_col, text_col, n, threshold)
-        st.apply_delta(clauses, inserts, txn=(app_id, batch_id))
-
-    q = (spark.readStream.format("txlog_cdc")
-         .option("path", table_path).load()
-         .writeStream.foreachBatch(_fold)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return unpack_near_dup_state(st.read())
+    st = maintain_from_cdc(
+        spark, table_path, checkpoint_path, state_path,
+        "neardup-maintenance",
+        lambda docs: neardup.init_near_dup_table(
+            spark, docs, state_path, id_col, text_col, n, threshold),
+        lambda batch, st: neardup.fold_cdc_near_dup(
+            batch, st, id_col, text_col, n, threshold))
+    return neardup.unpack_near_dup_state(st.read())

@@ -10,9 +10,10 @@ policy.
   place (``q_docs_bpe_merges`` over a rewritten ``documents.parquet``,
   ``load_table`` over a directory table rewritten with
   ``mode("overwrite")``); unchanged inputs add no entry and run no job.
-- ``materialize``/``scope``: after four ``fold_cdc_near_dup`` windows,
-  and after two ``docs_scrub_fixpoint`` runs under ``scope()``, no frame
-  they shared is still cached; a frame shared under another thread's
+- ``materialize``/``scope``: after four ``fold_cdc_near_dup`` windows
+  applied to a near-dup index table, and after two
+  ``docs_scrub_fixpoint`` runs under ``scope()``, no frame they shared
+  is still cached; a frame shared under another thread's
   open scope stays cached when this thread's scope exits.
 - The package has no other cache: no module outside ``artifacts.py``
   keeps a weak-keyed session map, a temp-dir build or a module-level
@@ -240,7 +241,7 @@ def _still_cached(frames: list) -> list:
     return [f for f in frames if f.storageLevel != StorageLevel.NONE]
 
 
-def test_cdc_folds_release_what_they_share(spark, shared_frames):
+def test_cdc_folds_release_what_they_share(spark, tmp_path, shared_frames):
     tag = uuid.uuid4().hex[:8]  # plans no other test caches
 
     def text(i: int, tweak: str = "") -> str:
@@ -248,13 +249,13 @@ def test_cdc_folds_release_what_they_share(spark, shared_frames):
 
     sch = "doc_id long, text string"
     docs = spark.createDataFrame([(i, text(i)) for i in range(10)], sch)
-    state = neardup.init_near_dup_state(docs)
+    st = neardup.init_near_dup_table(spark, docs, str(tmp_path / "state"))
     for w in range(4):
         changes = spark.createDataFrame(
             [(100 + w, text(w, " extra"), "insert"),
              (w, text(w), "delete")], f"{sch}, _change_type string")
-        state = neardup.fold_cdc_near_dup(changes, state)
-    assert state["pairs"].count() > 0
+        st.apply_delta(*neardup.fold_cdc_near_dup(changes, st))
+    assert neardup.unpack_near_dup_state(st.read())["pairs"].count() > 0
     assert len(shared_frames) >= 4 * 3
     assert _still_cached(shared_frames) == []
 

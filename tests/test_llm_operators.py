@@ -627,26 +627,6 @@ def test_dup_clusters_empty_and_convergence_guard(spark):
         connected_components(chain, max_iter=1)
 
 
-def _heavy_test_star_algorithm_handles_diameter_past_propagation_cap(spark):
-    """Large-star/small-star on a 50-vertex PATH graph — diameter 49,
-    past propagation's default max_iter=30 — must converge (rounds are
-    logarithmic in diameter) and label every vertex with the component
-    min; the same input makes min-label propagation raise, proving the
-    star path covers the adversarial topology and not just stars."""
-    from meteomatics_e2e_data_pipeline_spark.operators.neardup import (
-        connected_components,
-    )
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(50 - 1)], "doc_a bigint, doc_b bigint")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path)          # diameter 49 > max_iter 30
-    labels = {r["u"]: r["lbl"]
-              for r in connected_components(path,
-                                            algorithm="star").collect()}
-    assert labels == {i: 0 for i in range(50)}
-
-
 def _heavy_test_incremental_cluster_maintenance_matches_batch(spark):
     """dup_clusters_incremental must be indistinguishable from a batch
     recompute: new pairs extend an old cluster (1-2-3 gains 4), an
@@ -665,25 +645,6 @@ def _heavy_test_incremental_cluster_maintenance_matches_batch(spark):
     assert inc == batch
     assert (4, 1, False) in inc and (9, 9, True) in inc \
         and (20, 20, True) in inc
-
-
-def test_star_and_propagation_agree_on_mixed_graph(spark):
-    """Both algorithms produce identical labelings on a graph mixing
-    singleton pairs, a triangle, a star, and a short chain — the shapes
-    real near-dup edge sets contain."""
-    from meteomatics_e2e_data_pipeline_spark.operators.neardup import (
-        connected_components,
-    )
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (9, 10), (10, 11), (9, 11),
-         (20, 21), (20, 22), (20, 23), (30, 31), (31, 32), (32, 33)],
-        "doc_a bigint, doc_b bigint")
-    prop = sorted(map(tuple, connected_components(pairs).collect()))
-    star = sorted(map(tuple,
-                      connected_components(pairs,
-                                           algorithm="star").collect()))
-    assert prop == star
 
 
 from hypothesis import given, settings, strategies as st  # noqa: E402
@@ -722,14 +683,14 @@ def test_incremental_cluster_maintenance_property(spark, data):
 
 @settings(max_examples=4, deadline=None)  # trimmed 10->6 (r10), 6->4
 # (r12 runtime budget): the sweep re-derives what the deterministic
-# fixed-point/cocluster/star-agreement tests above pin every run; 4
-# random graphs keep the union-find cross-check without ~20 s of lane.
+# fixed-point/cocluster tests above pin every run; 4 random graphs keep
+# the union-find cross-check without ~20 s of lane.
 @given(st.data())
 def test_connected_components_property_vs_union_find(spark, data):
-    """Property: BOTH component algorithms (min-label propagation and
-    large-star/small-star) must equal a Python union-find reference on
-    random graphs — random edge sets over a small vertex universe hit
-    every mix of singleton pairs, chains, cycles, and dense blobs."""
+    """Property: min-label propagation must equal a Python union-find
+    reference on random graphs — random edge sets over a small vertex
+    universe hit every mix of singleton pairs, chains, cycles, and dense
+    blobs."""
     from meteomatics_e2e_data_pipeline_spark.operators.neardup import (
         connected_components,
     )
@@ -760,10 +721,8 @@ def test_connected_components_property_vs_union_find(spark, data):
     verts = {v for e in edges for v in e}
     want = {v: find(v) for v in verts}
 
-    for algo in ("propagation", "star"):
-        got = {r["u"]: r["lbl"] for r in
-               connected_components(pairs, algorithm=algo).collect()}
-        assert got == want, algo
+    got = {r["u"]: r["lbl"] for r in connected_components(pairs).collect()}
+    assert got == want
 
 
 def test_stratified_sample_rates_and_determinism(spark):
@@ -2782,7 +2741,7 @@ def test_exact_substring_scrub_property_vs_python_reference(spark, data):
 
 # ---------------------------------------------------------------------------
 # Pooled heavy bodies (runtime-budget lever, same pattern as the oracle
-# mirror): the 12 most expensive independent tests in this module are
+# mirror): the 11 most expensive independent tests in this module are
 # latency-bound (many small Spark jobs), so ONE module fixture runs them
 # concurrently on a thread pool — Spark job submission is thread-safe —
 # and each keeps its own pytest row below, re-raising its stored
@@ -2790,7 +2749,6 @@ def test_exact_substring_scrub_property_vs_python_reference(spark, data):
 # ---------------------------------------------------------------------------
 
 _POOLED_HEAVY = {
-    "test_star_algorithm_handles_diameter_past_propagation_cap": (_heavy_test_star_algorithm_handles_diameter_past_propagation_cap, ['spark']),
     "test_training_mix_pipeline_stages_monotone": (_heavy_test_training_mix_pipeline_stages_monotone, ['spark', 'sf_oracle']),
     "test_samplers_invariant_under_repartitioning": (_heavy_test_samplers_invariant_under_repartitioning, ['spark']),
     "test_emb_dedup_keep_drops_only_noncanonical": (_heavy_test_emb_dedup_keep_drops_only_noncanonical, ['spark', 'sf_oracle']),
@@ -2812,11 +2770,6 @@ def heavy_results(_heavy_pool):
             for n in _POOLED_HEAVY}
     return {n: f.result() for n, f in futs.items()}
 
-
-def test_star_algorithm_handles_diameter_past_propagation_cap(heavy_results):
-    ex = heavy_results["test_star_algorithm_handles_diameter_past_propagation_cap"]
-    if ex is not None:
-        raise ex
 
 def test_training_mix_pipeline_stages_monotone(heavy_results):
     ex = heavy_results["test_training_mix_pipeline_stages_monotone"]

@@ -5,9 +5,11 @@ make restarts resume at the commit boundary with no replay and no loss."""
 from __future__ import annotations
 
 from collections import Counter
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from meteomatics_e2e_data_pipeline_spark.operators.txlog import TxTable
 from meteomatics_e2e_data_pipeline_spark.sources.txlog_stream import (
@@ -92,82 +94,69 @@ def _rows(df):
     return Counter(tuple(r) for r in df.collect())
 
 
+def _doc(pfx, tweak=None):
+    toks = [f"{pfx}{i}" for i in range(10)]
+    if tweak is not None:
+        toks[tweak[0]] = tweak[1]
+    return " ".join(toks)
+
+
+_DOC_SCHEMA = "doc_id long, text string"
+
+
 def _heavy_test_cdc_feeds_incremental_near_dup_maintenance(spark, tmp_path):
-    """Directive r10 #6 — the two halves wired end to end: a txlog
-    documents table's commits flow through the ``txlog_cdc`` feed into
-    the incremental pair join + vertex-deletion cluster maintenance
-    (operators.neardup.fold_cdc_near_dup), and after N commits — an
-    append, a text-UPDATING merge (delete+insert of the same key in CDC
-    terms), and a keyed DELETE — the maintained (corpus, pairs,
-    clusters) index is multiset-EQUAL to a from-scratch batch recompute
-    over the live snapshot. A second run resumes from the stream
-    checkpoint and folds only the new window (the relay pattern)."""
+    """A txlog documents table's commits flow through the ``txlog_cdc``
+    feed into the near-dup maintenance loop
+    (streaming.stream_cdc_near_dup_maintenance): after an append, a
+    text-UPDATING merge (delete+insert of the same key in CDC terms), a
+    keyed DELETE, a relay run after one more append, and a run with no
+    new commits, the maintained (corpus, pairs, clusters) index is
+    multiset-EQUAL to a from-scratch batch recompute over the live
+    snapshot. Each run resumes from the stream checkpoint and folds only
+    the new window; the no-op run publishes no state commit."""
     from meteomatics_e2e_data_pipeline_spark.operators import neardup
     from meteomatics_e2e_data_pipeline_spark.streaming import (
         stream_cdc_near_dup_maintenance,
     )
 
-    def doc(pfx, tweak=None):
-        toks = [f"{pfx}{i}" for i in range(10)]
-        if tweak is not None:
-            toks[tweak[0]] = tweak[1]
-        return " ".join(toks)
-
-    sch = "doc_id long, text string"
     docs0 = spark.createDataFrame(
-        [(1, doc("a")), (2, doc("a", (9, "zz"))), (3, doc("b")),
-         (4, doc("b", (9, "yy"))), (5, doc("c"))], sch)
+        [(1, _doc("a")), (2, _doc("a", (9, "zz"))), (3, _doc("b")),
+         (4, _doc("b", (9, "yy"))), (5, _doc("c"))], _DOC_SCHEMA)
     p = str(tmp_path / "docs")
     t = TxTable.create(spark, docs0.coalesce(2), p,            # v0
                        stat_cols=["doc_id"])
-    state = neardup.init_near_dup_state(t.read(version=0))
-    assert len(_rows(state["pairs"])) == 2                     # (1,2),(3,4)
+    ck, sp = str(tmp_path / "ck"), str(tmp_path / "state")
 
+    def run_equals_batch():
+        state = stream_cdc_near_dup_maintenance(spark, p, ck, sp)
+        pairs = neardup.near_dup_pairs(t.read())
+        assert _rows(state["pairs"]) == _rows(pairs)
+        assert _rows(state["clusters"]) == _rows(neardup.dup_clusters(pairs))
+        assert _rows(state["corpus"]) == _rows(t.read())
+        return {(a, b) for a, b, _ in _rows(state["pairs"])}
+
+    assert run_equals_batch() == {(1, 2), (3, 4)}   # bootstrap only
     t.append(spark.createDataFrame(                            # v1
-        [(6, doc("a", (0, "qq"))), (7, doc("d"))], sch))
+        [(6, _doc("a", (0, "qq"))), (7, _doc("d"))], _DOC_SCHEMA))
+    run_equals_batch()
     t.merge_upsert(spark.createDataFrame(                      # v2: doc 4
-        [(4, doc("d", (9, "ww")))], sch), ["doc_id"],          # leaves the
+        [(4, _doc("d", (9, "ww")))], _DOC_SCHEMA), ["doc_id"],  # leaves the
         update=True)                                           # b-cluster
+    run_equals_batch()
     t.delete(spark.createDataFrame([(2,)], "doc_id long"),     # v3: vertex
              ["doc_id"])                                       # deletion
+    assert run_equals_batch() == {(1, 6), (4, 7)}
 
-    ck = str(tmp_path / "ck")
-    stream_cdc_near_dup_maintenance(spark, p, ck, state)
+    # relay: one more commit, resume from the checkpoint, fold only the
+    # new window
+    t.append(spark.createDataFrame(                            # v4
+        [(8, _doc("b", (0, "rr")))], _DOC_SCHEMA))
+    assert run_equals_batch() == {(1, 6), (4, 7), (3, 8)}
 
-    def batch_index():
-        pairs = neardup.near_dup_pairs(t.read())
-        return pairs, neardup.dup_clusters(pairs)
-
-    pb, cb = batch_index()
-    assert _rows(state["pairs"]) == _rows(pb)
-    assert _rows(state["clusters"]) == _rows(cb)
-    assert _rows(state["corpus"]) == _rows(t.read())
-    got_pairs = {(a, b) for a, b, _ in _rows(state["pairs"])}
-    assert got_pairs == {(1, 6), (4, 7)}   # 2's edges gone; 4 re-homed
-
-    # relay: more commits, resume from the checkpoint, fold only the
-    # new window — still equal to the batch recompute
-    t.append(spark.createDataFrame([(8, doc("b", (0, "rr")))], sch))  # v4
-    stream_cdc_near_dup_maintenance(spark, p, ck, state)
-    pb2, cb2 = batch_index()
-    assert _rows(state["pairs"]) == _rows(pb2)
-    assert _rows(state["clusters"]) == _rows(cb2)
-    assert {(a, b) for a, b, _ in _rows(state["pairs"])} == {
-        (1, 6), (4, 7), (3, 8)}
-
-    # a third run with NO new commits is a clean no-op
-    stream_cdc_near_dup_maintenance(spark, p, ck, state)
-    assert _rows(state["pairs"]) == _rows(pb2)
-
-    # r11 advice guard: a restart that re-bootstraps driver-memory state
-    # from the v0 snapshot while REUSING this already-committed stream
-    # checkpoint would silently skip the committed CDC window — it must
-    # fail loudly and point at the durable variant. The relay runs above
-    # were legal exactly because the fold kept base_version advanced.
-    assert state["base_version"] == t.version
-    stale = neardup.init_near_dup_state(t.read(version=0))
-    with pytest.raises(ValueError, match="durable"):
-        stream_cdc_near_dup_maintenance(spark, p, ck, stale)
+    # a run with NO new commits is a clean no-op: no state commit
+    v = TxTable(spark, sp).version
+    assert run_equals_batch() == {(1, 6), (4, 7), (3, 8)}
+    assert TxTable(spark, sp).version == v
 
 
 def _heavy_test_txtable_delete_copy_on_write_and_cdc_nets_exact_rows(
@@ -279,56 +268,130 @@ def _heavy_test_cdc_max_versions_per_trigger_bounds_batches(spark, tmp_path):
         assert rows in per_commit
 
 
-def test_durable_cdc_near_dup_maintenance_exactly_once_across_crash(
-        spark, tmp_path, heavy_session_results):
+def _msx(df):
+    return Counter(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                   for r in df.collect())
+
+
+def _near_dup_index(spark, tmp_path):
+    """Near-dup case of the crash test: documents table at v2 (append,
+    delete), its loop, its fold, a batch-recompute check and one more
+    commit."""
+    from meteomatics_e2e_data_pipeline_spark.operators import neardup
+    from meteomatics_e2e_data_pipeline_spark.streaming import (
+        stream_cdc_near_dup_maintenance,
+    )
+
+    docs0 = spark.createDataFrame(
+        [(1, _doc("a")), (2, _doc("a", (9, "zz"))), (3, _doc("b")),
+         (5, _doc("c"))], _DOC_SCHEMA)
+    t = TxTable.create(spark, docs0.coalesce(1), str(tmp_path / "docs"),
+                       stat_cols=["doc_id"])
+    t.append(spark.createDataFrame(                                   # v1
+        [(6, _doc("b", (0, "qq")))], _DOC_SCHEMA))
+    t.delete(spark.createDataFrame([(2,)], "doc_id long"), ["doc_id"])  # v2
+    ck, sp = str(tmp_path / "ck"), str(tmp_path / "state")
+
+    def check():
+        state = stream_cdc_near_dup_maintenance(spark, t.path, ck, sp)
+        pairs = neardup.near_dup_pairs(t.read())
+        assert _msx(state["pairs"]) == _msx(pairs)
+        assert _msx(state["clusters"]) == _msx(neardup.dup_clusters(pairs))
+        assert _msx(state["corpus"]) == _msx(t.read())
+        assert (3, 6) in {(a, b) for a, b, _ in _msx(state["pairs"])}
+        # the state history is itself auditable: the packed v0
+        # bootstrap equals the documents table's v0 index
+        st = TxTable(spark, sp)
+        boot = neardup.unpack_near_dup_state(st.read(version=0))
+        assert _msx(boot["pairs"]) == _msx(
+            neardup.near_dup_pairs(t.read(version=0)))
+        # the packed table's schema IS the declared contract
+        assert st.schema() == StructType.fromDDL(
+            neardup._NEARDUP_STATE_SCHEMA)
+
+    def more():
+        t.append(spark.createDataFrame(                               # v3
+            [(7, _doc("c", (9, "ww")))], _DOC_SCHEMA))
+
+    return SimpleNamespace(
+        src=t, state_path=sp,
+        run=lambda: stream_cdc_near_dup_maintenance(spark, t.path, ck, sp),
+        fold=neardup.fold_cdc_near_dup, check=check, more=more)
+
+
+def _ann_index(spark, tmp_path):
+    """ANN case of the crash test: a small embeddings table at v2
+    (append, delete), its loop, its fold, a rebuild check and one more
+    commit."""
+    from meteomatics_e2e_data_pipeline_spark.operators import (
+        annindex,
+        similarity,
+    )
+
+    def vecs(lo, hi):
+        return spark.createDataFrame(
+            [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(4)])
+             for i in range(lo, hi)], "vec_id long, embedding array<float>")
+
+    centroids = vecs(0, 4).select(F.col("vec_id").alias("centroid_id"),
+                                  "embedding")
+    t = TxTable.create(spark, vecs(0, 30).coalesce(1),
+                       str(tmp_path / "emb"), stat_cols=["vec_id"])  # v0
+    t.append(vecs(30, 40).coalesce(1))                                # v1
+    t.delete(spark.createDataFrame([(3,), (31,)], "vec_id long"),
+             ["vec_id"])                                              # v2
+    ck, sp = str(tmp_path / "ck"), str(tmp_path / "ann")
+
+    def run():
+        return annindex.stream_cdc_ann_maintenance(
+            spark, t.path, ck, sp, centroids=centroids)
+
+    def check():
+        run()
+        got = annindex.ann_frames(TxTable(spark, sp))
+        live = t.read()
+        assert _msx(got["assign"]) == _msx(similarity.ivf_assign(
+            live, centroids).select("vec_id", "embedding", "bucket"))
+        assert _msx(got["codes"]) == _msx(similarity.quantize_int8(
+            live).select("vec_id", "scale", "q"))
+        assert _msx(got["centroids"]) == _msx(centroids)
+
+    return SimpleNamespace(
+        src=t, state_path=sp, run=run, fold=annindex.fold_cdc_ann,
+        check=check, more=lambda: t.append(vecs(40, 45).coalesce(1)))
+
+
+@pytest.mark.parametrize("index", ["neardup", "ann"])
+def test_cdc_index_maintenance_exactly_once_across_crash(
+        spark, tmp_path, heavy_session_results, index):
     # heavy_session_results ordering dependency: this test patches the
     # CLASS attribute TxTable.apply_delta, so the session pool (whose
     # bodies call apply_delta) must have fully drained first.
-    """The lakehouse-native maintenance loop: state in ONE
-    frame-discriminated txlog table, one atomic keyed-delta commit
-    (apply_delta(txn=...)) per fold — write cost tracks the increment's
-    neighborhood, never state size. A crash injected in the classic two-commit gap (state-table
-    commit published, stream checkpoint commit lost) replays the batch
-    on restart and the txn ledger makes the replay publish NOTHING —
-    the state table history shows exactly one applied commit per
-    effective batch, and the maintained index equals a from-scratch
-    batch recompute after further commits."""
+    """The one CDC maintenance loop
+    (sources.txlog_stream.maintain_from_cdc), for both indexes it runs:
+    state in ONE frame-discriminated txlog table, one atomic
+    keyed-delta commit (apply_delta(txn=...)) per fold. A crash injected in the classic
+    two-commit gap (state-table commit published, stream checkpoint
+    commit lost) replays the batch on restart and the txn ledger makes
+    the replay publish NOTHING; re-applying the fold's delta for an
+    already-applied window leaves the state unchanged (the fold is
+    idempotent — the at-least-once backstop beneath the txn guard); and
+    the next commit folds from consistent state, equal to a
+    from-scratch rebuild."""
     import meteomatics_e2e_data_pipeline_spark.operators.txlog as txmod
-    from meteomatics_e2e_data_pipeline_spark.operators import neardup
-    from meteomatics_e2e_data_pipeline_spark.streaming import (
-        stream_cdc_near_dup_maintenance_durable,
-        unpack_near_dup_state,
-    )
 
-    def doc(pfx, tweak=None):
-        toks = [f"{pfx}{i}" for i in range(10)]
-        if tweak is not None:
-            toks[tweak[0]] = tweak[1]
-        return " ".join(toks)
-
-    sch = "doc_id long, text string"
-    docs0 = spark.createDataFrame(
-        [(1, doc("a")), (2, doc("a", (9, "zz"))), (3, doc("b")),
-         (5, doc("c"))], sch)
-    p = str(tmp_path / "docs")
-    t = TxTable.create(spark, docs0.coalesce(1), p, stat_cols=["doc_id"])
-    t.append(spark.createDataFrame([(6, doc("b", (0, "qq")))], sch))  # v1
-    t.delete(spark.createDataFrame([(2,)], "doc_id long"), ["doc_id"])  # v2
-
-    ck, sp = str(tmp_path / "ck"), str(tmp_path / "state")
-
+    case = {"neardup": _near_dup_index, "ann": _ann_index}[index](
+        spark, tmp_path)
     real = txmod.TxTable.apply_delta
     calls = {"crashed": False}
-    state_path = sp.rstrip("/")
+    state_path = case.state_path.rstrip("/")
 
     def crashing(self, deletes, inserts=None, txn=None):
         v = real(self, deletes, inserts, txn=txn)
         # Scope the injection to THIS test's state table: the patch is
         # process-global (class attribute), so an apply_delta call from
         # any concurrent session/thread would otherwise absorb the one
-        # injected crash and this test's fold would sail through — the
-        # r12 "red once under 3 concurrent sessions" flake, fixed at
-        # the mechanism (PLANS.md r13).
+        # injected crash and this test's fold would sail through.
         if self.path == state_path and not calls["crashed"]:
             calls["crashed"] = True
             raise RuntimeError("injected crash after state commit")
@@ -337,55 +400,28 @@ def test_durable_cdc_near_dup_maintenance_exactly_once_across_crash(
     txmod.TxTable.apply_delta = crashing
     try:
         with pytest.raises(Exception, match="injected crash"):
-            stream_cdc_near_dup_maintenance_durable(spark, p, ck, sp)
+            case.run()
     finally:
         txmod.TxTable.apply_delta = real
-    st = TxTable(spark, sp)
-    v_crash = st.version          # bootstrap + the one applied fold
+    v_crash = TxTable(spark, case.state_path).version  # boot + one fold
 
     # restart: the batch replays, the txn guard publishes NOTHING new
-    state = stream_cdc_near_dup_maintenance_durable(spark, p, ck, sp)
-    assert TxTable(spark, sp).version == v_crash
+    case.check()
+    assert TxTable(spark, case.state_path).version == v_crash
 
-    def ms(df):
-        return Counter(tuple(r) for r in df.collect())
-
-    pairs_b = neardup.near_dup_pairs(t.read())
-    assert ms(state["pairs"]) == ms(pairs_b)
-    assert ms(state["clusters"]) == ms(neardup.dup_clusters(pairs_b))
-    assert ms(state["corpus"]) == ms(t.read())
-
-    # fold IDEMPOTENCE (the at-least-once backstop beneath the txn
-    # guard): re-folding the already-applied window against post-batch
-    # state reproduces that state exactly — net inserts are upserts,
-    # so the replayed doc sheds its stale row/edges instead of meeting
-    # its own copy in the incremental join
-    refold = neardup.fold_cdc_near_dup(t.read_changes(0, 2), dict(state))
-    assert ms(refold["pairs"]) == ms(state["pairs"])
-    assert ms(refold["clusters"]) == ms(state["clusters"])
-    assert ms(refold["corpus"]) == ms(state["corpus"])
+    # fold idempotence: the delta for window (0, 2], re-applied without
+    # a txn to the post-batch state, leaves the state unchanged
+    st = TxTable(spark, case.state_path)
+    before = _msx(st.read())
+    clauses, inserts = case.fold(case.src.read_changes(0, 2), st)
+    st.apply_delta(clauses, inserts)
+    assert _msx(TxTable(spark, case.state_path).read()) == before
 
     # further commits fold from CONSISTENT persisted state
-    t.append(spark.createDataFrame([(7, doc("c", (9, "ww")))], sch))  # v3
-    state = stream_cdc_near_dup_maintenance_durable(spark, p, ck, sp)
-    assert TxTable(spark, sp).version == v_crash + 1
-    pairs_b2 = neardup.near_dup_pairs(t.read())
-    assert ms(state["pairs"]) == ms(pairs_b2)
-    assert ms(state["clusters"]) == ms(neardup.dup_clusters(pairs_b2))
-    assert {(a, b) for a, b, _ in ms(state["pairs"])} == {(3, 6), (5, 7)}
-
-    # the state history is itself auditable: the packed v0 bootstrap
-    # equals the documents table's v0 index
-    boot = unpack_near_dup_state(st.read(version=0))
-    pairs_v0 = neardup.near_dup_pairs(t.read(version=0))
-    assert ms(boot["pairs"]) == ms(pairs_v0)
-
-    # the packed table's schema IS the declared contract
-    from pyspark.sql.types import StructType as _St
-    from meteomatics_e2e_data_pipeline_spark.streaming import (
-        _NEARDUP_STATE_SCHEMA,
-    )
-    assert st.schema() == _St.fromDDL(_NEARDUP_STATE_SCHEMA)
+    v = TxTable(spark, case.state_path).version
+    case.more()
+    case.check()
+    assert TxTable(spark, case.state_path).version == v + 1
 
 
 def _heavy_test_cdc_replication_via_apply_changes_survives_any_dml_and_crash(
