@@ -11,10 +11,13 @@ pipeline needs:
   (``meta`` / ``add`` / ``remove``); a snapshot at version V is the fold of
   all commits ``<= V`` (adds minus removes).
 * Commits are published by exclusive-create of the next version file
-  (``FileSystem.create(overwrite=False)``) — the HDFS-atomic primitive.
-  Losing a race re-resolves the snapshot and retries; a retry that finds
-  its *read set* invalidated (a file it planned to remove was already
-  removed) raises :class:`TxConflict` instead of silently double-applying.
+  through the one commit loop, ``txproto.commit``, which every txlog
+  writer shares. Losing a race re-reads the commits published since the
+  read snapshot and retries on top of them; a retry that finds its
+  *read set* invalidated (a file it planned to remove was already
+  removed) raises :class:`TxConflict` instead of silently
+  double-applying, and a ``txn`` batch a concurrent writer already
+  applied publishes nothing.
 * Data files are immutable and carry per-file min/max stats for the
   declared ``stat_cols`` in their ``add`` action, so MERGE touches only
   files whose stat range overlaps the batch — cost ∝ affected files, not
@@ -29,8 +32,9 @@ pipeline needs:
   (time travel); ``vacuum()`` explicitly deletes files unreferenced by the
   current version.
 * ``_txlog/%020d.checkpoint.json`` snapshot checkpoints (the public Delta
-  checkpoint pattern): every :attr:`TxTable.CHECKPOINT_INTERVAL` commits
-  the folded snapshot is written out, and ``_snapshot`` folds forward from
+  checkpoint pattern): every ``checkpointInterval`` commits (table
+  property, default ``txproto.CHECKPOINT_INTERVAL``) the folded snapshot
+  is written out, and ``_snapshot`` folds forward from
   the newest checkpoint at-or-before the target version instead of from
   commit 0 — O(interval) log reads per operation regardless of table age.
   Without this, a streaming writer committing once per micro-batch makes
@@ -65,19 +69,19 @@ from ..artifacts import materialize
 from . import txproto
 from .genexpr import parse_generation_expr
 from .incremental import net_changes
-from .txproto import (BASE_PROTOCOL, CHECKPOINT_INTERVAL, COLMAP_PROTOCOL,
+from .txproto import (BASE_PROTOCOL, COLMAP_PROTOCOL,
                       LOG_DIR, PARTITION_PROTOCOL, SUPPORTED_READER,
                       SUPPORTED_WRITER, HadoopLogIO, LocalLogIO, LogState,
-                      TxCorruption, TxProtocolError,
+                      TxConflict, TxCorruption, TxProtocolError,
                       WRITE_FEATURES_PROTOCOL,
                       canon_temporal as _canon,
-                      check_protocol, checkpoint_name, commit_name,
-                      commit_payload, dv_minus, info_action as _info_action,
+                      check_protocol, checkpoint_name,
+                      dv_minus, info_action as _info_action,
                       latest_version, log_listing,
                       merged_protocol, needs_upgrade,
                       parse_partition_values as _parse_partition_values,
-                      protocol_action, read_checkpoint, read_commit,
-                      repair_payload, replay, stat_scalar,
+                      protocol_action, publish, read_checkpoint, read_commit,
+                      replay, stat_scalar,
                       unquote_path as _unq, walk_changes)
 
 
@@ -107,11 +111,6 @@ def _bloom_spec(schema: StructType, cols: Sequence[str], m: int,
                          f"required (4 x 8 hex chars exhaust the md5 "
                          f"digest both hash sides slice), got m={m} k={k}")
     return {"cols": list(cols), "m": int(m), "k": int(k)}
-
-
-
-class TxConflict(Exception):
-    """A concurrent commit invalidated this transaction's read set."""
 
 
 def _typed_partition_values(given: dict, meta: dict, table: str) -> dict:
@@ -206,10 +205,6 @@ class TxTable:
     complete version.
     """
 
-    #: Auto-write a snapshot checkpoint every N commits (0 disables);
-    #: see ``txproto.CHECKPOINT_INTERVAL``.
-    CHECKPOINT_INTERVAL = CHECKPOINT_INTERVAL
-
     def __init__(self, spark: SparkSession, path: str):
         self._bind(spark, path)
         try:
@@ -246,23 +241,9 @@ class TxTable:
         non-atomic store an in-progress publish is indistinguishable
         from a crashed one. Refuses (ValueError) if the file parses
         cleanly; idempotent over an already-repaired file is a refusal
-        too (a repaired commit IS clean).
+        too (a repaired commit IS clean) — ``txproto.repair_commit``.
         """
-        latest = latest_version(self._io)
-        if version < 0 or version > latest:
-            raise ValueError(f"version {version} out of range 0..{latest}")
-        try:
-            read_commit(self._io, version)
-        except TxCorruption:
-            pass  # genuinely torn: repair below
-        else:
-            raise ValueError(
-                f"{self.path}@v{version} parses cleanly — refusing to "
-                "repair an intact commit")
-        # a crash mid-repair on a non-atomic store leaves the file torn
-        # again — the retry is idempotent (same payload rewritten)
-        self._io.write(commit_name(version),
-                       repair_payload().encode("utf-8"), replace=True)
+        txproto.repair_commit(self._io, version)
 
     def _checkpoint_versions(self) -> list[int]:
         return log_listing(self._io)[1]
@@ -283,12 +264,18 @@ class TxTable:
 
     def _fold(self, version: int | None = None) -> txproto.Snapshot:
         """The RAW log replay at ``version`` (``txproto.replay``),
-        recording the folded protocol and table properties that the
-        commit path gates on."""
+        kept as ``_read`` (the snapshot :meth:`_commit` publishes on and
+        the ``txn`` guards read) with its protocol as ``_proto``."""
         snap = replay(self._io, version)
+        self._read = snap
         self._proto = snap.protocol
-        self._props = snap.meta.get("properties") or {}
         return snap
+
+    def _replayed(self, txn: tuple[str, int] | None) -> bool:
+        """True when ``txn=(app_id, version)`` is already in the ledger
+        of the snapshot just folded: a replayed batch, applied before."""
+        return (txn is not None
+                and self._read.txns.get(txn[0], -1) >= txn[1])
 
     def _snapshot(self, version: int | None = None, raw: bool = False):
         """Fold the log: returns (version, meta, {relpath: add-action}).
@@ -311,170 +298,51 @@ class TxTable:
                         for p, a in live.items()}
         return v, meta, live
 
-    def _try_publish(self, version: int, actions: list[dict]) -> bool:
-        """Publish the commit file with its COMPLETE content; False if
-        the version is taken.
-
-        Local paths publish atomically (tmp + hard link — the claim
-        carries the whole payload, so a dead writer can never leave a
-        torn, forever-claimed version). Non-local stores fall back to
-        claim-then-write (the documented Delta-on-HDFS crash window);
-        the count trailer (``txproto.commit_payload``) makes every tear
-        signature detectable at read time and
-        :meth:`repair_torn_commit` recovers the log.
-        """
-        return self._io.write(commit_name(version),
-                              commit_payload(actions).encode("utf-8"))
-
     def _commit(self, actions: list[dict], read_version: int,
-                validate=None, info: dict | None = None) -> int:
-        """Optimistic publish against the snapshot read at ``read_version``.
+                validate=None, info: dict | None = None,
+                txn: tuple[str, int] | None = None) -> int:
+        """Publish ``actions`` planned on the snapshot at
+        ``read_version`` through the one commit loop
+        (``txproto.commit``: the conflict rules, the op's
+        ``validate(intervening_actions)`` hook, the ``txn`` ledger,
+        in-commit timestamps, the checkpoint cadence). Returns the
+        published version, or the current one when a concurrent writer
+        already applied ``txn``.
 
-        If other writers committed versions ``read_version+1 .. latest``
-        in the meantime, their actions are validated before we publish on
-        top of them: a file we planned to remove that a concurrent commit
-        already removed is always a conflict (file-level write-write, the
-        same rule as the public Delta protocol), and the op-specific
-        ``validate(intervening_actions)`` hook may raise
-        :class:`TxConflict` for semantic conflicts (e.g. a concurrent
-        insert overlapping a merge's key range). A conflict is never
-        silent — the caller re-runs on the fresh snapshot."""
+        The ``autoCompact`` property (the public Delta auto-compaction
+        design) is the one Spark-side step: after a row-staging commit
+        publishes, bin-pack when the small-file count crosses the
+        threshold. Best-effort like the checkpoint (a lost OPTIMIZE race
+        costs nothing; the next write retries); the reentrancy flag
+        keeps the compaction commit itself from re-triggering it."""
+        snap = getattr(self, "_read", None)
+        if snap is None or snap.version != read_version:
+            snap = self._fold(read_version)
         if info is not None:
             actions = actions + [_info_action(**info)]
-        # in-commit timestamps: opt-in via the inCommitTimestamps table
-        # property (the Delta enableInCommitTimestamps design) — gated
-        # here too so ordinary tables never pay the parent-commit read
-        ict = (actions[-1]["info"] if info is not None
-               and str((getattr(self, "_props", None) or {})
-                       .get("inCommitTimestamps", "")
-                       ).lower() in ("true", "1") else None)
-        # minWriter gate: self._proto was folded by the _snapshot this
-        # commit was planned on (every mutator snapshots first); a
-        # concurrent protocol upgrade is caught via the intervening
-        # actions below.
-        check_protocol(getattr(self, "_proto", None), self.path,
-                       writer=SUPPORTED_WRITER)
-        removes = {a["remove"]["path"] for a in actions if "remove" in a}
-        dv_targets = {a["dv"]["path"] for a in actions if "dv" in a}
-        dv_keycols = {a["dv"]["path"]: list(a["dv"]["keyCols"])
-                      for a in actions if "dv" in a}
-        stages_rows = any("add" in a and a["add"].get("dataChange", True)
-                          for a in actions)
-        checked_through = read_version
-        while True:
-            latest = latest_version(self._io)
-            if latest > checked_through:
-                intervening = [a for i in
-                               range(checked_through + 1, latest + 1)
-                               for a in read_commit(self._io, i)]
-                removed_by_others = {a["remove"]["path"] for a in intervening
-                                     if "remove" in a}
-                dv_by_others = {a["dv"]["path"] for a in intervening
-                                if "dv" in a}
-                # file-level write-write conflicts, extended to deletion
-                # vectors: tombstoning a file a concurrent commit already
-                # rewrote targets dead data; rewriting a file a concurrent
-                # commit tombstoned would resurrect its deleted rows (the
-                # rewrite was planned against the old DV state).
-                clash = ((removes & removed_by_others)
-                         | (dv_targets & removed_by_others)
-                         | (removes & dv_by_others))
-                if clash:
-                    raise TxConflict(
-                        f"files {sorted(clash)} were concurrently "
-                        f"removed/tombstoned; re-run the operation on "
-                        f"the new snapshot of {self.path}")
-                # a concurrent DV on the same file with DIFFERENT key
-                # columns would make the folded tombstone set unmergeable
-                # (one keyed set per file — merge_dv); publishing on top
-                # would brick every later fold, so conflict instead.
-                keycol_clash = sorted(
-                    a["dv"]["path"] for a in intervening
-                    if "dv" in a and a["dv"]["path"] in dv_keycols
-                    and list(a["dv"]["keyCols"])
-                    != dv_keycols[a["dv"]["path"]])
-                if keycol_clash:
-                    raise TxConflict(
-                        f"files {keycol_clash} received concurrent "
-                        f"deletion vectors with different key columns; "
-                        f"re-run the delete on the new snapshot of "
-                        f"{self.path}")
-                for a in intervening:
-                    if "protocol" in a:
-                        # a concurrent writer upgraded the table (e.g.
-                        # enabled a newer feature): publishing on top is
-                        # only sound if this client writes at that level
-                        check_protocol(a["protocol"], self.path,
-                                       writer=SUPPORTED_WRITER)
-                # op-specific validators first: their conflict messages
-                # are more precise than the generic meta rule below
-                if validate is not None:
-                    validate(intervening)
-                # Delta's MetadataChanged rule: a commit that stages NEW
-                # ROWS was validated (CHECK constraints, schema) against
-                # its read snapshot's meta — an intervening meta action
-                # (add_constraint, schema change) means those rows were
-                # never validated under the fresh rules, so publishing
-                # on top would silently break the new invariant.
-                # Layout-only commits (optimize) carry the same rows the
-                # intervening constraint already validated and commute.
-                if stages_rows and any("meta" in a for a in intervening):
-                    raise TxConflict(
-                        f"table metadata of {self.path} changed under this "
-                        f"write (constraint or schema commit); re-run so "
-                        f"the staged rows validate against the new rules")
-                checked_through = latest
-            if ict is not None:
-                # in-commit timestamps (the public Delta ICT design):
-                # the provenance ts is re-stamped at publish, clamped
-                # strictly ABOVE the parent commit's, so the log's
-                # timeline is monotone even under clock skew between
-                # writers — and version_at trusts the recorded ts over
-                # file mtimes (robust to log copies/rsync).
-                parent = self._commit_ts(latest)
-                ict["ts"] = round(max(time.time(),
-                                      (parent or 0.0) + 0.001), 3)
-            if self._try_publish(latest + 1, actions):
-                published = latest + 1
-                # the checkpointInterval table property overrides the
-                # class-level cadence (alter_properties validates >= 1)
-                props = getattr(self, "_props", None) or {}
-                interval = int(props.get("checkpointInterval",
-                                         self.CHECKPOINT_INTERVAL or 0))
-                if interval and published % interval == 0:
-                    # Best-effort maintenance: the commit IS published; a
-                    # failed checkpoint only costs fold speed, never
-                    # correctness, and must not make the commit look failed.
-                    try:
-                        self.write_checkpoint(published)
-                    except Exception:
-                        pass
-                # autoCompact property (the public Delta auto-compaction
-                # design): after a row-staging commit publishes, bin-pack
-                # when the small-file count crosses the threshold — same
-                # best-effort contract as the checkpoint above (a lost
-                # OPTIMIZE race costs nothing; the next write retries).
-                # The reentrancy flag keeps the compaction commit itself
-                # from re-triggering the hook.
-                if (stages_rows
-                        and str(props.get("autoCompact", "")
-                                ).lower() in ("true", "1")
-                        and not getattr(self, "_auto_compacting", False)):
-                    target = int(props.get("autoCompactTargetRows",
-                                           1_000_000))
-                    min_files = int(props.get("autoCompactMinFiles", 16))
-                    self._auto_compacting = True
-                    try:
-                        _, _m, live2 = self._snapshot()
-                        small = [p for p, a in live2.items()
-                                 if a.get("numRecords", target) < target]
-                        if len(small) >= min_files:
-                            self.optimize(target_rows=target)
-                    except Exception:
-                        pass
-                    finally:
-                        self._auto_compacting = False
-                return published
+        published = txproto.commit(self._io, actions, snap,
+                                   validate=validate, txn=txn)
+        if published is None:
+            return self.version
+        props = snap.meta.get("properties") or {}
+        if (any("add" in a and a["add"].get("dataChange", True)
+                for a in actions)
+                and str(props.get("autoCompact", "")).lower() in ("true", "1")
+                and not getattr(self, "_auto_compacting", False)):
+            target = int(props.get("autoCompactTargetRows", 1_000_000))
+            min_files = int(props.get("autoCompactMinFiles", 16))
+            self._auto_compacting = True
+            try:
+                _, _m, live = self._snapshot()
+                small = [p for p, a in live.items()
+                         if a.get("numRecords", target) < target]
+                if len(small) >= min_files:
+                    self.optimize(target_rows=target)
+            except Exception:
+                pass
+            finally:
+                self._auto_compacting = False
+        return published
 
     # ------------------------------------------------------------- data files
     def _stage(self, df: DataFrame, stat_cols: Sequence[str],
@@ -765,7 +633,7 @@ class TxTable:
         actions = [protocol_action(proto), {"meta": meta}]
         actions += adds
         actions.append(_info_action("create"))
-        if not t._try_publish(0, actions):
+        if not publish(t._io, 0, actions):
             raise TxConflict(f"concurrent create of {path}")
         return t
 
@@ -881,7 +749,7 @@ class TxTable:
         actions.append(_info_action(
             "convert", files=sum(1 for a in actions if "add" in a)))
         fs.mkdirs(_jpath(spark, t.log_dir))
-        if not t._try_publish(0, actions):
+        if not publish(t._io, 0, actions):
             raise TxConflict(f"concurrent create/convert of {path}")
         return t
 
@@ -931,7 +799,7 @@ class TxTable:
                                     source_version=int(v)))
         t = object.__new__(TxTable)
         t._bind(self.spark, target)
-        if not t._try_publish(0, actions):
+        if not publish(t._io, 0, actions):
             raise TxConflict(f"concurrent create of {target}")
         # Register the clone in the SOURCE's log too (one pure-info
         # commit — commutes with everything): vacuum reads these refs
@@ -1500,10 +1368,7 @@ class TxTable:
     def _commit_ts(self, version: int) -> float | None:
         """The version's recorded in-commit timestamp (provenance
         ``ts``), None for pre-provenance or repaired commits."""
-        for a in read_commit(self._io, version):
-            if "info" in a and a["info"].get("ts") is not None:
-                return float(a["info"]["ts"])
-        return None
+        return txproto.commit_ts(self._io, version)
 
     def version_at(self, timestamp: float) -> int:
         """Resolve ``timestampAsOf``-style time travel: the latest
@@ -2269,11 +2134,8 @@ class TxTable:
         txn action rides in the same atomic commit as the data."""
         rv, meta, live = self._snapshot()
         self._require_mutable(meta, "overwrite")
-        if txn is not None:
-            app, ver = txn
-            last = self._fold(rv).txns.get(app)
-            if last is not None and last >= ver:
-                return self.version  # replayed batch: already applied
+        if self._replayed(txn):
+            return self.version  # replayed batch: already applied
         df = self._apply_generated(df, meta)
         df = self._assign_identity(df, meta)
         actions = [{"remove": {"path": p}} for p in sorted(live)]
@@ -2287,9 +2149,6 @@ class TxTable:
         if id_meta:
             actions.append({"meta": id_meta})
         actions += adds
-        if txn is not None:
-            actions.append({"txn": {"appId": txn[0],
-                                    "version": int(txn[1])}})
 
         def no_concurrency(intervening):
             if intervening:
@@ -2297,7 +2156,7 @@ class TxTable:
                     f"overwrite of {self.path} raced a concurrent commit; "
                     "re-run on the new snapshot")
         return self._commit(actions, rv, validate=no_concurrency,
-                            info={"op": "overwrite"})
+                            info={"op": "overwrite"}, txn=txn)
 
     def overwrite_partitions(self, df: DataFrame,
                              partition_values: dict) -> int:
@@ -2916,11 +2775,8 @@ class TxTable:
         keys = list(keys)
         rv, meta, live = self._snapshot()
         self._require_mutable(meta, "apply_changes")
-        if txn is not None:
-            app, ver = txn
-            last = self._fold(rv).txns.get(app)
-            if last is not None and last >= ver:
-                return self.version  # replayed batch: already applied
+        if self._replayed(txn):
+            return self.version  # replayed batch: already applied
         schema = StructType.fromJson(meta["schema"])
         stored = {f.name for f in schema.fields}
         feed_cols = [c for c in changes.columns if c != "_change_type"]
@@ -3016,10 +2872,7 @@ class TxTable:
         actions = ([{"meta": meta}]
                    if (new_meta is not None or id_meta) else [])
         actions += removes + staged
-        if txn is not None:
-            actions.append({"txn": {"appId": txn[0],
-                                    "version": int(txn[1])}})
-        if not actions:
+        if not actions and txn is None:
             return self.version
 
         def validate(intervening):
@@ -3027,7 +2880,7 @@ class TxTable:
             for v in evolve_validators:
                 v(intervening)
         return self._commit(actions, rv, validate=validate,
-                            info={"op": "apply_changes"})
+                            info={"op": "apply_changes"}, txn=txn)
 
     def apply_delta(self, deletes: Sequence[tuple[Sequence[str], DataFrame]],
                     inserts: DataFrame | None = None,
@@ -3056,11 +2909,8 @@ class TxTable:
         """
         rv, meta, live = self._snapshot()
         self._require_mutable(meta, "apply_delta")
-        if txn is not None:
-            app, ver = txn
-            last = self._fold(rv).txns.get(app)
-            if last is not None and last >= ver:
-                return self.version  # replayed batch: already applied
+        if self._replayed(txn):
+            return self.version  # replayed batch: already applied
         schema = StructType.fromJson(meta["schema"])
         stat_cols = meta.get("stat_cols", [])
         dvs = self._live_dvs(live)
@@ -3129,11 +2979,8 @@ class TxTable:
             actions += staged
         if not actions:
             return self.version  # empty delta: no commit, replay-safe
-        if txn is not None:
-            actions.append({"txn": {"appId": txn[0],
-                                    "version": int(txn[1])}})
         return self._commit(actions, rv, validate=no_key_overlap,
-                            info={"op": "apply_delta"})
+                            info={"op": "apply_delta"}, txn=txn)
 
     def update(self, condition: str, assignments: dict[str, str]) -> int:
         """Atomic UPDATE (copy-on-write, the public Delta UPDATE shape):

@@ -1,4 +1,4 @@
-"""The txlog table format's log: wire protocol and the one replay core.
+"""The txlog table format's log: wire protocol, replay core, commit loop.
 
 Every reader and writer of a ``_txlog`` directory — :class:`TxTable`
 (``operators/txlog.py``) and the plain-IO ``txlog`` / ``txlog_cdc``
@@ -7,12 +7,18 @@ goes through this module for every log-format decision:
 
 - the commit wire format (count trailer, tear detection, repair);
 - the protocol version gate;
-- the log layout (``LOG_DIR``, file names, checkpoint cadence);
+- the log layout (``LOG_DIR``, file names);
 - the replay core over an injected log IO object: the snapshot fold
   (:func:`replay`), the checkpoint parser and writer
   (:func:`read_checkpoint`, :func:`write_checkpoint`), time travel
   (:func:`version_at`) and the change-window walk
-  (:func:`walk_changes`).
+  (:func:`walk_changes`);
+- the one optimistic commit loop (:func:`commit`): the rules a commit
+  obeys against intervening commits, the ``txn`` ledger check, the
+  in-commit timestamp, the exclusive publish and the checkpoint
+  cadence (the ``checkpointInterval`` table property). Commit files
+  are written only here: :func:`publish` (commit 0 of a new table and
+  every :func:`commit`) and :func:`repair_commit`.
 
 The log IO object has exactly two implementations: :class:`LocalLogIO`
 (plain ``os`` IO, every local path) and :class:`HadoopLogIO` (Hadoop
@@ -42,12 +48,17 @@ three forms —
   be a silent-corruption hole. This format owns its files end to end
   (no pre-trailer tables ship anywhere), so strictness costs nothing.
 
+A live writer's claim looks the same as an empty tear until its payload
+lands, so :class:`HadoopLogIO` re-reads an empty file for up to
+``CLAIM_SETTLE_S`` before handing it to the tear check; a file still
+empty past that bound is torn.
+
 Readers raise :class:`TxCorruption` — loud, naming the repair — rather
-than folding a wrong snapshot. Recovery is
-``TxTable.repair_torn_commit``: the dead writer's ``_commit`` never
-returned, so its actions were never acknowledged, and rewriting the
-torn file as an explicit empty commit (trailer-only, ``repaired`` flag)
-is the unique history consistent with what callers observed.
+than folding a wrong snapshot. Recovery is :func:`repair_commit`
+(``TxTable.repair_torn_commit``): the dead writer's :func:`commit`
+never returned, so its actions were never acknowledged, and rewriting
+the torn file as an explicit empty commit (trailer-only, ``repaired``
+flag) is the unique history consistent with what callers observed.
 
 Stdlib-only on purpose: the streaming/batch DataSources replay the log
 inside executor Python workers, where a pyspark import chain would be
@@ -73,8 +84,14 @@ CKPT_SUFFIX = ".checkpoint.json"
 #: public Delta default; at a commit-per-micro-batch streaming cadence
 #: this bounds every snapshot fold to <= 10 commit reads no matter how
 #: old the table gets. (The ``checkpointInterval`` table property
-#: overrides it for TxTable writers.)
+#: overrides it for every writer, see :func:`commit`.)
 CHECKPOINT_INTERVAL = 10
+
+#: Seconds a claim-then-write reader (:class:`HadoopLogIO`) keeps
+#: re-reading an EMPTY file before treating it as torn: another
+#: writer's claim is empty until its payload lands, which takes
+#: milliseconds; a writer that died after the claim never fills it.
+CLAIM_SETTLE_S = 2.0
 
 
 def commit_name(version: int) -> str:
@@ -290,6 +307,10 @@ class TxCorruption(RuntimeError):
     """
 
 
+class TxConflict(RuntimeError):
+    """A concurrent commit invalidated this transaction's read set."""
+
+
 def info_action(op: str, **extra) -> dict:
     """Commit provenance (the public Delta commitInfo shape, minimal):
     which operation produced the commit and when. Snapshot/CDC folds
@@ -430,7 +451,8 @@ class HadoopLogIO:
     An exclusive write claims the name with ``create(overwrite=False)``
     and then streams the payload (claim-then-write): a writer dying in
     between leaves a torn file, which the count trailers make
-    detectable (see the module docstring)."""
+    detectable (see the module docstring). A read of an empty file
+    waits up to ``CLAIM_SETTLE_S`` for an in-flight claim's payload."""
 
     def __init__(self, spark, table: str):
         self.table = table
@@ -455,12 +477,17 @@ class HadoopLogIO:
         return out
 
     def read(self, name: str) -> bytes:
-        stream = self._fs.open(self._path(name))
-        try:
-            return bytes(self._jvm.org.apache.commons.io.IOUtils
-                         .toByteArray(stream))
-        finally:
-            stream.close()
+        deadline = time.monotonic() + CLAIM_SETTLE_S
+        while True:
+            stream = self._fs.open(self._path(name))
+            try:
+                data = bytes(self._jvm.org.apache.commons.io.IOUtils
+                             .toByteArray(stream))
+            finally:
+                stream.close()
+            if data or time.monotonic() >= deadline:
+                return data
+            time.sleep(0.01)
 
     def write(self, name: str, data: bytes, replace: bool = False) -> bool:
         target = self._path(name)
@@ -783,3 +810,142 @@ def walk_changes(io, from_version: int, to_version: int):
                                  {"keyCols": list(d["keyCols"]),
                                   "keys": fresh})
                 dv_state[d["path"]] = merge_dv(cur, d)
+
+
+# ------------------------------------------------------------- commit loop
+def publish(io, version: int, actions: list[dict]) -> bool:
+    """Publish commit ``version`` with its count trailer; False when the
+    version is taken. Commit 0 of a new table; later ones via
+    :func:`commit`."""
+    return io.write(commit_name(version),
+                    commit_payload(actions).encode("utf-8"))
+
+
+def repair_commit(io, version: int) -> None:
+    """Rewrite a TORN commit as :func:`repair_payload` (module
+    docstring); ValueError for an out-of-range or cleanly parsing
+    version. A retry after a crash mid-repair rewrites the same bytes."""
+    latest = latest_version(io)
+    if version < 0 or version > latest:
+        raise ValueError(f"version {version} out of range 0..{latest}")
+    try:
+        read_commit(io, version)
+    except TxCorruption:
+        pass  # genuinely torn: repair below
+    else:
+        raise ValueError(f"{io.table}@v{version} parses cleanly — refusing "
+                         "to repair an intact commit")
+    io.write(commit_name(version), repair_payload().encode("utf-8"),
+             replace=True)
+
+
+def commit_ts(io, version: int) -> float | None:
+    """The version's recorded provenance ``ts`` (None for a commit
+    without one, e.g. a repaired commit)."""
+    for a in read_commit(io, version):
+        if "info" in a and a["info"].get("ts") is not None:
+            return float(a["info"]["ts"])
+    return None
+
+
+def _check_intervening(table: str, actions: list[dict],
+                       intervening: list[dict]) -> None:
+    """The rules every commit obeys against the actions published since
+    its read snapshot (:class:`TxConflict` / :class:`TxProtocolError`)."""
+    removes = {a["remove"]["path"] for a in actions if "remove" in a}
+    dv_keycols = {a["dv"]["path"]: list(a["dv"]["keyCols"])
+                  for a in actions if "dv" in a}
+    removed_by_others = {a["remove"]["path"] for a in intervening
+                         if "remove" in a}
+    dv_by_others = {a["dv"]["path"] for a in intervening if "dv" in a}
+    # file-level write-write conflicts (the public Delta rule), extended
+    # to deletion vectors: tombstoning a file a concurrent commit already
+    # rewrote targets dead data; rewriting a file a concurrent commit
+    # tombstoned would resurrect its deleted rows (the rewrite was
+    # planned against the old DV state).
+    clash = ((removes & removed_by_others)
+             | (set(dv_keycols) & removed_by_others)
+             | (removes & dv_by_others))
+    if clash:
+        raise TxConflict(
+            f"files {sorted(clash)} were concurrently removed/tombstoned; "
+            f"re-run the operation on the new snapshot of {table}")
+    # a concurrent DV on the same file with DIFFERENT key columns would
+    # make the folded tombstone set unmergeable (one keyed set per file
+    # — merge_dv); publishing on top would brick every later fold.
+    keycol_clash = sorted(
+        a["dv"]["path"] for a in intervening
+        if "dv" in a and a["dv"]["path"] in dv_keycols
+        and list(a["dv"]["keyCols"]) != dv_keycols[a["dv"]["path"]])
+    if keycol_clash:
+        raise TxConflict(
+            f"files {keycol_clash} received concurrent deletion vectors "
+            f"with different key columns; re-run the delete on the new "
+            f"snapshot of {table}")
+    for a in intervening:
+        if "protocol" in a:
+            # a concurrent writer upgraded the table: publishing on top
+            # is only sound if this client writes at that level
+            check_protocol(a["protocol"], table, writer=SUPPORTED_WRITER)
+
+
+def commit(io, actions: list[dict], snap: Snapshot, *, validate=None,
+           txn: tuple[str, int] | None = None) -> int | None:
+    """Optimistic publish of ``actions`` planned on the RAW snapshot
+    ``snap`` (``snap.version`` is the read version). Returns the
+    published version, or None when ``txn=(app_id, version)`` is
+    already in the ledger of ``snap`` or of a commit published since —
+    the check is re-taken on the version it would publish on. Commits
+    published since ``snap`` are checked first (:func:`_check_intervening`),
+    then by the op's ``validate(intervening_actions)`` hook (more
+    precise messages), then by Delta's MetadataChanged rule: rows staged
+    under ``snap``'s meta conflict with any intervening ``meta`` action
+    (``dataChange: false`` commits commute). Under ``inCommitTimestamps``
+    the ``info`` ts is re-stamped strictly above the parent's (the
+    public Delta ICT design; :func:`version_at` reads it). A lost
+    publish re-reads and retries; every ``checkpointInterval`` versions
+    (default ``CHECKPOINT_INTERVAL``) a best-effort checkpoint follows."""
+    check_protocol(snap.protocol, io.table, writer=SUPPORTED_WRITER)
+    actions = list(actions)
+    if txn is not None:
+        app, ver = txn[0], int(txn[1])
+        if snap.txns.get(app, -1) >= ver:
+            return None
+        actions.append({"txn": {"appId": app, "version": ver}})
+    ict = (next((a["info"] for a in actions if "info" in a), None)
+           if _ict_enabled(snap.meta) else None)
+    stages_rows = any("add" in a and a["add"].get("dataChange", True)
+                      for a in actions)
+    checked = snap.version
+    while True:
+        latest = latest_version(io)
+        if latest > checked:
+            intervening = [a for v in range(checked + 1, latest + 1)
+                           for a in read_commit(io, v)]
+            if txn is not None and any(
+                    "txn" in a and a["txn"]["appId"] == app
+                    and a["txn"]["version"] >= ver for a in intervening):
+                return None  # a concurrent writer applied this txn
+            _check_intervening(io.table, actions, intervening)
+            if validate is not None:
+                validate(intervening)
+            if stages_rows and any("meta" in a for a in intervening):
+                raise TxConflict(
+                    f"table metadata of {io.table} changed under this "
+                    f"write (constraint or schema commit); re-run so the "
+                    f"staged rows validate against the new rules")
+            checked = latest
+        if ict is not None:
+            ict["ts"] = round(max(time.time(),
+                                  (commit_ts(io, latest) or 0.0) + 0.001), 3)
+        if publish(io, latest + 1, actions):
+            break
+    published = latest + 1
+    interval = int((snap.meta.get("properties") or {})
+                   .get("checkpointInterval", CHECKPOINT_INTERVAL))
+    if interval and published % interval == 0:
+        try:
+            write_checkpoint(io, replay(io, published))
+        except Exception:
+            pass  # maintenance only: the commit IS published
+    return published

@@ -26,10 +26,12 @@ all four range comparators participate; anything else (or a column
 without stats) degrades to "read the file".
 
 Everything planner-side replays the KB-sized JSON log through the one
-core in ``operators/txproto.py`` (``replay``, ``version_at``,
-``write_checkpoint``) over its plain-``os`` log IO — the same fold,
-checkpoint format and time-travel rule as :class:`TxTable`, so the two
-tiers cannot disagree on a snapshot. Each partition is ONE live data
+core in ``operators/txproto.py`` (``replay``, ``version_at``) over its
+plain-``os`` log IO, and both writers publish through its one commit
+loop (``txproto.commit``) — the same fold, time-travel rule, conflict
+rules, ``txn`` ledger, in-commit timestamps and checkpoint cadence as
+:class:`TxTable`, so the two tiers cannot disagree on a snapshot or a
+commit. Each partition is ONE live data
 file read with pyarrow on an executor, null-filling columns added after
 the file was written (schema evolution). No SparkSession is touched
 anywhere in the source, so it works identically under driver-owned and
@@ -65,26 +67,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from ..operators import txproto
 from ..operators.genexpr import parse_generation_expr
-from ..operators.txproto import (CHECKPOINT_INTERVAL, LocalLogIO,
-                                 canon_temporal, check_protocol, commit_name,
-                                 commit_payload,
+from ..operators.txproto import (SUPPORTED_WRITER, LocalLogIO, TxConflict,
+                                 canon_temporal, check_protocol,
                                  info_action as _info_action, replay,
-                                 stat_scalar, version_at, write_checkpoint)
+                                 stat_scalar, version_at)
 from .txlog_stream import _dv_mask, _project
-
-# The DataSource writer's own capability (this module's only protocol
-# constant — reads gate inside txproto.replay like every other client).
-# Writer 3 (deletion vectors) holds because its only two operations are
-# dv-compatible by construction: append never touches existing files,
-# and overwrite removes EVERY live file (which clears their tombstones
-# in the fold) before adding fresh ones. Writer 4: tasks stage under
-# the column-mapped PHYSICAL names. Writer 5 (the writer-feature trio):
-# generated columns VALIDATE per-chunk (the V2 schema contract requires
-# the values present, so the writer enforces rather than computes),
-# appendOnly refuses overwrite mode, and identity tables refuse outright
-# (values are engine-assigned — TxTable.append owns the allocation).
-_WRITER_CAP = 5
 
 
 def _resolve_version(options, table: str) -> int | None:
@@ -320,40 +309,6 @@ class TxLogBatchReader(DataSourceReader):
             self.colmap, partition.partition_values)).to_batches()
 
 
-def _check_write_rules_unchanged(table: str, meta: dict,
-                                 planned_cons: dict,
-                                 planned_gen: dict) -> None:
-    """The claim-loop re-check of the write rules against the ``meta``
-    of the version this write is about to publish on — TxTable._commit's
-    MetadataChanged rule over the FULL write-rule surface: the CHECK
-    constraint set, the generated-column expressions, and the identity
-    refusal gate. This write's rows were validated (task-side, in
-    ``write()``) against the PLAN-time rules; any of them changing
-    between plan and publish means publishing on top would silently
-    break the new invariant — conflict loudly instead."""
-    cons = meta.get("constraints") or {}
-    if cons != (planned_cons or {}):
-        raise RuntimeError(
-            f"table metadata of {table} changed under this write "
-            f"(CHECK constraints {sorted(planned_cons or {})} -> "
-            f"{sorted(cons)}); the staged rows were validated under "
-            f"the old rules - re-run the write")
-    gen = meta.get("generated") or {}
-    if gen != (planned_gen or {}):
-        raise RuntimeError(
-            f"table metadata of {table} changed under this write "
-            f"(generated columns {sorted(planned_gen or {})} -> "
-            f"{sorted(gen)}); re-run the write")
-    if meta.get("identity"):
-        raise RuntimeError(
-            f"{table} gained identity column(s) "
-            f"{sorted(meta['identity'])} under this write; identity "
-            f"values are engine-assigned (TxTable.append) - re-run")
-    # appendOnly arriving mid-write needs no extra rule here: appends
-    # to an append-only table stay legal, and the overwrite path
-    # already refuses on ANY intervening commit (read_version check)
-
-
 def _validate_chunk_constraints(rows: list, fields: list,
                                 arrow_schema, constraints: dict,
                                 table: str) -> None:
@@ -395,24 +350,6 @@ def _validate_chunk_constraints(rows: list, fields: list,
         con.close()
 
 
-def _claim_commit(io: LocalLogIO, version: int, payload: str) -> bool:
-    """Atomically publish ``version`` with its COMPLETE content (the
-    core's local tmp + hard-link publish — claim-then-write would leave
-    a torn, forever-claimed version on a crash). False when the version
-    is already taken (caller re-checks the snapshot and retries).
-    Auto-checkpoints every CHECKPOINT_INTERVAL versions, best-effort: a
-    failure only costs fold speed, so a pure-DataSource writer keeps
-    the log's O(interval) fold bound without ever owning a session."""
-    if not io.write(commit_name(version), payload.encode("utf-8")):
-        return False
-    if version % CHECKPOINT_INTERVAL == 0:
-        try:
-            write_checkpoint(io, replay(io, version))
-        except Exception:
-            pass  # maintenance only; the commit IS published
-    return True
-
-
 def _remove_staged(table: str, messages) -> None:
     """Delete the files a write's tasks staged (abort, or a replayed
     streaming batch). Best-effort: vacuum sweeps leftovers."""
@@ -439,12 +376,15 @@ class TxLogBatchWriter(DataSourceWriter):
     1:1 onto the transaction-log commit protocol: each task stages ONE
     immutable parquet file into the table root and sends back its add
     action as the commit message; the driver's ``commit`` publishes a
-    single JSON commit (exclusive-create, optimistic retry), so the
-    whole distributed write is atomic — a reader sees all files or
-    none, and a failed job's ``abort`` deletes the staged files. Modes:
-    ``append`` (pure adds, never conflicts — retried past concurrent
-    commits) and ``overwrite`` (remove-all + adds; conflicts with ANY
-    intervening commit, the ``TxTable.overwrite`` rule).
+    single JSON commit through ``txproto.commit`` (the one optimistic
+    loop every txlog writer shares), so the whole distributed write is
+    atomic — a reader sees all files or none, and a failed job's
+    ``abort`` deletes the staged files. Modes: ``append`` (pure adds,
+    retried past concurrent commits) and ``overwrite`` (remove-all +
+    adds; conflicts with ANY intervening commit, the
+    ``TxTable.overwrite`` rule). Either mode conflicts when an
+    intervening commit changes the table's metadata (:meth:`_validate`
+    names the CHECK constraint, generated-column or identity change).
 
     Everything driver-side is plain IO over the JSON log; per-file
     stats are computed in the task from the rows it writes, so stat
@@ -458,12 +398,24 @@ class TxLogBatchWriter(DataSourceWriter):
         self.table = path.rstrip("/")
         self.overwrite = overwrite
         self._io = LocalLogIO(self.table)
-        v, meta, live, _, proto = replay(self._io)
-        check_protocol(proto, f"{self.table} (txlog DataSource writer)",
-                       writer=_WRITER_CAP)
+        snap = replay(self._io)
+        # Plan-time writer gate (txproto.commit re-checks at publish),
+        # so no task stages for a table this writer cannot write. It
+        # writes at SUPPORTED_WRITER: append never touches existing
+        # files and overwrite removes EVERY live file (deletion
+        # vectors); tasks stage under the column-mapped PHYSICAL names;
+        # generated columns are validated per chunk, appendOnly refuses
+        # overwrite and identity tables refuse outright (below).
+        check_protocol(snap.protocol,
+                       f"{self.table} (txlog DataSource writer)",
+                       writer=SUPPORTED_WRITER)
+        meta = snap.meta
         self.partition_cols = meta.get("partition_cols") or []
-        self.read_version = v
-        self.live = sorted(live)
+        self.live = sorted(snap.live)
+        # the snapshot the commit publishes on; its live set stays
+        # behind (the commit loop never reads it, and this object is
+        # shipped to every write task)
+        self._snap = snap._replace(live={})
         self.stat_cols = meta.get("stat_cols", [])
         # plan-time refusals first (clearer than a schema mismatch):
         # identity values are engine-assigned, append-only tables
@@ -491,8 +443,9 @@ class TxLogBatchWriter(DataSourceWriter):
         self.schema_json = meta["schema"]
         # CHECK constraints are ENFORCED: handed to tasks at plan time,
         # validated per-chunk in the Arrow worker (write()), re-verified
-        # unchanged inside the claim loop (_publish) — the three pieces
-        # of TxTable's own constraint story, mapped onto V2 writes.
+        # unchanged against every intervening commit (_validate) — the
+        # three pieces of TxTable's own constraint story, mapped onto V2
+        # writes.
         self.constraints = dict(meta.get("constraints") or {})
         # writer-feature trio (protocol 5), remaining member: generated
         # columns ride the same per-chunk validator as CHECK
@@ -656,33 +609,47 @@ class TxLogBatchWriter(DataSourceWriter):
             adds.append(add)
         return TxWriteMessage(adds=adds or None)
 
-    def _publish(self, actions: list[dict]) -> None:
-        payload = commit_payload(actions + [_info_action(
-            "overwrite" if self.overwrite else "append", writer="batch")])
-        while True:
-            # Re-checked INSIDE the claim loop (not only at plan time):
-            # an add_constraint landing between plan and publish means
-            # this write's rows were validated under the OLD rules.
-            latest, meta, _, _, _ = replay(self._io)
-            _check_write_rules_unchanged(self.table, meta, self.constraints,
-                                         self.generated)
-            if self.overwrite and latest != self.read_version:
-                raise RuntimeError(
-                    f"overwrite of {self.table} raced a concurrent commit "
-                    f"(v{self.read_version} -> v{latest}); re-run on the "
-                    f"new snapshot")
-            if _claim_commit(self._io, latest + 1, payload):
-                return
+    def _validate(self, intervening: list[dict]) -> None:
+        """``txproto.commit``'s hook for both DataSource writers. The
+        tasks validated their rows against the PLAN-time write rules, so
+        an intervening ``meta`` action may not change the CHECK
+        constraints or generated-column expressions, nor add identity
+        columns (the loop's generic MetadataChanged rule would refuse
+        too; this names the rule). appendOnly arriving mid-write needs
+        no rule: appends stay legal, and an overwrite refuses ANY
+        intervening commit."""
+        for meta in (a["meta"] for a in intervening if "meta" in a):
+            for key, planned in (("constraints", self.constraints),
+                                 ("generated", self.generated)):
+                now = meta.get(key) or {}
+                if now != planned:
+                    raise TxConflict(
+                        f"table metadata of {self.table} changed under "
+                        f"this write ({key} {sorted(planned)} -> "
+                        f"{sorted(now)}); the staged rows were validated "
+                        f"under the old rules - re-run the write")
+            if meta.get("identity"):
+                raise TxConflict(
+                    f"{self.table} gained identity column(s) "
+                    f"{sorted(meta['identity'])} under this write; "
+                    f"identity values are engine-assigned "
+                    f"(TxTable.append) - re-run")
+        if self.overwrite and intervening:
+            raise TxConflict(
+                f"overwrite of {self.table} raced a concurrent commit "
+                f"(read at v{self._snap.version}); re-run on the new "
+                f"snapshot")
 
     def commit(self, messages) -> None:
-        adds = [{"add": a} for m in messages
-                if m is not None for a in (m.adds or [])]
         actions = ([{"remove": {"path": p}} for p in self.live]
                    if self.overwrite else [])
-        actions += adds
+        actions += [{"add": a} for m in messages
+                    if m is not None for a in (m.adds or [])]
         if not actions:
             return  # empty append: nothing to publish
-        self._publish(actions)
+        txproto.commit(self._io, actions + [_info_action(
+            "overwrite" if self.overwrite else "append", writer="batch")],
+            self._snap, validate=self._validate)
 
     def abort(self, messages) -> None:
         _remove_staged(self.table, messages)
@@ -699,9 +666,11 @@ class TxLogStreamWriter(DataSourceStreamWriter):
     the classic double-write window, which keyed MERGE sinks survive
     only by re-deduplicating rows — replays the batch, hits the txn
     guard, and the table is untouched: exactly-once without requiring
-    a key. The skip-or-publish decision is re-taken inside the
-    exclusive-create claim loop, so it serializes with every
-    concurrent commit.
+    a key. The commit is ``txproto.commit(txn=...)``, the loop every
+    txlog writer shares: the skip-or-publish decision is re-taken on
+    every commit published since the snapshot, so it serializes with
+    every concurrent commit, and the write rules of
+    :class:`TxLogBatchWriter` apply unchanged.
 
     ``txnAppId`` is REQUIRED: it scopes the idempotency ledger, and a
     default would silently cross-deduplicate unrelated queries writing
@@ -723,27 +692,14 @@ class TxLogStreamWriter(DataSourceStreamWriter):
         return self._delegate.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        adds = [{"add": a} for m in messages
-                if m is not None for a in (m.adds or [])]
-        actions = [{"txn": {"appId": self.app_id,
-                            "version": int(batchId)}}] + adds
-        payload = commit_payload(actions + [_info_action(
-            "append", writer="stream", batch_id=int(batchId))])
-        io = self._delegate._io
-        while True:
-            # Same in-loop re-check as TxLogBatchWriter._publish: a
-            # constraint committed after plan time must refuse this
-            # batch's unvalidated rows, not race past them.
-            latest, meta, _, txns, _ = replay(io)
-            _check_write_rules_unchanged(self.table, meta,
-                                         self._delegate.constraints,
-                                         self._delegate.generated)
-            if txns.get(self.app_id, -1) >= batchId:
-                _remove_staged(self.table, messages)  # replayed: no-op
-                return
-            if _claim_commit(io, latest + 1, payload):
-                return
-            # lost the claim: re-check the txn ledger and retry
+        d = self._delegate
+        actions = [{"add": a} for m in messages
+                   if m is not None for a in (m.adds or [])]
+        actions.append(_info_action("append", writer="stream",
+                                    batch_id=int(batchId)))
+        if txproto.commit(d._io, actions, d._snap, validate=d._validate,
+                          txn=(self.app_id, batchId)) is None:
+            _remove_staged(self.table, messages)  # replayed: no-op
 
     def abort(self, messages, batchId: int) -> None:
         _remove_staged(self.table, messages)

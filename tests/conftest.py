@@ -208,10 +208,3 @@ def _heavy_pool_autostart(request):
         request.getfixturevalue("_heavy_pool").submit_all()
     yield
 
-
-@pytest.fixture(scope="session")
-def heavy_session_results(_heavy_pool):
-    """ALL bodies joined — the full-drain barrier for tests that mutate
-    process-global state (the durable crash-injection patch)."""
-    _heavy_pool.submit_all()
-    return {k: _heavy_pool[k].result() for k in _heavy_pool.keys()}

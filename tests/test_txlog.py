@@ -545,6 +545,43 @@ def _heavy_test_legacy_checkpoint_is_regenerated_in_place(spark, tmp_path):
     assert Counter((r["k"], r["v"]) for r in t.read().collect()) == \
         Counter((i, i * 2) for i in range(20))
 
+def _heavy_test_same_txn_race_publishes_once(spark, tmp_path):
+    """Exactly-once under a race: two handles apply the same keyed
+    delta with the same ``txn``. The loser planned on the snapshot
+    before the winner's commit; the commit loop re-takes the ledger on
+    the version it would publish on, so the loser returns without
+    publishing instead of applying the batch twice (or raising on the
+    winner's overlapping keys)."""
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        read_commit)
+    p = str(tmp_path / "t")
+    TxTable.create(spark, _kv(spark, 0, 10, parts=1), p, stat_cols=["k"])
+    winner, loser = TxTable(spark, p), TxTable(spark, p)
+    clauses = [(["k"], spark.createDataFrame([(3,)], "k long"))]
+    inserts = _kv(spark, 100, 102, parts=1)
+    orig = loser._io.write
+
+    def inject(name, data, replace=False):
+        if not getattr(loser, "_raced", False):
+            loser._raced = True
+            winner.apply_delta(clauses, inserts, txn=("app", 7))
+        return orig(name, data, replace)
+
+    loser._io.write = inject
+    try:
+        v = loser.apply_delta(clauses, inserts, txn=("app", 7))
+    finally:
+        loser._io.write = orig
+    assert loser._raced and v == loser.version == 1
+    carrying = [i for i in range(loser.version + 1)
+                if {"txn": {"appId": "app", "version": 7}}
+                in read_commit(loser._io, i)]
+    assert carrying == [1]
+    from collections import Counter
+    assert Counter((r["k"], r["v"]) for r in loser.read().collect()) == \
+        Counter((i, i * 2) for i in [*range(10), 100, 101] if i != 3)
+
+
 # ---------------------------------------------------------------------------
 # Pooled heavy bodies (runtime-budget lever; see conftest.pool_bodies):
 # independent bodies run concurrently under one module fixture, each
@@ -567,6 +604,7 @@ _POOLED = {
     "test_restore_readds_optimized_files_as_data_changes": _heavy_test_restore_readds_optimized_files_as_data_changes,
     "test_read_changes_nets_restore_readds_by_multiset": _heavy_test_read_changes_nets_restore_readds_by_multiset,
     "test_legacy_checkpoint_is_regenerated_in_place": _heavy_test_legacy_checkpoint_is_regenerated_in_place,
+    "test_same_txn_race_publishes_once": _heavy_test_same_txn_race_publishes_once,
 }
 
 
@@ -662,3 +700,8 @@ def test_legacy_checkpoint_is_regenerated_in_place(txlog_pool):
     if ex is not None:
         raise ex
 
+
+def test_same_txn_race_publishes_once(txlog_pool):
+    ex = txlog_pool["test_same_txn_race_publishes_once"]
+    if ex is not None:
+        raise ex

@@ -279,20 +279,20 @@ def _heavy_test_identity_concurrent_append_conflicts(spark, tmp_path):
                                                     "tag string"),
                        p, identity={"id": {"start": 1, "step": 1}})
     racer = TxTable(spark, p)
-    orig = t._try_publish
+    orig = t._io.write
 
-    def inject(version, actions):
+    def inject(name, data, replace=False):
         if not getattr(t, "_raced", False):
             t._raced = True
             racer.append(spark.createDataFrame([("r",)], "tag string"))
-        return orig(version, actions)
+        return orig(name, data, replace)
 
-    t._try_publish = inject
+    t._io.write = inject
     try:
         with pytest.raises(TxConflict, match="metadata"):
             t.append(spark.createDataFrame([("b",)], "tag string"))
     finally:
-        t._try_publish = orig
+        t._io.write = orig
     # the racer's allocation landed; ids stay unique after our retry
     t.append(spark.createDataFrame([("b",)], "tag string"))
     ids = [r["id"] for r in t.read().collect()]
@@ -343,6 +343,17 @@ def _heavy_test_checkpoint_interval_property(spark, tmp_path):
     assert {2, 4} <= set(t._checkpoint_versions())
     with pytest.raises(ValueError, match="checkpointInterval"):
         t.alter_properties({"checkpointInterval": 0})
+    # the DataSource writer publishes through the same loop: same cadence
+    p2 = str(tmp_path / "ckpt_v2")
+    t2 = TxTable.create(
+        spark, spark.createDataFrame([(1,)], "k long"), p2,
+        properties={"checkpointInterval": 2})
+    register(spark)
+    for i in range(2, 6):
+        (spark.createDataFrame([(i,)], "k long").write.format("txlog")
+         .option("path", p2).mode("append").save())
+    assert t2.version == 4
+    assert {2, 4} <= set(t2._checkpoint_versions())
 
 
 def _heavy_test_writer5_protocol_gate_and_v2_writer(spark, tmp_path):
@@ -460,6 +471,33 @@ def _heavy_test_in_commit_timestamps(spark, tmp_path):
     from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
         LocalLogIO, version_at)
     assert version_at(LocalLogIO(p), marks[1]) == 1
+    # a DataSource append gets the same clamp: with txproto's clock (in
+    # this thread; the pooled bodies share the module) an hour behind
+    # the parent commit's ts, the recorded ts still moves strictly up
+    import threading
+
+    from meteomatics_e2e_data_pipeline_spark.operators import txproto
+    from meteomatics_e2e_data_pipeline_spark.sources.txlog_batch import (
+        TxLogBatchWriter)
+    parent = t._commit_ts(t.version)
+    w = TxLogBatchWriter({"path": p}, t.schema(), overwrite=False)
+    msg = w.write(iter([(9,)]))
+    me, real = threading.get_ident(), txproto.time
+
+    class _Behind:
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+        def time(self):
+            return (parent - 3600.0 if threading.get_ident() == me
+                    else real.time())
+
+    txproto.time = _Behind()
+    try:
+        w.commit([msg])
+    finally:
+        txproto.time = real
+    assert t._commit_ts(t.version) > parent
 
 
 def _heavy_test_ict_enablement_not_retroactive(spark, tmp_path):
@@ -551,20 +589,20 @@ def _heavy_test_repartition_races_concurrent_append(spark, tmp_path):
     t = TxTable.create(spark, _days(spark, _ROWS), p,
                        stat_cols=["k"], generated={"y": "year(d)"})
     racer = TxTable(spark, p)
-    orig = t._try_publish
+    orig = t._io.write
 
-    def inject(version, actions):
+    def inject(name, data, replace=False):
         if not getattr(t, "_raced", False):
             t._raced = True
             racer.append(_days(spark, [(99, "1997-01-01", 990)]))
-        return orig(version, actions)
+        return orig(name, data, replace)
 
-    t._try_publish = inject
+    t._io.write = inject
     try:
         with pytest.raises(TxConflict, match="repartition"):
             t.repartition_table(["y"])
     finally:
-        t._try_publish = orig
+        t._io.write = orig
     # the racer's append survived; a clean retry lands the new layout
     assert {r["k"] for r in t.read().collect()} \
         == {1, 2, 3, 4, 5, 6, 99}

@@ -477,14 +477,16 @@ def _heavy_test_newline_truncated_checkpoint_rejected_by_count_trailer(
 def _heavy_test_scheme_path_fallback_publish_and_torn_commit_caveat(
         spark, tmp_path):
     """Directive: exercise the NON-local publish branch end-to-end. A
-    ``file://``-scheme'd table takes ``_try_publish``'s claim-then-write
+    ``file://``-scheme'd table takes ``txproto.publish``'s claim-then-write
     Hadoop path (and ``write_checkpoint``'s), which the local suite never
     reaches. Pins (a) appends/reads/checkpoints work through that branch,
     (b) a concurrent claim is detected (False, not a torn double-write),
-    and (c) the documented crash window (operators/txlog.py:297-311): a
+    and (c) the documented crash window (txproto's "Torn commits"): a
     writer dying between claim and write leaves a half-written commit
     that poisons later folds LOUDLY — recovery = delete the torn version
     file (the escape hatch; local paths are immune via tmp+hardlink)."""
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        publish)
     local = tmp_path / "t"
     p = "file://" + str(local)
     t = TxTable.create(spark, _kv(spark, 0, 20), p, stat_cols=["k"])
@@ -506,7 +508,7 @@ def _heavy_test_scheme_path_fallback_publish_and_torn_commit_caveat(
     nxt = t.version + 1
     claimed = local / "_txlog" / f"{nxt:020d}.json"
     claimed.write_text('{"add": {"path": "ghost.parquet", "numRecords"')
-    assert t._try_publish(nxt, [{"remove": {"path": "x"}}]) is False
+    assert publish(t._io, nxt, [{"remove": {"path": "x"}}]) is False
 
     # (c) the half-written claim is the documented crash window: folds
     # fail LOUDLY (never silently drop), and deleting the torn version

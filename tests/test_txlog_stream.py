@@ -363,10 +363,7 @@ def _ann_index(spark, tmp_path):
 
 @pytest.mark.parametrize("index", ["neardup", "ann"])
 def test_cdc_index_maintenance_exactly_once_across_crash(
-        spark, tmp_path, heavy_session_results, index):
-    # heavy_session_results ordering dependency: this test patches the
-    # CLASS attribute TxTable.apply_delta, so the session pool (whose
-    # bodies call apply_delta) must have fully drained first.
+        spark, tmp_path, index):
     """The one CDC maintenance loop
     (sources.txlog_stream.maintain_from_cdc), for both indexes it runs:
     state in ONE frame-discriminated txlog table, one atomic

@@ -74,6 +74,39 @@ def test_every_possible_byte_truncation_reads_as_torn():
     assert not is_torn(payload.splitlines())
 
 
+def test_hadoop_read_waits_for_an_in_flight_claim(spark, tmp_path):
+    """On the claim-then-write path an EMPTY commit is a live writer's
+    claim until ``CLAIM_SETTLE_S`` has passed: a ``file://`` commit that
+    is empty at the first read and written inside the bound reads back
+    its actions. (Still empty past the bound, it is torn — the e2e
+    tests below.)"""
+    import threading
+
+    from meteomatics_e2e_data_pipeline_spark.operators.txproto import (
+        HadoopLogIO, commit_name)
+    (tmp_path / "_txlog").mkdir()
+    f = tmp_path / "_txlog" / commit_name(3)
+    f.write_text("")
+    actions = [{"add": {"path": "a.parquet"}}]
+    io = HadoopLogIO(spark, f"file://{tmp_path}")
+    fs, opens = io._fs, []
+
+    class _LandAfterFirstOpen:
+        def __getattr__(self, name):
+            return getattr(fs, name)
+
+        def open(self, path):
+            opens.append(path)
+            if len(opens) == 1:  # the claim's payload lands 0.2 s later
+                threading.Timer(
+                    0.2, f.write_text, [commit_payload(actions)]).start()
+            return fs.open(path)
+
+    io._fs = _LandAfterFirstOpen()
+    assert read_commit(io, 3) == actions
+    assert len(opens) >= 2  # read empty first, re-read inside the bound
+
+
 # ---------------------------------------------------------------- e2e
 
 def _crash_publish(table: TxTable, version: int, partial: str) -> None:
